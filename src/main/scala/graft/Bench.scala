@@ -1,6 +1,42 @@
 package graft
+import scala.collection.mutable
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Seconds `body` takes, or None when it throws: the error is recorded
+    * in `failed` under `name` (first error per query), and a query that
+    * fails is never scored as a time. Memo builds forced inside `body`
+    * are charged to `name` (MemoLedger attribution). */
+  def timed(failed: mutable.Map[String, String], name: String)(body: => Any): Option[Double] = {
+    MemoLedger.currentQuery = name
+    val t0 = System.nanoTime()
+    try { body; Some((System.nanoTime() - t0) / 1e9) }
+    catch {
+      case NonFatal(e) =>
+        if (!failed.contains(name)) failed(name) = s"${e.getClass.getName}: ${e.getMessage}"
+        None
+    } finally MemoLedger.currentQuery = ""
+  }
+
+  /** Query-major timing: per query one unmeasured warm rep, then `reps`
+    * measured reps, reported as their median. A query that throws in any
+    * rep is left out of the medians and stays in `failed`. */
+  def measure(names: Seq[String], reps: Int, failed: mutable.Map[String, String])(
+      run1: String => Option[Double]): Seq[(String, Double)] =
+    names.flatMap { name =>
+      run1(name) // warm
+      val ts = (0 until reps).flatMap(_ => run1(name)).sorted
+      if (failed.contains(name) || ts.size < reps) None else Some(name -> ts(reps / 2))
+    }
+
+  /** The artifact's failure fields: every query that threw, with its
+    * error, and how many there were. */
+  def failedFields(failed: collection.Map[String, String]): String =
+    failed.toSeq.sortBy(_._1)
+      .map { case (n, e) => s"${Verify.jsonString(n)}:${Verify.jsonString(e)}" }
+      .mkString("\"failed\":{", ",", s"},\"n_failed\":${failed.size},")
+
   /** Host-calibration anchor (round 12, basket form since round 14):
     * bench totals are only interpretable against the host they ran on —
     * r10→r11 totals moved +47% on structurally identical plans. The
@@ -79,18 +115,15 @@ object Bench {
     val warmDir =
       if (new java.io.File(warmDir0).isDirectory) warmDir0
       else { System.err.println(s"[bench] warm dir $warmDir0 missing; warming on $sfDir"); sfDir }
-    def run1(name: String, dir: String): Double = {
+    // Every query that throws, in any rep at any scale: reported in the
+    // artifact and the exit status, never timed.
+    val failed = mutable.LinkedHashMap.empty[String, String]
+    def run1(name: String, dir: String): Option[Double] =
       // Attribution for the memo ledger (round 15, r14-verdict task 6):
       // memo builds forced+timed inside whichever query touches them
       // first — lands in that query's UNMEASURED warm rep, exactly where
       // the lazy build always landed; the timed loop is unchanged.
-      MemoLedger.currentQuery = name
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, dir).count()
-      catch { case _: Throwable => () }
-      MemoLedger.currentQuery = ""
-      (System.nanoTime() - t0) / 1e9
-    }
+      timed(failed, name)(SparkEntry.queries(name)(spark, dir).count())
     def readLoad1: Double =
       try java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
@@ -123,15 +156,16 @@ object Bench {
     // Anchor FIRST (fresh JVM, nothing else warmed) — see AnchorBasket.
     val anchorParts: Seq[(String, Double)] =
       if (only.isDefined) Seq.empty
-      else AnchorBasket.map { case (q, _) =>
-        run1(q, warmDir); run1(q, sfDir) // warm reps
-        q -> (0 until 3).map(_ => run1(q, sfDir)).sorted.apply(1)
+      else AnchorBasket.flatMap { case (q, _) =>
+        run1(q, warmDir) // warm rep at the small scale
+        measure(Seq(q), 3, failed)(run1(_, sfDir))
       }
+    // a failed component (reported in `failed`) leaves the basket smaller
     val anchorS: Option[Double] =
       if (anchorParts.isEmpty) None
       else {
-        val ratios = AnchorBasket.map { case (q, ref) =>
-          anchorParts.toMap.apply(q) / ref }.sorted
+        val ratios = anchorParts.map { case (q, t) =>
+          t / AnchorBasket.toMap.apply(q) }.sorted
         Some(ratios(ratios.size / 2)) // median of 5
       }
     val load1 = readLoad1
@@ -174,11 +208,7 @@ object Bench {
     val Reps = 3
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val results = named.map { case (name, _) =>
-      run1(name, sfDir) // warm
-      val ts = (0 until Reps).map(_ => run1(name, sfDir)).sorted
-      name -> ts(Reps / 2)
-    }
+    val results = measure(named.map(_._1), Reps, failed)(run1(_, sfDir))
     val qs = results.sortBy { case (n, t) => (t, n) }
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
@@ -214,11 +244,11 @@ object Bench {
           .mkString("{", ",", "}")
         f""""anchor_s":$a%.3f,"anchor_kind":"basket5-median-ratio","anchor_basket_version":"$AnchorBasketVersion","anchor_parts":$parts,"anchor_refs":$refs,"""
       }
-      .getOrElse("") + memoFields +
+      .getOrElse("") + memoFields + failedFields(failed) +
       f""""load_gate":"$loadGate","load1_start":$load1Start%.2f,"load_wait_s":$waitedS,"max_load_ratio":$maxLoadRatio%.2f,"""
     // Compact summary: totals + the normalization context, NO per-query
     // dict — short enough that no capture window clips it.
-    val summary = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},$anchorFields"cpus":$cpus,"load1":$load1%.2f,"sf":"$sfDir","method":"per-query warm rep + median-of-3; divide totals by anchor_s to compare across hosts; full per-query medians in bench_full.json"}"""
+    val summary = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${named.size},$anchorFields"cpus":$cpus,"load1":$load1%.2f,"sf":"$sfDir","method":"per-query warm rep + median-of-3; divide totals by anchor_s to compare across hosts; full per-query medians in bench_full.json"}"""
     // Emission order (round-12 verdict task 8): the driver's artifact
     // capture has clipped BOTH ends of long output before (BENCH_r10 lost
     // the cheap-query front; BENCH_r11 lost the trailing summary fields),
@@ -230,7 +260,7 @@ object Bench {
     // least-signal queries first). Times rounded to 1 ms (noise is
     // ±20-30%; sub-ms digits are line length, and key order is free to a
     // JSON parser).
-    val line = s"""{"queries":$qs,"n_queries":${results.size},$anchorFields"cpus":$cpus,"load1":${f"$load1%.2f"},"method":"per-query warm rep + median-of-3 consecutive (query-major); totals vary with host — normalize by anchor_s (median measured/ref ratio of the 5-query isolation basket, anchor_parts), see SURVEY bench notes","metric":"total","value":$total,"unit":"sec","sf":"$sfDir"}"""
+    val line = s"""{"queries":$qs,"n_queries":${named.size},$anchorFields"cpus":$cpus,"load1":${f"$load1%.2f"},"method":"per-query warm rep + median-of-3 consecutive (query-major); totals vary with host — normalize by anchor_s (median measured/ref ratio of the 5-query isolation basket, anchor_parts), see SURVEY bench notes","metric":"total","value":$total,"unit":"sec","sf":"$sfDir"}"""
     println(summary)
     println(line)
     // Full line also goes to a repo file so every median survives for
@@ -241,5 +271,10 @@ object Bench {
     catch { case e: Throwable => System.err.println(s"[bench] write $outPath failed: ${e.getMessage}") }
     println(summary)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} quer${if (failed.size == 1) "y" else "ies"} " +
+        s"failed: ${failed.keys.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

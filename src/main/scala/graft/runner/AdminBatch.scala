@@ -31,10 +31,9 @@ final case class DeleteOldLogs(store: AdminStoreApi, clock: Clock,
   }
 
   override def test(spark: SparkSession, logger: JobLogger): Seq[SimpleTestResult] = {
-    val c = java.sql.Timestamp.from(cutoff)
-    import org.apache.spark.sql.functions.col
-    val stale = store.batchLog.toDF().filter(col("ts") < c).count() +
-      store.jobLog.toDF().filter(col("ts") < c).count()
+    val c = cutoff
+    val stale = store.batchLogRows.count(_.ts.isBefore(c)) +
+      store.jobLogRows.count(_.ts.isBefore(c))
     if (stale == 0)
       Seq(SimpleTestResult.passing("No log entries older than cutoff"))
     else

@@ -252,17 +252,16 @@ final class BatchRunner(
         throw e
     }
 
-  private def runWithTimeout(job: JobSpec, jlog: JobLogger): JobStatus =
+  /** Every attempt runs under its own Spark job group, so its Spark work
+    * can be found (and cancelled) by group; a timeout cancels the group. */
+  private def runWithTimeout(job: JobSpec, jlog: JobLogger): JobStatus = {
+    val group = s"graft-job-${job.name}-${System.nanoTime()}"
+    def run(): JobStatus = BatchRunner.inJobGroup(spark, group, job.name)(job.run(spark, jlog))
     job.timeoutSeconds match {
-      case None => job.run(spark, jlog)
+      case None => run()
       case Some(t) =>
-        val group = s"graft-job-${job.name}-${System.nanoTime()}"
         implicit val ec: ExecutionContext = BatchRunner.jobEc
-        val fut = Future {
-          spark.sparkContext.setJobGroup(group, job.name, interruptOnCancel = true)
-          try job.run(spark, jlog)
-          finally spark.sparkContext.clearJobGroup()
-        }
+        val fut = Future(run())
         try Await.result(fut, t.seconds)
         catch {
           case _: concurrent.TimeoutException =>
@@ -270,6 +269,7 @@ final class BatchRunner(
             JobStatus.Failed(s"[${job.name}] timed out after $t seconds")
         }
     }
+  }
 
   /** Test-cadence gate (>= compare, batch_runner.py:423) + execution
     * (batch_runner.py:383-500). */
@@ -375,6 +375,20 @@ object BatchRunner {
       logToConsole: Boolean): BatchStatus =
     runAdmin(spark, AdminStoreApi.forUri(spark, config.adminPath), clock,
       config.daysLogsToKeep, logToConsole)
+
+  /** Run `body` on this thread under Spark job group `group`, then put
+    * back whatever group the thread had before (none, or the caller's). */
+  private[runner] def inJobGroup[T](spark: SparkSession, group: String,
+      description: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    // the local properties setJobGroup writes
+    val keys = Seq("spark.jobGroup.id", "spark.job.description",
+      "spark.job.interruptOnCancel")
+    val saved = keys.map(k => k -> sc.getLocalProperty(k))
+    sc.setJobGroup(group, description, interruptOnCancel = true)
+    try body
+    finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
 
   private lazy val jobEc: ExecutionContext = ExecutionContext.fromExecutorService(
     java.util.concurrent.Executors.newCachedThreadPool(r => {

@@ -76,8 +76,9 @@ object Formats {
     * file then covers a tight key range, so min/max row-group stats prune
     * scans filtered on that key (poor-man's clustering — the single most
     * effective layout lever parquet offers). Writes to a sibling tmp dir
-    * and swaps via the committed `_SUCCESS` rename discipline the
-    * AdminStore uses, so a reader never sees a half-compacted table. */
+    * and swaps it in with the set-aside-then-rename discipline of the
+    * AdminStore's swapWrite, so a reader never sees a half-compacted
+    * table. */
   def compactParquet(s: SparkSession, path: String,
       targetBytes: Long = 128L << 20, sortCol: Option[String] = None): Int = {
     val hPath = new org.apache.hadoop.fs.Path(path)

@@ -1,11 +1,17 @@
 package graft.store
 
 import java.time.Instant
+import java.util.UUID
 
-import graft.model._
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
 /** Flat admin-table rows (DTO layer). Mirrors admin_orm.py:34-93: five
   * relational tables — batches, jobs, job_test_results, batch_log, job_log —
@@ -32,19 +38,40 @@ final case class LogRow(
     id: String, parent_id: String, log_level: String, message: String,
     ts: Instant)
 
-/** Admin bookkeeping store over parquet tables under `root`.
+/** Admin bookkeeping store over parquet tables under `root`, run on the
+  * driver — where the reference runs its admin SQL (SQLAlchemy sessions on
+  * the orchestrating process). Admin rows are driver bookkeeping, so no
+  * read or write here launches a Spark job in the steady state.
   *
-  * Write discipline (SURVEY.md §7 hard parts): parquet has no MERGE, so
-  * upsert/retention are read → rewrite-to-temp → atomic-ish swap. Writing to
-  * a temp dir first means we never overwrite a table that is feeding the
-  * plan that computes its replacement. Reads are always fresh (no caching)
-  * so mid-batch re-reads observe every prior write — the read-after-write
+  * Reads: each instance keeps every table's rows in memory together with
+  * a stamp of the table directory — the sorted (file name, length, mtime)
+  * of its visible files. Every read takes one `listStatus` under the
+  * root's ioLock; when the listing differs from the stamp the rows are
+  * reloaded with one parquet read. That single check covers every way a
+  * table changes under an instance: another in-JVM instance or a later
+  * writer process, a crash restore (see `restoreIfCrashed`), a hand-over
+  * after `forceUnlock`, a generation written by another program. Mid-batch
+  * re-reads therefore observe every prior write — the read-after-write
   * discipline the reference gets from its RDBMS (batch_runner.py:338-340).
+  * The repository queries of [[AdminStoreApi]] run over these rows as
+  * plain Scala; `batches`/`jobs`/... expose them as local Datasets.
+  *
+  * Writes: an append writes one parquet file per call on the driver
+  * through Spark's own `ParquetFileFormat` writer (the schema, encoding,
+  * codec and footer a DataFrame write would produce; no `_SUCCESS`
+  * marker), under a hidden `_tmp.` name renamed to `part-…` once complete.
+  * Parquet has no MERGE, so upsert and retention filter the in-memory rows
+  * and rewrite the table through `swapWrite` (temp dir, old generation set
+  * aside, rename). After its own write the instance records the new stamp
+  * and rows itself, so it never reads back what it just wrote. Rows are
+  * passed once through the encoder's serializer and deserializer before
+  * they are kept, so memory holds exactly what a disk read returns (an
+  * Instant truncated to micros).
   *
   * Scale note: admin tables grow with runs × jobs, not with data volume —
-  * the rewrite-based upsert is O(table) but the table is tiny relative to
-  * the data plane. Log appends are buffered per job/batch (Loggers.scala),
-  * never row-at-a-time files.
+  * the rewrite-based upsert is O(table) on the driver, and the table is
+  * tiny relative to the data plane. Log appends are buffered per job/batch
+  * (Loggers.scala), never row-at-a-time files.
   *
   * Writer safety: the reference delegates concurrent-writer correctness to
   * its RDBMS (SERIALIZABLE sessions, tests/conftest.py:75) while
@@ -66,8 +93,8 @@ final case class LogRow(
   * reclaimed explicitly via `AdminStore.forceUnlock` (the operator step a
   * lost RDBMS session never needs — the documented cost of a file-based
   * store). A read-only process can transiently acquire the lock when a read
-  * triggers crash-restore (see `exists`), but releases it as soon as the
-  * restore completes.
+  * triggers crash-restore (see `restoreIfCrashed`), but releases it as soon
+  * as the restore completes.
   */
 final class AdminStore(val spark: SparkSession, val root: String)
     extends AdminStoreApi {
@@ -83,10 +110,10 @@ final class AdminStore(val spark: SparkSession, val root: String)
       .makeQualified(p).toString
   }
 
-  /** All store I/O serializes on this driver-side lock: concurrent parquet
-    * appends into one directory share the _temporary staging dir (one job's
-    * commit/abort can clobber another's files), and a reader racing a
-    * swapWrite could observe a half-renamed table. Shared JVM-wide per root
+  /** All store I/O and every instance's in-memory tables serialize on this
+    * driver-side lock: a reader racing a swapWrite could observe a
+    * half-renamed table, and a table's rows and stamp must change together.
+    * Shared JVM-wide per root
     * so every in-process instance over one directory serializes on the same
     * monitor. Admin I/O is tiny and infrequent, so the lock costs nothing;
     * batch parallelism (BatchRunner.runInParallel) is about the data-plane
@@ -197,146 +224,249 @@ final class AdminStore(val spark: SparkSession, val root: String)
   private def fs: FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Table existence WITH crash recovery: a crash between swapWrite's two
-    * renames leaves the live dir missing and the `.old` backup present —
-    * restore the backup here (the gate every read and write passes
-    * through) so no generation is ever lost. A `.old` found NEXT TO a
-    * live dir is the superseded generation (crash after the new table
-    * moved in) and is cleaned up by the next swapWrite instead. */
-  private def exists(table: String): Boolean = {
-    val dst = new Path(path(table))
-    if (!fs.exists(dst)) ioLock.synchronized {
-      val old = new Path(s"${path(table)}.old")
-      if (!fs.exists(dst) && fs.exists(old)) {
-        // the restore is a mutation: never interleave it with a live
-        // writer process's own swap. A READ-ONLY process that merely
-        // triggered crash recovery must not keep the writer lock it
-        // acquired for the restore — release it right after, or it would
-        // lock out the legitimate writer until this process exits.
-        val wasWriter = AdminStore.heldRoots.contains(rootKey)
-        ensureWriterLock()
-        try {
-          if (!fs.rename(old, dst))
-            throw new IllegalStateException(s"failed to restore $old -> $dst")
-          spark.catalog.refreshByPath(dst.toString)
-        } finally if (!wasWriter) releaseWriterLock()
-      }
-    }
-    fs.exists(dst)
-  }
-
-  private def readOr[T: org.apache.spark.sql.Encoder](table: String): Dataset[T] =
-    if (exists(table)) spark.read.parquet(path(table)).as[T]
-    else spark.emptyDataset[T]
-
-  def batches: Dataset[BatchRow] = readOr[BatchRow](BATCHES)
-  def jobs: Dataset[JobRow] = readOr[JobRow](JOBS)
-  def jobTestResults: Dataset[JobTestRow] = readOr[JobTestRow](JOB_TEST_RESULTS)
-  def batchLog: Dataset[LogRow] = readOr[LogRow](BATCH_LOG)
-  def jobLog: Dataset[LogRow] = readOr[LogRow](JOB_LOG)
-
-  def appendBatches(rows: Seq[BatchRow]): Unit = append(BATCHES, rows.toDS().toDF())
-  def appendJobs(rows: Seq[JobRow]): Unit = append(JOBS, rows.toDS().toDF())
-  def appendJobTests(rows: Seq[JobTestRow]): Unit =
-    append(JOB_TEST_RESULTS, rows.toDS().toDF())
-  def appendBatchLog(rows: Seq[LogRow]): Unit = append(BATCH_LOG, rows.toDS().toDF())
-  def appendJobLog(rows: Seq[LogRow]): Unit = append(JOB_LOG, rows.toDS().toDF())
-
-  private def append(table: String, df: DataFrame): Unit = ioLock.synchronized {
-    ensureWriterLock()
-    df.coalesce(1).write.mode(SaveMode.Append).parquet(path(table))
-    spark.catalog.refreshByPath(path(table))
-  }
-
-  def upsertBatches(rows: Seq[BatchRow]): Unit = ioLock.synchronized {
-    upsert(BATCHES, rows.map(_.id), batches.toDF(), rows.toDS().toDF())
-  }
-  def upsertJobs(rows: Seq[JobRow]): Unit = ioLock.synchronized {
-    upsert(JOBS, rows.map(_.id), jobs.toDF(), rows.toDS().toDF())
-  }
-
-  // NOTE: `current` must be constructed inside the ioLock (the file listing
-  // happens at DataFrame creation; a concurrent swap between listing and
-  // execution would leave it pointing at deleted files).
-  private def upsert(table: String, ids: Seq[String], current: DataFrame,
-      fresh: DataFrame): Unit = ioLock.synchronized {
-    if (!exists(table)) { append(table, fresh); return }
-    val kept = current.filter(!col("id").isin(ids: _*))
-    swapWrite(table, kept.unionByName(fresh))
-  }
-
-  /** Retention rewrite: keep rows with ts >= cutoff. */
-  def deleteOlderThan(table: String, cutoff: Instant): Long = ioLock.synchronized {
-    if (!exists(table)) return 0L
-    val df = spark.read.parquet(path(table))
-    val cutoffLit = lit(java.sql.Timestamp.from(cutoff))
-    val n = df.filter(col("ts") < cutoffLit).count()
-    if (n > 0) swapWrite(table, df.filter(col("ts") >= cutoffLit))
-    n
-  }
-
-  def deleteBatchesOlderThan(cutoff: Instant): Long = ioLock.synchronized {
-    if (!exists(BATCHES)) return 0L
-    val cutoffLit = lit(java.sql.Timestamp.from(cutoff))
-    val old = batches.toDF().filter(col("ts") < cutoffLit).select("id")
-    val n = old.count()
-    if (n == 0) return 0L
-    val oldIds = old.as[String].collect().toSeq
-    val oldJobIds =
-      if (exists(JOBS))
-        jobs.toDF().filter(col("batch_id").isin(oldIds: _*))
-          .select("id").as[String].collect().toSeq
-      else Nil
-    if (exists(JOB_TEST_RESULTS) && oldJobIds.nonEmpty)
-      swapWrite(JOB_TEST_RESULTS,
-        jobTestResults.toDF().filter(!col("job_id").isin(oldJobIds: _*)))
-    if (exists(JOBS))
-      swapWrite(JOBS, jobs.toDF().filter(!col("batch_id").isin(oldIds: _*)))
-    swapWrite(BATCHES, batches.toDF().filter(col("ts") >= cutoffLit))
-    n
-  }
-
-  /** Rewrite `table` from a plan that reads the table itself: write to a
-    * temp dir, then swap directories. Never overwrite-in-place mid-read.
-    * Durability: the old generation is renamed ASIDE (not deleted) before
-    * the new one moves in, so a crash at any point leaves either the old or
-    * the new table on disk — the closest a directory store gets to the
-    * reference's transactional RDBMS upsert. The `.old` copy is removed
-    * only after the swap succeeds; a stale one from a prior crash is
-    * cleaned up on the next write. */
-  private def swapWrite(table: String, df: DataFrame): Unit = {
-    ensureWriterLock()
-    // GC tmp dirs orphaned by a previous crash (between write and rename)
-    // or a failed swap (tmp is intentionally kept then). They are uniquely
-    // named, so without this sweep crash loops would accumulate dead data
-    // forever — same discipline as the stale .old delete below.
-    Option(fs.globStatus(new Path(s"${path(table)}.tmp*")))
-      .getOrElse(Array.empty).foreach(st => fs.delete(st.getPath, true))
-    val tmp = new Path(s"${path(table)}.tmp${System.nanoTime()}")
-    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+  /** Crash recovery: a crash between swapWrite's two renames leaves the
+    * live dir missing and the `.old` backup present — restore the backup
+    * (every read and write lists the table first, and a missing dir sends
+    * it here) so no generation is ever lost. A `.old` found NEXT TO a live
+    * dir is the superseded generation (crash after the new table moved in)
+    * and is cleaned up by the next swapWrite instead. Returns whether a
+    * backup was restored. */
+  private def restoreIfCrashed(table: String): Boolean = ioLock.synchronized {
     val dst = new Path(path(table))
     val old = new Path(s"${path(table)}.old")
-    fs.delete(old, true) // stale backup from a previous crash, if any
-    val hadOld = fs.exists(dst) && {
-      if (!fs.rename(dst, old))
-        throw new IllegalStateException(s"failed to set aside $dst -> $old")
+    !fs.exists(dst) && fs.exists(old) && {
+      // the restore is a mutation: never interleave it with a live
+      // writer process's own swap. A READ-ONLY process that merely
+      // triggered crash recovery must not keep the writer lock it
+      // acquired for the restore — release it right after, or it would
+      // lock out the legitimate writer until this process exits.
+      val wasWriter = AdminStore.heldRoots.contains(rootKey)
+      ensureWriterLock()
+      try {
+        if (!fs.rename(old, dst))
+          throw new IllegalStateException(s"failed to restore $old -> $dst")
+      } finally if (!wasWriter) releaseWriterLock()
       true
     }
-    if (!fs.rename(tmp, dst)) {
-      if (hadOld) fs.rename(old, dst) // restore; leaves tmp for inspection
-      throw new IllegalStateException(s"failed to swap $tmp -> $dst")
+  }
+
+  /** One admin table held on the driver: its rows plus the stamp of the
+    * directory listing they were read from (or written as). Every access
+    * runs under the root's ioLock. */
+  private final class Table[T <: Product: TypeTag](name: String,
+      ts: T => Instant) {
+    private val encoder: ExpressionEncoder[T] = ExpressionEncoder[T]().resolveAndBind()
+    private val toRow = encoder.createSerializer()
+    private val fromRow = encoder.createDeserializer()
+    private val dir = new Path(path(name))
+    private var stamp: Option[AdminStore.Stamp] = None
+    private var cached: Vector[T] = Vector.empty
+    private var debris: Seq[Path] = Nil
+
+    /** The rows a parquet read would return: the same values truncated the
+      * same way (an Instant to micros), so memory never disagrees with a
+      * fresh store's disk read. */
+    private def asStored(rows: Seq[T]): Vector[T] =
+      rows.iterator.map(r => fromRow(toRow(r))).toVector
+
+    /** One listStatus of the table directory: its visible data files, as a
+      * stamp. Hidden `_tmp.` files are remembered as debris of a crashed
+      * append for the next append to remove. */
+    private def listing(): AdminStore.Stamp = {
+      val all =
+        try fs.listStatus(dir).toSeq
+        catch {
+          case _: java.io.FileNotFoundException =>
+            if (restoreIfCrashed(name)) return listing() else Nil
+        }
+      debris = all.map(_.getPath).filter(_.getName.startsWith(AdminStore.TmpPrefix))
+      AdminStore.stampOf(all)
     }
-    fs.delete(old, true)
-    // drop Spark's cached file listing for the old generation of the table
-    spark.catalog.refreshByPath(dst.toString)
+
+    /** Current rows: from memory when the listing still matches the
+      * stamp, else reloaded with one parquet read (a write by another
+      * instance or process, a restore, a generation written out of band). */
+    def rows: Vector[T] = {
+      val now = listing()
+      if (!stamp.contains(now)) {
+        cached =
+          if (now.isEmpty) Vector.empty
+          else spark.read.schema(encoder.schema).parquet(dir.toString)
+            .as[T](encoder).collect().toVector
+        stamp = Some(now)
+      }
+      cached
+    }
+
+    def append(rows: Seq[T]): Unit = {
+      ensureWriterLock()
+      val current = this.rows
+      debris.foreach(fs.delete(_, false))
+      val file = writeFile(dir, rows)
+      stamp = stamp.map(s => (s :+ AdminStore.entry(file)).sortBy(_._1))
+      cached = current ++ asStored(rows)
+    }
+
+    /** Rewrite the table as exactly `rows`: write to a temp dir, then swap
+      * directories. Durability: the old generation is renamed ASIDE (not
+      * deleted) before the new one moves in, so a crash at any point leaves
+      * either the old or the new table on disk — the closest a directory
+      * store gets to the reference's transactional RDBMS upsert. The
+      * `.old` copy is removed only after the swap succeeds; a stale one
+      * from a prior crash is cleaned up on the next write. */
+    def swapWrite(rows: Seq[T]): Unit = {
+      ensureWriterLock()
+      // GC tmp dirs orphaned by a previous crash (between write and rename)
+      // or a failed swap (tmp is intentionally kept then). They are uniquely
+      // named, so without this sweep crash loops would accumulate dead data
+      // forever — same discipline as the stale .old delete below.
+      Option(fs.globStatus(new Path(s"$dir.tmp*")))
+        .getOrElse(Array.empty).foreach(st => fs.delete(st.getPath, true))
+      val tmp = new Path(s"$dir.tmp${System.nanoTime()}")
+      writeFile(tmp, rows)
+      val old = new Path(s"$dir.old")
+      fs.delete(old, true) // stale backup from a previous crash, if any
+      val hadOld = fs.exists(dir) && {
+        if (!fs.rename(dir, old))
+          throw new IllegalStateException(s"failed to set aside $dir -> $old")
+        true
+      }
+      if (!fs.rename(tmp, dir)) {
+        if (hadOld) fs.rename(old, dir) // restore; leaves tmp for inspection
+        throw new IllegalStateException(s"failed to swap $tmp -> $dir")
+      }
+      fs.delete(old, true)
+      stamp = Some(AdminStore.stampOf(fs.listStatus(dir).toSeq))
+      cached = asStored(rows)
+    }
+
+    /** Drop the rows `drop` selects; returns how many. Rewrites the table
+      * only when something goes. */
+    def deleteWhere(drop: T => Boolean): Long = {
+      val (gone, kept) = rows.partition(drop)
+      if (gone.nonEmpty) swapWrite(kept)
+      gone.size.toLong
+    }
+
+    def deleteBefore(cutoff: Instant): Long = deleteWhere(r => ts(r).isBefore(cutoff))
+
+    /** Write `rows` as one parquet file in `into`, on the driver, through
+      * Spark's own parquet writer (schema, encoding, codec and footer
+      * metadata as a DataFrame write would produce). The file is written
+      * under a hidden name and renamed into view once complete. */
+    private def writeFile(into: Path, rows: Seq[T]): FileStatus = {
+      val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+      spark.conf.getAll.foreach { case (k, v) => if (v != null) conf.set(k, v) }
+      val job = Job.getInstance(conf)
+      val factory = new ParquetFileFormat()
+        .prepareWrite(spark, job, Map.empty, encoder.schema)
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+        new TaskAttemptID(new TaskID(new JobID("graft-admin", 0), TaskType.MAP, 0), 0))
+      val file = s"part-00000-${UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
+      val tmp = new Path(into, AdminStore.TmpPrefix + file)
+      val out = factory.newInstance(tmp.toString, encoder.schema, ctx)
+      try rows.foreach(r => out.write(toRow(r)))
+      catch {
+        case e: Throwable =>
+          try out.close() catch { case _: Throwable => () }
+          fs.delete(tmp, false)
+          throw e
+      }
+      out.close()
+      val dst = new Path(into, file)
+      if (!fs.rename(tmp, dst))
+        throw new IllegalStateException(s"failed to rename $tmp -> $dst")
+      fs.getFileStatus(dst)
+    }
+  }
+
+  private val batchTable = new Table[BatchRow](BATCHES, _.ts)
+  private val jobTable = new Table[JobRow](JOBS, _.ts)
+  private val testTable = new Table[JobTestRow](JOB_TEST_RESULTS, _.ts)
+  private val batchLogTable = new Table[LogRow](BATCH_LOG, _.ts)
+  private val jobLogTable = new Table[LogRow](JOB_LOG, _.ts)
+
+  private def table(name: String): Table[_ <: Product] = name match {
+    case BATCHES          => batchTable
+    case JOBS             => jobTable
+    case JOB_TEST_RESULTS => testTable
+    case BATCH_LOG        => batchLogTable
+    case JOB_LOG          => jobLogTable
+    case other => throw new IllegalArgumentException(s"no admin table '$other'")
+  }
+
+  override def batchRows: Seq[BatchRow] = sync(batchTable.rows)
+  override def jobRows: Seq[JobRow] = sync(jobTable.rows)
+  override def testRows: Seq[JobTestRow] = sync(testTable.rows)
+  override def batchLogRows: Seq[LogRow] = sync(batchLogTable.rows)
+  override def jobLogRows: Seq[LogRow] = sync(jobLogTable.rows)
+
+  def batches: Dataset[BatchRow] = spark.createDataset(batchRows)
+  def jobs: Dataset[JobRow] = spark.createDataset(jobRows)
+  def jobTestResults: Dataset[JobTestRow] = spark.createDataset(testRows)
+  def batchLog: Dataset[LogRow] = spark.createDataset(batchLogRows)
+  def jobLog: Dataset[LogRow] = spark.createDataset(jobLogRows)
+
+  def appendBatches(rows: Seq[BatchRow]): Unit = sync(batchTable.append(rows))
+  def appendJobs(rows: Seq[JobRow]): Unit = sync(jobTable.append(rows))
+  def appendJobTests(rows: Seq[JobTestRow]): Unit = sync(testTable.append(rows))
+  def appendBatchLog(rows: Seq[LogRow]): Unit = sync(batchLogTable.append(rows))
+  def appendJobLog(rows: Seq[LogRow]): Unit = sync(jobLogTable.append(rows))
+
+  def upsertBatches(rows: Seq[BatchRow]): Unit = upsert(batchTable, rows)(_.id)
+  def upsertJobs(rows: Seq[JobRow]): Unit = upsert(jobTable, rows)(_.id)
+
+  /** Merge by id over the in-memory rows: an empty table takes a plain
+    * append, anything else is rewritten with the replaced rows dropped. */
+  private def upsert[T <: Product](t: Table[T], fresh: Seq[T])(id: T => String): Unit =
+    sync {
+      val current = t.rows
+      if (current.isEmpty) t.append(fresh)
+      else {
+        val ids = fresh.map(id).toSet
+        t.swapWrite(current.filterNot(r => ids(id(r))) ++ fresh)
+      }
+    }
+
+  /** Retention rewrite: keep rows with ts >= cutoff. */
+  def deleteOlderThan(table: String, cutoff: Instant): Long =
+    sync(this.table(table).deleteBefore(cutoff))
+
+  def deleteBatchesOlderThan(cutoff: Instant): Long = sync {
+    val oldIds = batchTable.rows.filter(_.ts.isBefore(cutoff)).map(_.id).toSet
+    if (oldIds.nonEmpty) {
+      val oldJobIds = jobTable.rows.filter(j => oldIds(j.batch_id)).map(_.id).toSet
+      testTable.deleteWhere(r => oldJobIds(r.job_id))
+      jobTable.deleteWhere(j => oldIds(j.batch_id))
+      batchTable.deleteWhere(b => oldIds(b.id))
+    }
+    oldIds.size.toLong
   }
 
   // Read queries (latestBatch/previousBatch/hydrate/lastSuccessfulTs/
-  // latestTestResults/earliestBatchLogTs/batchDelta) are inherited from
-  // AdminStoreApi — shared with the JDBC backend.
+  // latestTestResults/earliestBatchLogTs/batchDelta/slowJobs) are inherited
+  // from AdminStoreApi — shared with the JDBC backend, and run here over
+  // the in-memory rows above.
 }
 
 object AdminStore {
+  /** A table directory's visible files as (name, length, mtime), by name. */
+  private type Stamp = Vector[(String, Long, Long)]
+
+  /** Name prefix of a file still being written; hidden from every reader. */
+  private val TmpPrefix = "_tmp."
+
+  private def entry(st: FileStatus): (String, Long, Long) =
+    (st.getPath.getName, st.getLen, st.getModificationTime)
+
+  /** The files a parquet read of the directory would see: hidden names
+    * (`_`/`.` prefixes, as Spark's file index skips them) left out. */
+  private def stampOf(listing: Seq[FileStatus]): Stamp =
+    listing.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.map(entry).sortBy(_._1).toVector
+
   /** Writer identity of this JVM: every in-process store shares it, so the
     * `_LOCK` file excludes other PROCESSES only (in-process writers already
     * serialize on the per-root ioLock). */

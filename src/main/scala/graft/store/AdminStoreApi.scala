@@ -1,10 +1,10 @@
 package graft.store
 
 import java.time.Instant
+import java.util.Locale
 
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Backend-neutral admin-store surface. The reference keeps its admin
   * tables behind a SQLAlchemy engine URI (batch_runner.py:57) so one
@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * trait is that seam for the Spark runner — the parquet directory store
   * ([[AdminStore]]) and the RDBMS store ([[JdbcAdminStore]]) implement the
   * same mutation surface, and every repository READ query (the reference's
-  * repository layer, sqlalchemy_*_repository.py) is written once here
-  * against the `batches`/`jobs`/... Datasets, so the two backends cannot
-  * drift semantically.
+  * repository layer, sqlalchemy_*_repository.py) is written once here as
+  * plain Scala over the driver-side rows (`batchRows`, `jobRows`, ...), so
+  * the two backends cannot drift semantically.
   *
   * Concurrency: every public operation passes through [[sync]] — the
   * backend supplies the mutual-exclusion regime (the parquet store's
@@ -23,7 +23,6 @@ import org.apache.spark.sql.functions._
   * RDBMS exactly as the reference does). */
 trait AdminStoreApi {
   val spark: SparkSession
-  import spark.implicits._
 
   final val BATCHES = "batches"
   final val JOBS = "jobs"
@@ -66,43 +65,56 @@ trait AdminStoreApi {
   /** Serialize one store operation (reentrant). */
   protected def sync[T](f: => T): T
 
-  // ---- Read queries (the reference's repository surface, §2.B shapes),
-  //      shared verbatim by every backend ----
+  // ---- Rows on the driver: every repository read below runs over these.
+  //      A backend that already holds its rows on the driver overrides
+  //      them; the default collects the Dataset. ----
 
-  private def byNameDesc(df: DataFrame, nameCol: String, name: String): DataFrame =
-    // case-insensitive match = ilike without wildcards
-    // (sqlalchemy_job_repository.py:35)
-    df.filter(lower(col(nameCol)) === name.toLowerCase)
-      .orderBy(col("ts").desc, col("id").desc)
+  def batchRows: Seq[BatchRow] = batches.collect().toSeq
+  def jobRows: Seq[JobRow] = jobs.collect().toSeq
+  def testRows: Seq[JobTestRow] = jobTestResults.collect().toSeq
+  def batchLogRows: Seq[LogRow] = batchLog.collect().toSeq
+  def jobLogRows: Seq[LogRow] = jobLog.collect().toSeq
+
+  // ---- Read queries (the reference's repository surface, §2.B shapes),
+  //      shared verbatim by every backend, as plain Scala over the rows ----
+
+  /** Case-insensitive match = ilike without wildcards
+    * (sqlalchemy_job_repository.py:35). */
+  private def sameName(a: String, b: String): Boolean =
+    a.toLowerCase(Locale.ROOT) == b.toLowerCase(Locale.ROOT)
+
+  /** ORDER BY ts DESC, id DESC. */
+  private def newestFirst[R](rows: Seq[R])(ts: R => Instant, id: R => String): Seq[R] =
+    rows.sortBy(r => (ts(r), id(r)))(AdminStoreApi.NewestFirst)
+
+  private def batchesNamed(name: String): Seq[BatchRow] =
+    newestFirst(batchRows.filter(b => sameName(b.name, name)))(_.ts, _.id)
 
   /** Latest run of a batch (get_latest, sqlalchemy_batch_repository.py:47-56). */
   def latestBatch(name: String): Option[BatchStatus] = sync {
-    byNameDesc(batches.toDF(), "name", name).as[BatchRow]
-      .take(1).headOption.map(hydrate)
+    batchesNamed(name).headOption.map(hydrate)
   }
 
   /** Stored state of one batch run, by id (fresh read). */
   def batchById(id: String): Option[BatchStatus] = sync {
-    batches.filter(_.id == id).collect().headOption.map(hydrate)
+    batchRows.find(_.id == id).map(hydrate)
   }
 
   /** Previous run — OFFSET 1 because the current in-progress row is already
     * inserted (sqlalchemy_batch_repository.py:76-86). */
   def previousBatch(name: String): Option[BatchStatus] = sync {
-    byNameDesc(batches.toDF(), "name", name).as[BatchRow]
-      .take(2).drop(1).headOption.map(hydrate)
+    batchesNamed(name).drop(1).headOption.map(hydrate)
   }
 
   /** Reconstruct the nested BatchStatus from the flat tables (the join +
     * collect form of the ORM relationships, admin_orm.py:105-129). */
   def hydrate(b: BatchRow): BatchStatus = {
-    val jobRows = jobs.filter(_.batch_id == b.id).collect().toSeq
-    val jobIds = jobRows.map(_.id)
+    val jobsOfBatch = jobRows.filter(_.batch_id == b.id)
+    val jobIds = jobsOfBatch.map(_.id).toSet
     val tests =
       if (jobIds.isEmpty) Map.empty[String, Seq[JobTestRow]]
-      else jobTestResults.toDF().filter(col("job_id").isin(jobIds: _*))
-        .as[JobTestRow].collect().toSeq.groupBy(_.job_id)
-    val results = jobRows.sortBy(_.ts).map { j =>
+      else testRows.filter(t => jobIds(t.job_id)).groupBy(_.job_id)
+    val results = jobsOfBatch.sortBy(_.ts).map { j =>
       val status: JobStatus =
         if (j.running) JobStatus.InProgress
         else if (j.skipped) JobStatus.Skipped(j.skipped_reason.getOrElse(""))
@@ -119,35 +131,31 @@ trait AdminStoreApi {
       b.execution_error_message, b.running, b.ts)
   }
 
+  /** A finished run that raised no error; a NULL error flag does not count. */
+  private def succeeded(j: JobRow): Boolean =
+    !j.running && !j.skipped && j.execution_error_occurred.contains(false)
+
   /** Last successful run ts of a job: flag-filtered max
     * (get_last_successful_ts, sqlalchemy_job_repository.py:67-82). */
   def lastSuccessfulTs(jobName: String): Option[Instant] = sync {
-    maxTs(jobs.toDF()
-      .filter(lower(col("job_name")) === jobName.toLowerCase)
-      .filter(!col("running") && !col("skipped") &&
-        col("execution_error_occurred") === false), max(col("ts")))
+    jobRows.filter(j => sameName(j.job_name, jobName) && succeeded(j))
+      .map(_.ts).maxOption
   }
 
   /** Test results of the most recent non-skipped run of a job
     * (latest_test_results, batch_runner.py:411-443). */
   def latestTestResults(jobName: String): Seq[JobTestRow] = sync {
-    val latestJob = jobs.toDF()
-      .filter(lower(col("job_name")) === jobName.toLowerCase)
-      .filter(!col("running") && !col("skipped"))
-      .orderBy(col("ts").desc, col("id").desc)
-      .as[JobRow].take(1).headOption
-    latestJob.map(j => jobTestResults.filter(_.job_id == j.id).collect().toSeq)
+    val runs = jobRows.filter(j =>
+      sameName(j.job_name, jobName) && !j.running && !j.skipped)
+    newestFirst(runs)(_.ts, _.id).headOption
+      .map(j => testRows.filter(_.job_id == j.id))
       .getOrElse(Nil)
   }
 
   /** Earliest log ts (get_earliest, sqlalchemy_batch_log_repository.py:42-51). */
   def earliestBatchLogTs: Option[Instant] = sync {
-    maxTs(batchLog.toDF(), min(col("ts")))
+    batchLogRows.map(_.ts).minOption
   }
-
-  private def maxTs(df: DataFrame, aggCol: org.apache.spark.sql.Column): Option[Instant] =
-    df.agg(aggCol).collect().headOption
-      .flatMap(r => Option(r.getTimestamp(0)).map(_.toInstant))
 
   /** Regression delta between the latest two runs
     * (get_latest_batch_delta, sqlalchemy_batch_repository.py:58-74). */
@@ -160,18 +168,13 @@ trait AdminStoreApi {
     * reference records execution_millis on every run precisely so an
     * operator can ask this; this query closes that loop). Jobs with no
     * history or no latest millis are skipped; the prior median is the
-    * lower median (exact, no interpolation). Runs per job are
-    * driver-scale (admin bookkeeping), so the collect mirrors the other
-    * repository reads. Returns (job_name, latest_millis, baseline_median,
-    * factor_x100) sorted by worst regression first. */
+    * lower median (exact, no interpolation). Returns (job_name,
+    * latest_millis, baseline_median, factor_x100) sorted by worst
+    * regression first. */
   def slowJobs(factor: Double = 2.0): Seq[(String, Long, Long, Long)] = sync {
-    val done = jobs.toDF()
-      .filter(!col("running") && !col("skipped") &&
-        col("execution_error_occurred") === false &&
-        col("execution_millis").isNotNull)
-      .orderBy(col("ts").desc, col("id").desc)
-      .as[JobRow].collect()
-    done.groupBy(_.job_name.toLowerCase).toSeq.flatMap { case (_, runs) =>
+    val done = newestFirst(jobRows.filter(j =>
+      succeeded(j) && j.execution_millis.isDefined))(_.ts, _.id)
+    done.groupBy(_.job_name.toLowerCase(Locale.ROOT)).toSeq.flatMap { case (_, runs) =>
       val latest = runs.head
       val prior = runs.tail.flatMap(_.execution_millis)
       if (prior.isEmpty || latest.execution_millis.isEmpty) None
@@ -188,6 +191,10 @@ trait AdminStoreApi {
 }
 
 object AdminStoreApi {
+  /** (ts, id) descending: the repository reads' ORDER BY ts DESC, id DESC. */
+  private val NewestFirst: Ordering[(Instant, String)] =
+    Ordering[(Instant, String)].reverse
+
   /** Build the store a config's admin URI names — the reference's
     * create-engine-from-URI dispatch (batch_runner.py:57): a `jdbc:` URI
     * is the RDBMS store, anything else a parquet directory root. */

@@ -14,14 +14,17 @@ import org.apache.spark.sql.functions._
   * RDBMS's transactional upsert instead of parquet's swap-rename
   * discipline.
   *
-  * Division of labor: READS surface as Datasets through `spark.read.jdbc`
-  * (so the shared AdminStoreApi repository queries run unchanged on
-  * either backend — the admin tables are tiny, one JDBC partition);
-  * MUTATIONS are driver-side SQL in one transaction each (autoCommit off,
-  * commit per operation) — exactly where the reference runs them
-  * (SQLAlchemy sessions on the orchestrating process; admin writes are
-  * driver bookkeeping rows, never a distributed job). Concurrent-writer
-  * correctness is the RDBMS's job, as in the reference — no `_LOCK` file.
+  * Division of labor: MUTATIONS are driver-side SQL in one transaction
+  * each (autoCommit off, commit per operation) — exactly where the
+  * reference runs them (SQLAlchemy sessions on the orchestrating process;
+  * admin writes are driver bookkeeping rows, never a distributed job).
+  * READS surface as Datasets through Spark's JDBC source (the admin tables
+  * are tiny, one JDBC partition), and the shared AdminStoreApi repository
+  * queries run over them through the inherited `batchRows`/`jobRows`/...
+  * members, which collect those Datasets to the driver — the same
+  * plain-Scala queries the parquet store runs over its in-memory tables,
+  * so the two backends answer identically. Concurrent-writer correctness
+  * is the RDBMS's job, as in the reference — no `_LOCK` file.
   *
   * Timestamps are stored as BIGINT EPOCH MICROS, not SQL TIMESTAMP:
   * JDBC timestamp binding renders through the JVM default calendar and

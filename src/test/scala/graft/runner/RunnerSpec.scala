@@ -229,6 +229,30 @@ class RunnerSpec extends AnyFunSuite {
     }
   }
 
+  test("every job runs under its own Spark job group; the caller's group is restored") {
+    val (_, _, runner) = fixture()
+    val sc = spark.sparkContext
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    def probe(name: String, timeout: Option[Long]) = SimpleJob(name, timeoutSeconds = timeout,
+      runFn = (s, _) => {
+        seen += s.sparkContext.getLocalProperty("spark.jobGroup.id")
+        JobStatus.Successful
+      })
+    sc.setJobGroup("caller-group", "the caller's own group")
+    try {
+      runner.run(Batch("groupbatch", Seq(probe("untimed_job", None),
+        probe("timed_job", Some(60L)))))
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "caller-group")
+    } finally sc.clearJobGroup()
+    assert(seen.size == 2)
+    assert(seen(0).startsWith("graft-job-untimed_job-"), seen(0))
+    assert(seen(1).startsWith("graft-job-timed_job-"), seen(1))
+    // without a caller group the thread is left without one
+    runner.run(Batch("groupbatch", Seq(probe("untimed_job", None))))
+    assert(sc.getLocalProperty("spark.jobGroup.id") == null)
+    assert(seen(2).startsWith("graft-job-untimed_job-"))
+  }
+
   test("parallel batches share one session and all get recorded (batch_runner.py:36-46)") {
     val (clock, store, _) = fixture()
     val batches = (1 to 3).map(i => Batch(s"par_$i", Seq(okJob(s"job_$i"))))

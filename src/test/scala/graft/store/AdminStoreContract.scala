@@ -2,7 +2,9 @@ package graft.store
 
 import java.time.Instant
 
+import graft.TestSpark
 import graft.model._
+import graft.runner.{DeleteOldLogs, JobSinkLogger}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Backend-neutral admin-store contract — the repository semantics the
@@ -173,6 +175,27 @@ abstract class AdminStoreContract extends AnyFunSuite {
     assert(flagged.map(_._1) == Seq("regressed"))
     val (_, cur, base, x100) = flagged.head
     assert(cur == 350 && base == 100 && x100 == 350)
+    st.close()
+  }
+
+  test("DeleteOldLogs' self-test counts stale log rows over the driver rows") {
+    val st = newStore()
+    val clock = Clock.Fixed(t("2024-01-10T15:00:00Z")) // cutoff 2024-01-07T00:00
+    def log(id: String, ts: Instant) =
+      LogRow(id.padTo(32, '0'), "b".padTo(32, '0'), "INFO", "m", ts)
+    st.appendBatchLog(Seq(log("l1", t("2024-01-06T23:59:59Z")),
+      log("l2", t("2024-01-07T00:00:00Z"))))
+    st.appendJobLog(Seq(log("l3", t("2024-01-01T00:00:00Z")),
+      log("l4", t("2024-01-09T00:00:00Z"))))
+    val job = DeleteOldLogs(st, clock)
+    val logger = new JobSinkLogger("j".padTo(32, '0'), clock, console = false)
+    val before = job.test(TestSpark.spark, logger)
+    assert(before.map(_.failureMessage.exists(_.startsWith("2 entries older than"))) ==
+      Seq(true))
+    assert(job.run(TestSpark.spark, logger) == JobStatus.Successful)
+    assert(job.test(TestSpark.spark, logger).forall(_.passed))
+    assert(st.batchLogRows.map(_.id.take(2)) == Seq("l2"))
+    assert(st.jobLogRows.map(_.id.take(2)) == Seq("l4"))
     st.close()
   }
 }

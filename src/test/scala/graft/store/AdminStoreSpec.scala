@@ -1,8 +1,13 @@
 package graft.store
 
 import java.time.Instant
+import java.time.temporal.ChronoUnit
 
 import graft.TestSpark
+import graft.model._
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Parquet-directory backend: the shared AdminStoreContract plus the
   * durability mechanics only this backend has — swap-rename crash
@@ -132,5 +137,110 @@ class AdminStoreSpec extends AdminStoreContract {
     // the transient hold taken for the restore is gone: the legitimate
     // writer process is not locked out by a mere reader
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "_LOCK")))
+  }
+
+  /** Spark jobs launched on this thread while `body` runs. A sentinel job
+    * closes the probe group: listener events arrive in order, so once the
+    * sentinel is visible every job `body` launched is too. */
+  private def sparkJobsIn(body: => Unit): Int = {
+    val sc = TestSpark.spark.sparkContext
+    val group = s"admin-store-probe-${System.nanoTime()}"
+    sc.setJobGroup(group, "the admin store must launch no Spark job")
+    try { body; sc.parallelize(Seq(1), 1).count() }
+    finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    var ids = sc.statusTracker.getJobIdsForGroup(group)
+    while (ids.isEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(20)
+      ids = sc.statusTracker.getJobIdsForGroup(group)
+    }
+    assert(ids.nonEmpty, "the sentinel job never reached the status tracker")
+    ids.length - 1
+  }
+
+  test("a warm store appends, upserts, reads status and applies retention without Spark jobs") {
+    val st = newParquetStore()
+    val b = batchRow("b1", "nightly", t("2024-01-02T00:00:00Z"), running = true)
+    def job(id: String, ts: Instant) = JobRow(id.padTo(32, '0'), b.id, "etl_job",
+      Some(4L), Some(false), None, running = false, skipped = false, None, ts)
+    def log(id: String, ts: Instant) =
+      LogRow(id.padTo(32, '0'), b.id, "INFO", "m", ts)
+    st.appendBatches(Seq(b))
+    st.appendJobs(Seq(job("j0", t("2024-01-01T00:00:00Z"))))
+    st.appendJobTests(Nil)
+    st.appendBatchLog(Seq(log("l0", t("2023-01-01T00:00:00Z"))))
+    st.appendJobLog(Nil)
+    val jobs = sparkJobsIn {
+      st.appendJobs(Seq(job("j1", t("2024-01-02T00:00:00Z"))))
+      st.upsertJobs(Seq(job("j1", t("2024-01-02T00:01:00Z"))))
+      st.appendJobTests(Seq(JobTestRow("t1".padTo(32, '0'), "j1".padTo(32, '0'),
+        "rows", test_passed = true, None, t("2024-01-02T00:01:00Z"))))
+      st.appendBatchLog(Seq(log("l1", t("2024-01-02T00:00:00Z"))))
+      st.appendJobLog(Seq(log("l2", t("2024-01-02T00:00:00Z"))))
+      st.upsertBatches(Seq(b.copy(running = false, execution_millis = Some(60000L),
+        execution_error_occurred = Some(false), ts = t("2024-01-02T00:01:00Z"))))
+      assert(st.latestBatch("NIGHTLY").exists(_.jobResults.size == 2))
+      assert(st.batchDelta("nightly").exists(_.previous.isEmpty))
+      assert(st.lastSuccessfulTs("etl_job").contains(t("2024-01-02T00:01:00Z")))
+      assert(st.latestTestResults("etl_job").map(_.test_name) == Seq("rows"))
+      assert(st.slowJobs().isEmpty)
+      assert(st.deleteOlderThan(st.BATCH_LOG, t("2024-01-01T00:00:00Z")) == 1)
+      assert(st.earliestBatchLogTs.contains(t("2024-01-02T00:00:00Z")))
+      assert(st.deleteBatchesOlderThan(t("2024-01-02T00:00:00Z")) == 0)
+    }
+    assert(jobs == 0, s"the warm admin store launched $jobs Spark job(s)")
+  }
+
+  test("a generation written out of band is seen by the next read") {
+    val st = newParquetStore()
+    st.appendBatches(Seq(batchRow("b1", "nightly", t("2024-01-01T00:00:00Z"))))
+    assert(st.latestBatch("nightly").exists(_.id.startsWith("b1")))
+    // another process (or an older build) appends with a DataFrame write
+    import TestSpark.spark.implicits._
+    Seq(batchRow("b2", "nightly", t("2024-01-02T00:00:00Z"))).toDS()
+      .write.mode("append").parquet(s"${st.root}/batches")
+    assert(st.latestBatch("nightly").exists(_.id.startsWith("b2")))
+    assert(st.batchRows.map(_.id.take(2)).sorted == Seq("b1", "b2"))
+    // and the next own write keeps both generations' rows
+    st.appendBatches(Seq(batchRow("b3", "nightly", t("2024-01-03T00:00:00Z"))))
+    assert(st.batches.count() == 3)
+    assert(new AdminStore(TestSpark.spark, st.root).batchRows.size == 3)
+  }
+
+  test("an Instant with nanoseconds reads back the same from memory and from disk") {
+    val st = newParquetStore()
+    val ts = Instant.parse("2024-01-01T00:00:00.123456789Z")
+    st.appendBatches(Seq(batchRow("b1", "nightly", ts)))
+    val fromMemory = st.batchRows.map(_.ts)
+    val fromDisk = new AdminStore(TestSpark.spark, st.root).batchRows.map(_.ts)
+    assert(fromMemory == Seq(ts.truncatedTo(ChronoUnit.MICROS)))
+    assert(fromDisk == fromMemory)
+    assert(st.latestBatch("nightly").map(_.ts) == fromMemory.headOption)
+  }
+
+  test("a driver-written table has the schema of a DataFrame-written one") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val st = newParquetStore()
+    val rows = Seq(batchRow("b1", "nightly", t("2024-01-01T00:00:00Z")),
+      batchRow("b2", "nightly", t("2024-01-02T00:00:00Z"), running = true))
+    st.appendBatches(rows)
+    val viaSpark = TestSpark.tmpDir("adminschema") + "/batches"
+    spark.createDataset(rows).write.parquet(viaSpark)
+    val conf = spark.sparkContext.hadoopConfiguration
+    def footer(dir: String) = {
+      val file = new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val in = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file.getPath), conf))
+      try in.getFooter.getFileMetaData finally in.close()
+    }
+    val (ours, theirs) = (footer(s"${st.root}/batches"), footer(viaSpark))
+    assert(ours.getSchema == theirs.getSchema)
+    val rowMeta = "org.apache.spark.sql.parquet.row.metadata"
+    assert(ours.getKeyValueMetaData.get(rowMeta) == theirs.getKeyValueMetaData.get(rowMeta))
+    assert(spark.read.parquet(s"${st.root}/batches").schema ==
+      spark.read.parquet(viaSpark).schema)
+    assert(spark.read.parquet(s"${st.root}/batches").as[BatchRow].collect().sortBy(_.id)
+      .toSeq == rows)
   }
 }
