@@ -365,16 +365,15 @@ object ScaleProbe {
       timeQuery("e2_ivf_stats", skewOut, "e2_ivf_stats[90%-one-cell]")
     }
 
-    // "chain" as any arg: the DEEP-COMPONENT probe for the two
-    // connected-components passes. The LSH pair graphs of the replicated
-    // corpora are clone-cliques (diameter 1), which never separates the
-    // round counts — so construct the adversarial shape directly:
-    // 1000·N chains of depth 64 (the DedupStarSpec corpus at probe
-    // volume). Min-label needs ~diameter rounds, each a full shuffle
-    // barrier; large-star/small-star needs O(log diameter) — the reason
-    // the star pass is the 100 TB production path. Also cross-checks the
-    // two label tables cell-for-cell (the spec's equivalence law, here
-    // at probe volume).
+    // "chain" as any arg: the DEEP-COMPONENT probe for connected
+    // components. The LSH pair graphs of the replicated corpora are
+    // clone-cliques (diameter 1), which never stretch the round count — so
+    // construct the adversarial shape directly: 1000·N chains of depth 64
+    // (the DedupStarSpec corpus at probe volume). Times the default pass
+    // (driver finish once the edges fit graft.ops.Loop's budget) against
+    // the forced-distributed large-star/small-star rounds, O(log diameter)
+    // rounds each a full shuffle barrier, and cross-checks the two label
+    // tables cell-for-cell (the spec's equivalence law at probe volume).
     if (args.contains("chain")) {
       val depth = 64L
       val chains = 1000L * n
@@ -385,23 +384,23 @@ object ScaleProbe {
       val verts = pairs.select(col("da").as("doc_id"))
         .unionByName(pairs.select(col("db").as("doc_id"))).distinct()
         .localCheckpoint(true)
-      val t0 = System.nanoTime()
-      val (ml, mlRounds) = ops.Dedup.connectedComponentsWithRounds(verts, pairs)
-      val mlDf = ml.localCheckpoint(true)
-      val mlClusters = mlDf.select("cluster").distinct().count()
-      val mlSec = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val (st, stRounds) = ops.Dedup.connectedComponentsStar(verts, pairs)
-      val stDf = st.localCheckpoint(true)
-      val stClusters = stDf.select("cluster").distinct().count()
-      val stSec = (System.nanoTime() - t1) / 1e9
-      val mismatches = mlDf.join(stDf.withColumnRenamed("cluster", "c2"),
+      def run(distributed: Boolean): (DataFrame, Int, Long, Double) = {
+        val t0 = System.nanoTime()
+        val (lab, rounds) = ops.Dedup.connectedComponentsStar(verts, pairs,
+          ops.Loop.rowCap(ops.Loop.EdgeBytes, distributed))
+        val df = lab.localCheckpoint(true)
+        val clusters = df.select("cluster").distinct().count()
+        (df, rounds, clusters, (System.nanoTime() - t0) / 1e9)
+      }
+      val (dfA, roundsA, clustersA, secA) = run(distributed = false)
+      val (dfD, roundsD, clustersD, secD) = run(distributed = true)
+      val mismatches = dfA.join(dfD.withColumnRenamed("cluster", "c2"),
         "doc_id").filter(col("cluster") =!= col("c2")).count()
       require(mismatches == 0L, s"label tables diverge: $mismatches")
-      require(mlClusters == chains && stClusters == chains,
-        s"cluster counts $mlClusters/$stClusters != $chains")
-      println(f"cc_minlabel[${chains}x$depth-chain] $mlSec%8.2f s   rounds=$mlRounds clusters=$mlClusters")
-      println(f"cc_star[${chains}x$depth-chain]     $stSec%8.2f s   rounds=$stRounds clusters=$stClusters")
+      require(clustersA == chains && clustersD == chains,
+        s"cluster counts $clustersA/$clustersD != $chains")
+      println(f"cc_star[${chains}x$depth-chain]             $secA%8.2f s   distributed rounds=$roundsA clusters=$clustersA")
+      println(f"cc_star_distributed[${chains}x$depth-chain] $secD%8.2f s   rounds=$roundsD clusters=$clustersD")
     }
 
     // "kctrain" as any arg: the kcenterTrained coverage-target loop at

@@ -52,11 +52,10 @@ object TrainingDataPipeline {
         // instead of recomputing it.
         val pairs = Dedup.materializedPairTable(s, sfDir, s"$outDir/pairs")
           .filter(col("jaccard") >= 0.8).select("da", "db")
-        // components via the large-star/small-star pass: O(log n) rounds
-        // instead of min-label's O(diameter) — the deployment form for a
-        // graph whose chains can be deep (DedupStarSpec proves label
-        // equivalence, and e1_dedup_clusters_star shares the min-label
-        // oracle, so this swap cannot change the survivor set)
+        // components via the one connected-components entry point:
+        // min-id labels, O(log n) distributed rounds on a deep graph, a
+        // driver finish once the edges fit (DedupStarSpec pins both
+        // paths to a union-find replica)
         val losers = Dedup
           .connectedComponentsStar(docs.select(col("doc_id")), pairs)._1
           .filter(col("cluster") =!= col("doc_id")).select("doc_id")
@@ -197,7 +196,7 @@ object TrainingDataPipeline {
         val corpus = s.read.parquet(s"$outDir/corpus")
         val pairs = Dedup.materializedPairTable(s, sfDir, s"$outDir/pairs")
           .select("da", "db")
-        val cl = Dedup.connectedComponents(corpus.select(col("doc_id")), pairs)
+        val cl = Dedup.connectedComponentsStar(corpus.select(col("doc_id")), pairs)._1
         val slotC = graft.ops.Sampling.slot(col("cluster"),
           graft.ops.Sampling.SplitSalt)
         corpus.join(cl, Seq("doc_id"))

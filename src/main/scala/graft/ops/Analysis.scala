@@ -862,21 +862,6 @@ object Analysis {
   val PrBase = 0.15
   val PrIters = 3
 
-  /** E9 — PageRank over the near-duplicate graph (the LSH-verified
-    * MinHash pair table, undirected): rank ≈ how central a document is in
-    * its duplication neighborhood — high-rank nodes are the canonical
-    * copies of heavily-duplicated content, the principled alternative to
-    * min-doc_id keeper selection (and the first graph-ANALYTICS operator
-    * next to the connected-components cluster resolution). Vertices are
-    * restricted to edge endpoints: an isolated document has the floor
-    * rank by definition and never needs to enter the iteration — at
-    * 100 TB the loop moves the PAIR table (pairs << corpus), never the
-    * corpus. Plan: the shared memoized pair table feeds a degree
-    * aggregate + PrIters rounds of (edge ⋈ rank ⋈ degree → sum by dst) —
-    * one edge-sized shuffle per round; the 1-row vertex count and the
-    * per-round rank table ride broadcast. Both engines run the identical
-    * double arithmetic (base/n + d·Σ r/deg), so ranks hash-match at 6
-    * decimals. */
   /** The endpoint-restricted rank graph shared by the fixed-iteration
     * declared query and the convergence loop. */
   private final case class PrGraph(edges: DataFrame, deg: DataFrame,
@@ -910,24 +895,104 @@ object Analysis {
           lit(PrDamping) * coalesce(col("s"), lit(0.0))).as("r"))
   }
 
-  def e9Pagerank(s: SparkSession, d: String): DataFrame = {
-    val g = prGraph(Dedup.minhashPairTable(s, d))
-    var r = prInit(g)
-    for (_ <- 1 to PrIters) r = prRound(g, r)
+  private def prOut(r: DataFrame): DataFrame =
     r.select(col("id").as("doc_id"), round(col("r"), 6).as("rank"))
       .orderBy("doc_id")
+
+  /** The driver finish (graft.ops.Loop): the damping rounds over the
+    * collected pair rows, with prGraph/prRound's semantics and double
+    * arithmetic — both directions of every pair are edges (duplicates and
+    * self-loops included), the vertices are the distinct endpoints (a
+    * null endpoint is one more vertex that no edge reaches), deg counts
+    * edges by source, and each round is base/n + d·Σ r/deg summed in edge
+    * order. Rounds stop after `maxIters` or, after computing round k, when
+    * max |r_k − r_{k−1}| over the non-null vertices is below `tol` (0
+    * when there is none). Returns the (id, r) rows and the rounds run. */
+  private def prDriver(s: SparkSession, pairs: Array[org.apache.spark.sql.Row],
+      tol: Double, maxIters: Int): (DataFrame, Int) = {
+    val fwd = pairs.map(p =>
+      (p.get(0).asInstanceOf[java.lang.Long], p.get(1).asInstanceOf[java.lang.Long]))
+    val ends = fwd ++ fwd.map(_.swap)
+    val ids = ends.collect { case (a, _) if a != null => a.longValue }.sorted.distinct
+    val hasNull = ends.exists(_._1 == null)
+    val n = (ids.length + (if (hasNull) 1 else 0)).toDouble
+    def ix(v: java.lang.Long): Int =
+      if (v == null) -1 else java.util.Arrays.binarySearch(ids, v.longValue)
+    val src = ends.map(e => ix(e._1))
+    val dst = ends.map(e => ix(e._2))
+    val deg = new Array[Double](ids.length)
+    src.foreach(i => if (i >= 0) deg(i) += 1.0)
+    var r = Array.fill(ids.length)(1.0 / n)
+    var it = 0
+    var delta = Double.MaxValue
+    while (it < maxIters && delta >= tol) {
+      val sum = new Array[Double](ids.length)
+      for (e <- src.indices if src(e) >= 0 && dst(e) >= 0)
+        sum(dst(e)) += r(src(e)) / deg(src(e))
+      val next = sum.map(c => PrBase / n + PrDamping * c)
+      delta = next.indices.map(i => math.abs(next(i) - r(i))).maxOption.getOrElse(0.0)
+      r = next
+      it += 1
+    }
+    import s.implicits._
+    // the null vertex receives nothing: base/n once a round has run
+    val rows = ids.indices.map(i => (Option(ids(i)), r(i))) ++
+      (if (hasNull) Seq((Option.empty[Long], if (it == 0) 1.0 / n else PrBase / n)) else Nil)
+    (rows.toDF("id", "r"), it)
   }
 
+  /** The driver finish when the pair rows fit the driver budget (one
+    * action: the size check and the fetch), else None. */
+  private def prOnDriver(pairs: DataFrame, distributed: Boolean, tol: Double,
+      maxIters: Int): Option[(DataFrame, Int)] =
+    Loop.collectUnder(pairs.select(col("da"), col("db")),
+      Loop.rowCap(Loop.EdgeBytes, distributed))
+      .map(rows => prDriver(pairs.sparkSession, rows, tol, maxIters))
+
+  /** E9 — PageRank over the near-duplicate graph (the LSH-verified
+    * MinHash pair table, undirected): rank ≈ how central a document is in
+    * its duplication neighborhood — high-rank nodes are the canonical
+    * copies of heavily-duplicated content, the principled alternative to
+    * min-doc_id keeper selection (and the first graph-ANALYTICS operator
+    * next to the connected-components cluster resolution). Vertices are
+    * restricted to edge endpoints: an isolated document has the floor
+    * rank by definition and never needs to enter the iteration — at
+    * 100 TB the loop moves the PAIR table (pairs << corpus), never the
+    * corpus. When the pair rows fit the driver budget (graft.ops.Loop)
+    * they are collected in one action and the PrIters rounds run on the
+    * driver. Otherwise the plan is the shared memoized pair table feeding
+    * a degree aggregate + PrIters rounds of (edge ⋈ rank ⋈ degree → sum
+    * by dst) — one edge-sized shuffle per round, built as ONE lazy plan
+    * with no per-round action; the 1-row vertex count and the per-round
+    * rank table ride broadcast. Both engines and both paths run the
+    * identical double arithmetic (base/n + d·Σ r/deg), so ranks
+    * hash-match at 6 decimals. */
+  def e9Pagerank(s: SparkSession, d: String): DataFrame =
+    pageRankFixed(Dedup.minhashPairTable(s, d), distributed = false)
+
+  private[graft] def pageRankFixed(pairs: DataFrame, distributed: Boolean): DataFrame =
+    prOnDriver(pairs, distributed, Double.NegativeInfinity, PrIters)
+      .fold {
+        val g = prGraph(pairs)
+        var r = prInit(g)
+        for (_ <- 1 to PrIters) r = prRound(g, r)
+        r
+      }(_._1)
+      .transform(prOut)
+
   /** PageRank to CONVERGENCE — the deployment loop the fixed-iteration
-    * declared query documents: the same prRound plan repeats until
-    * max |Δrank| < tol, with the driver reading ONE scalar per round
-    * (the connectedComponents discipline — no rank rows are collected)
-    * and a localCheckpoint truncating the growing lineage each round.
-    * `maxIters` is the runaway valve for a tol below what damping^k can
-    * reach in reasonable rounds. Returns the converged ranks (rounded at
-    * 6 decimals like the declared query) and the number of rounds run —
-    * the stopping rule is: after computing round k, stop when
-    * max |r_k − r_{k−1}| < tol. */
+    * declared query documents: the same damping round repeats until
+    * max |Δrank| < tol. On the driver finish (the pair rows fit the
+    * budget) the rank rows never exist in Spark until the result; the
+    * distributed path runs graft.ops.Loop rounds — a lazy checkpoint of
+    * the new rank table and ONE action per round, the max |Δrank| join
+    * against the previous generation, which is then released (the graph
+    * itself never shrinks, so it never hands off mid-loop). `maxIters` is
+    * the runaway valve for a tol below what damping^k can reach in
+    * reasonable rounds. Returns the converged ranks (rounded at 6
+    * decimals like the declared query) and the number of rounds run —
+    * the stopping rule on both paths is: after computing round k, stop
+    * when max |r_k − r_{k−1}| < tol. */
   def pageRankConverged(s: SparkSession, d: String, tol: Double,
       maxIters: Int): (DataFrame, Int) =
     pageRankConverged(Dedup.minhashPairTable(s, d), tol, maxIters)
@@ -938,21 +1003,29 @@ object Analysis {
     * the near-dup graph in the declared query; any edge list (citation,
     * link, co-occurrence graphs) in a deployment. */
   def pageRankConverged(pairs: DataFrame, tol: Double,
-      maxIters: Int = 50): (DataFrame, Int) = {
-    val g = prGraph(pairs)
-    var r = prInit(g).localCheckpoint(true)
-    var it = 0
-    var delta = Double.MaxValue
-    while (it < maxIters && delta >= tol) {
-      val next = prRound(g, r).localCheckpoint(true)
-      delta = next
-        .join(r.select(col("id"), col("r").as("r0")), "id")
-        .agg(max(abs(col("r") - col("r0")))).head().getDouble(0)
-      r = next
-      it += 1
+      maxIters: Int = 50): (DataFrame, Int) =
+    pageRankConverged(pairs, tol, maxIters, distributed = false)
+
+  private[graft] def pageRankConverged(pairs: DataFrame, tol: Double,
+      maxIters: Int, distributed: Boolean): (DataFrame, Int) = {
+    val (r, it) = prOnDriver(pairs, distributed, tol, maxIters).getOrElse {
+      val g = prGraph(pairs)
+      val loop = new Loop[Double]
+      var r = loop.start(prInit(g))
+      var delta = Double.MaxValue
+      while (loop.rounds < maxIters && delta >= tol) {
+        val prev = r
+        val (gen, dl) = loop.round(prRound(g, prev)) { next =>
+          val st = next.join(prev.select(col("id"), col("r").as("r0")), "id")
+            .agg(max(abs(col("r") - col("r0")))).head()
+          if (st.isNullAt(0)) 0.0 else st.getDouble(0)
+        }
+        r = gen
+        delta = dl
+      }
+      (r, loop.rounds)
     }
-    (r.select(col("id").as("doc_id"), round(col("r"), 6).as("rank"))
-      .orderBy("doc_id"), it)
+    (prOut(r), it)
   }
 
   /** E9 — degree distribution of the near-dup graph: how many documents
@@ -2032,12 +2105,16 @@ object Analysis {
       .join(deg.select(col("id").as("da"), col("deg").as("dega")), "da")
       .join(deg.select(col("id").as("db"), col("deg").as("degb")), "db")
       .select(least(col("dega"), col("degb")).as("mindeg"))
-    val ks = broadcast(RichClubKs.map(_.toLong).toDF("k"))
+    // the hint rides only the two inner non-equi joins; Spark drops a
+    // broadcast hint on the preserved (left) side of a left outer join,
+    // so the left joins start from the unhinted k list
+    val kl = RichClubKs.map(_.toLong).toDF("k")
+    val ks = broadcast(kl)
     val nk = ks.join(deg, col("deg") > col("k"))
       .groupBy("k").agg(count(lit(1)).as("n_nodes"))
     val ek = ks.join(pe, col("mindeg") > col("k"))
       .groupBy("k").agg(count(lit(1)).as("n_edges"))
-    ks.join(nk, Seq("k"), "left").join(ek, Seq("k"), "left")
+    kl.join(nk, Seq("k"), "left").join(ek, Seq("k"), "left")
       .select(col("k"),
         coalesce(col("n_nodes"), lit(0L)).as("n_nodes"),
         coalesce(col("n_edges"), lit(0L)).as("n_edges"))

@@ -50,7 +50,7 @@ object Curation {
     * score here), while repeated 2-grams remain a genuine repetition
     * signal. Plan: three narrow per-doc tables equi-joined on doc_id —
     * the cluster loop dominates, and it runs over edge endpoints only
-    * (see Dedup.connectedComponents). */
+    * (see Dedup.connectedComponentsStar). */
   def e7Curated(s: SparkSession, d: String): DataFrame = {
     // BOTH dedup gates, in the order a production pipeline applies them:
     // the exact-fingerprint pass catches identical copies (the near-dup

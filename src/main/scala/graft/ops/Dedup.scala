@@ -559,16 +559,13 @@ object Dedup {
     * curation pipeline runs AFTER near-dup pairing: pairs alone don't say
     * which copies to drop; components do.
     *
-    * Implementation: iterative min-label propagation — each round, every
-    * vertex takes the min of its own label and its neighbors' labels; the
-    * loop ends when no label changes. Each round is ONE shuffle
-    * (join + groupBy on doc_id) and rounds are bounded by the component
-    * diameter — near-dup clusters are shallow (dozens of docs), so 2-4
-    * rounds in practice. localCheckpoint truncates the growing lineage
-    * each round. At 100 TB the same loop runs with the large-star/
-    * small-star optimization to cut the round count; the per-round plan
-    * (equi-join + min-agg) is unchanged. The driver-side convergence
-    * check reads ONE count per round — no data is collected. */
+    * Implementation: connectedComponentsStar over edge endpoints only (a
+    * document with no near-dup edge is its own cluster, attached by one
+    * left join). When the pair table fits the driver budget
+    * (graft.ops.Loop) the pair rows ARE collected — one action — and
+    * union-find finishes on the driver; otherwise large-star/small-star
+    * rounds run with one fused action per round until the live edge set
+    * fits, and the driver finishes from there. */
   def e1DedupClusters(s: SparkSession, d: String): DataFrame =
     dedupClusterTable(s, d).orderBy("doc_id")
 
@@ -579,8 +576,9 @@ object Dedup {
     * the docstrings above already state the deployment shape: the cluster
     * table is a STORED artifact produced once per corpus release and read
     * by every downstream stage (e1_incremental_clusters even treats it as
-    * such). The propagation loop (eager per-round actions) therefore runs
-    * once per session, not once per consumer execution. */
+    * such). The components pass (its size check and any per-round
+    * actions) therefore runs once per session, not once per consumer
+    * execution. */
   private val clusterCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
@@ -588,8 +586,8 @@ object Dedup {
     graft.MemoLedger.touch("dedup_cluster_table")
     clusterCache.computeIfAbsent((s, d), _ =>
       graft.MemoLedger.timedDF("dedup_cluster_table", d) {
-        connectedComponents(
-          documents(s, d).select(col("doc_id")), minhashPairTable(s, d))
+        connectedComponentsStar(
+          documents(s, d).select(col("doc_id")), minhashPairTable(s, d))._1
           .localCheckpoint(false)
       })
   }
@@ -637,178 +635,150 @@ object Dedup {
     graft.sources.Formats.readParquet(s, path)
   }
 
-  /** Min-label propagation over an undirected edge list (da, db):
-    * every vertex in `vertices` (column doc_id) — and every edge
-    * endpoint, which is unioned in so a partial vertex list cannot stall
-    * propagation or hide candidate labels — is labeled with the minimum
-    * doc_id reachable through the pairs, its canonical cluster id. The
-    * reusable core of e1DedupClusters (see its Scaladoc for the scale
-    * analysis); also the keeper-selection step of the curation pipeline
-    * example. */
-  def connectedComponents(vertices: DataFrame, pairs: DataFrame): DataFrame =
-    connectedComponentsWithRounds(vertices, pairs)._1
-
-  /** connectedComponents plus the number of propagation rounds run —
-    * the observable the star variant's spec compares against (min-label
-    * needs O(diameter) rounds; large-star/small-star needs O(log n)). */
-  def connectedComponentsWithRounds(
-      vertices: DataFrame, pairs: DataFrame): (DataFrame, Int) = {
-    var rounds = 0
-    // LAZY checkpoints (round 15, r14-verdict task 3): every round below
-    // runs exactly ONE action (the convergence count), and that action
-    // materializes the round's lazy checkpoint as a side effect — the
-    // old eager form paid a separate materialization job per round plus
-    // two up-front jobs for these two tables.
-    val edges = pairs
-      .unionByName(pairs.select(col("db").as("da"), col("da").as("db")))
-      .localCheckpoint(false)
-    // The propagation loop runs ONLY over edge endpoints: a vertex with no
-    // near-dup edge can never receive a smaller label, so it is its own
-    // cluster by construction and is attached with one left join at the
-    // end. Near-dup edges are a tiny fraction of any real corpus (pairs <<
-    // documents), so every per-round shuffle moves the endpoint set, not
-    // the corpus — at 100 TB this is the difference between iterating over
-    // gigabytes and iterating over the full scan.
-    // Initial label = min(self, direct neighbors) — exactly what the first
-    // propagation round would compute from identity labels, folded into the
-    // init aggregate so the loop starts one round ahead.
-    var labels = edges
-      .groupBy(col("da").as("doc_id"))
-      .agg(min(col("db")).as("mn"))
-      .select(col("doc_id"), least(col("doc_id"), col("mn")).as("cluster"))
-      .localCheckpoint(false)
-    var changed = 1L
-    while (changed > 0) {
-      // the vertex's own (pre-round) label rides along as `old` so the
-      // convergence check is a filter over the materialized round result —
-      // no extra join against the previous generation
-      val viaNeighbor = edges
-        .join(labels, edges("db") === labels("doc_id"))
-        .select(edges("da").as("doc_id"), col("cluster"),
-          lit(false).as("self"))
-      val next = labels.withColumn("self", lit(true))
-        .unionByName(viaNeighbor)
-        .groupBy("doc_id")
-        .agg(min(col("cluster")).as("cluster"),
-          min(when(col("self"), col("cluster"))).as("old"))
-        .localCheckpoint(false)
-      // ONE job per round: the count's full scan materializes `next`'s
-      // lazy checkpoint (an aggregate computes every partition)
-      changed = next.filter(col("cluster") < col("old")).count()
-      rounds += 1
-      labels = next.select("doc_id", "cluster")
-    }
-    // Singletons (and any vertex absent from the edge list) keep their own
-    // id; endpoint vertices not in `vertices` are still emitted, matching
-    // the previous vertices ∪ endpoints semantics.
-    (vertices.select(col("doc_id"))
-      .unionByName(labels.select(col("doc_id")))
-      .distinct()
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("cluster"), col("doc_id")).as("cluster")),
-      rounds)
-  }
-
-  /** Connected components via the LARGE-STAR / SMALL-STAR alternation
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the O(log n)-round replacement for min-label propagation,
-    * whose round count is the component DIAMETER: a chain of borderline
-    * LSH matches at 100 TB can have diameter in the hundreds, and each
-    * round is a full shuffle barrier, so diameter is the wrong variable
-    * to be linear in. Same answer (min id per component, proven
-    * label-equivalent to connectedComponents in DedupStarSpec, and
-    * oracle-checked against the SAME recursive-CTE SQL as
-    * e1_dedup_clusters), same pair-table-sized shuffles per round —
-    * strictly fewer rounds on deep graphs (the constructed 64-chain:
-    * 63 min-label rounds vs 5 star rounds).
+  /** Connected components of an undirected edge list (da, db): every
+    * vertex of `vertices` (column doc_id) and every edge endpoint is
+    * labeled with the minimum doc_id of its component, its canonical
+    * cluster id. The one connected-components entry point: the cluster
+    * table, keeper selection, incremental maintenance, semantic dedup and
+    * the curation pipeline example all call it. Returns the labels and
+    * the number of DISTRIBUTED rounds run (0 when the driver finished the
+    * whole loop).
     *
-    * Round shape (both phases avoid collect_list-style neighbor
-    * buffering — a hub node's neighborhood never materializes in one
-    * row, so degree skew costs nothing beyond the groupBy's partial
+    * Edge semantics (both paths): a pair with a null endpoint, a
+    * self-loop and a duplicate pair add nothing. The distributed path
+    * spells this greatest/least + filter(a =!= b) + distinct; the driver
+    * path keeps the rows where da =!= db, which drops exactly the same
+    * ones (a null endpoint makes the comparison null).
+    *
+    * Driver finish (graft.ops.Loop): when the pair rows fit the driver
+    * budget, union-find over them where each root is its component's
+    * minimum — the ids are sorted, and a union always hangs the larger
+    * index under the smaller. Its output is the star edge set (v, root)
+    * that the distributed rounds converge to, so both paths share the
+    * label assembly below.
+    *
+    * Distributed rounds: the LARGE-STAR / SMALL-STAR alternation (Kiveris
+    * et al., "Connected Components in MapReduce and Beyond", SoCC'14),
+    * O(log n) rounds where min-label propagation needs the component
+    * DIAMETER (the constructed 64-chain: 63 min-label rounds, at most 10
+    * star rounds in DedupStarSpec). Round shape (neither phase buffers a
+    * neighbor list, so a hub costs nothing beyond the groupBy's partial
     * aggregation):
     *   large-star: symmetrize; m(u) = min(u, min Γ(u)) via groupBy-min;
     *     emit (v, m(u)) for every neighbor v > u (join back on u).
     *   small-star: orient (big, small); m(u) = min Γ(u); emit (v, m(u))
     *     for every in-neighbor v plus (u, m(u)).
     * Both phases emit edges already oriented (big, small) and
-    * self-loop-free; each round ends in distinct() + localCheckpoint
-    * (dedup keeps the edge multiset from compounding; the checkpoint
-    * truncates the per-round lineage exactly like the min-label loop).
-    * Convergence = the oriented edge SET is unchanged: next ⊆ reachable
-    * pairs isn't monotone here (edges are REWRITTEN, not only removed),
-    * so set equality is checked as |next| == |prev| AND next∖prev = ∅ —
-    * both scalars come out of the round's ONE fused action (a left join
-    * against the previous unique edge set marks fresh edges while the
-    * same scan materializes the round's lazy checkpoint), all over
-    * pair-table-sized frames. At
-    * the fixpoint the graph is a union of stars centered on component
-    * minima (the paper's Theorem 1), so labels read directly off the
-    * final edges: (u, v) with u > v means cluster(u) = v. */
-  def connectedComponentsStar(
-      vertices: DataFrame, pairs: DataFrame, maxIters: Int = 60): (DataFrame, Int) = {
-    var edges = pairs
-      .select(greatest(col("da"), col("db")).as("a"),
-        least(col("da"), col("db")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(false)
-    var n = edges.count() // materializes the lazy checkpoint (one job)
-    var rounds = 0
-    var done = n == 0L
-    while (!done && rounds < maxIters) {
-      // large-star. NO intermediate distinct on `large` (round 14): the
-      // small-star phase is duplicate-insensitive — smin is a MIN aggregate
-      // and the round ends in next.distinct(), which canonicalizes the
-      // same edge SET either way (checked by DedupStarSpec's label
-      // equivalence) — so the extra exchange bought nothing; duplicate
-      // volume is bounded by |sym| = 2|edges|.
-      val sym = edges.unionByName(
-        edges.select(col("b").as("a"), col("a").as("b")))
-      val lmin = sym.groupBy("a")
-        .agg(min(col("b")).as("mn"))
-        .select(col("a"), least(col("a"), col("mn")).as("m"))
-      val large = sym.join(lmin, "a").filter(col("b") > col("a"))
-        .select(col("b").as("a"), col("m").as("b"))
-      // small-star (large's output is already oriented big→small)
-      val smin = large.groupBy("a").agg(min(col("b")).as("m"))
-      val next = large.join(smin, "a")
-        .select(col("b").as("a"), col("m").as("b"))
-        .unionByName(smin.select(col("a"), col("m").as("b")))
-        .filter(col("a") =!= col("b")).distinct()
-        .localCheckpoint(false)
-      // FUSED convergence round (round 15, r14-verdict task 3): ONE job
-      // emits the new edge set AND both convergence scalars — the agg's
-      // full scan materializes `next`'s lazy checkpoint as a side effect,
-      // and the left join against the previous (unique-keyed) edge set
-      // marks fresh edges, so |next| and |next ∖ prev| come out of the
-      // same action. The old round paid 2-3 jobs: an eager checkpoint, a
-      // count, and (in counting-equal rounds) a separate anti-join job.
-      val st = next
-        .join(edges.select(col("a"), col("b"), lit(1L).as("seen")),
-          Seq("a", "b"), "left")
-        .agg(count(lit(1)).as("m"),
-          count(when(col("seen").isNull, 1)).as("fresh"))
-        .head()
-      val m = st.getLong(0)
-      done = m == n && st.getLong(1) == 0L
-      rounds += 1
-      edges = next
-      n = m
+    * self-loop-free; each round ends in distinct() (dedup keeps the edge
+    * multiset from compounding). Convergence = the oriented edge SET is
+    * unchanged (edges are REWRITTEN, not only removed, so it is not
+    * monotone): the round's ONE action is a full outer join of the new
+    * edge set against the previous one, counting |next|, next∖prev and
+    * prev∖next. At the fixpoint the graph is a union of stars centered on
+    * component minima (the paper's Theorem 1), so labels read directly
+    * off the final edges: (u, v) with u > v means cluster(u) = v. Once
+    * |next| fits the budget, the live edges go to the driver finish. */
+  def connectedComponentsStar(vertices: DataFrame, pairs: DataFrame): (DataFrame, Int) =
+    connectedComponentsStar(vertices, pairs,
+      Loop.rowCap(Loop.EdgeBytes, distributed = false))
+
+  /** Round cap of the distributed star rounds (a runaway valve: the
+    * 64-chain converges in at most 10). */
+  val StarMaxRounds = 60
+
+  /** connectedComponentsStar with the driver finish's row cap given: -1
+    * (Loop.rowCap with `distributed`) forces the distributed rounds, and
+    * a cap below the pair count makes the rounds hand off mid-loop. */
+  private[graft] def connectedComponentsStar(vertices: DataFrame,
+      pairs: DataFrame, cap: Long): (DataFrame, Int) = {
+    val spark = vertices.sparkSession
+    import spark.implicits._
+    val live = pairs.select(col("da"), col("db")).filter(col("da") =!= col("db"))
+    Loop.collectUnder(live.as[(Long, Long)], cap) match {
+      case Some(es) => (starLabels(vertices, starFinish(es).toSeq.toDF("a", "b")), 0)
+      case None =>
+        val loop = new Loop[org.apache.spark.sql.Row]
+        var edges = loop.start(live
+          .select(greatest(col("da"), col("db")).as("a"),
+            least(col("da"), col("db")).as("b"))
+          .distinct())
+        var done = false
+        var finished: Option[Array[(Long, Long)]] = None
+        while (!done && finished.isEmpty && loop.rounds < StarMaxRounds) {
+          val prev = edges
+          val (gen, st) = loop.round(starRound(prev)) { next =>
+            next.withColumn("in_next", lit(1))
+              .join(prev.withColumn("in_prev", lit(1)), Seq("a", "b"), "full_outer")
+              .agg(count(col("in_next")).as("m"),
+                count(when(col("in_prev").isNull, 1)).as("fresh"),
+                count(when(col("in_next").isNull, 1)).as("gone"))
+              .head()
+          }
+          edges = gen
+          done = st.getLong(1) == 0L && st.getLong(2) == 0L
+          if (!done) finished = Loop.handoff(gen.as[(Long, Long)], st.getLong(0), cap)
+        }
+        val star = finished.fold(edges) { es =>
+          loop.close() // the labels no longer read the live edges
+          starFinish(es).toSeq.toDF("a", "b")
+        }
+        (starLabels(vertices, star), loop.rounds)
     }
-    (vertices.select(col("doc_id"))
-      .unionByName(edges.select(col("a").as("doc_id")))
-      .unionByName(edges.select(col("b").as("doc_id")))
-      .distinct()
-      .join(edges.select(col("a").as("doc_id"), col("b").as("lab")),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("lab"), col("doc_id")).as("cluster")),
-      rounds)
   }
 
+  /** One large-star + small-star round over oriented edges (a > b). No
+    * intermediate distinct on `large`: small-star is duplicate-insensitive
+    * (smin is a MIN aggregate and the round ends in distinct()), and
+    * duplicate volume is bounded by |sym| = 2|edges|. */
+  private def starRound(edges: DataFrame): DataFrame = {
+    val sym = edges.unionByName(edges.select(col("b").as("a"), col("a").as("b")))
+    val lmin = sym.groupBy("a")
+      .agg(min(col("b")).as("mn"))
+      .select(col("a"), least(col("a"), col("mn")).as("m"))
+    val large = sym.join(lmin, "a").filter(col("b") > col("a"))
+      .select(col("b").as("a"), col("m").as("b"))
+    val smin = large.groupBy("a").agg(min(col("b")).as("m"))
+    large.join(smin, "a")
+      .select(col("b").as("a"), col("m").as("b"))
+      .unionByName(smin.select(col("a"), col("m").as("b")))
+      .filter(col("a") =!= col("b")).distinct()
+  }
+
+  /** The driver finish: union-find over edges whose endpoints differ,
+    * each root its component's minimum, returned as the star edge set
+    * (v, root) for every non-root endpoint v. */
+  private def starFinish(edges: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val ids = edges.flatMap { case (a, b) => Array(a, b) }.sorted.distinct
+    val parent = Array.range(0, ids.length)
+    def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    def ix(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(ix(a)), find(ix(b)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    ids.indices.iterator.map(i => (i, find(i))).collect {
+      case (i, r) if r != i => (ids(i), ids(r))
+    }.toArray
+  }
+
+  /** Labels from a star edge set (a, b): b is a's cluster; every other
+    * vertex of `vertices` or of the edges is its own. */
+  private def starLabels(vertices: DataFrame, star: DataFrame): DataFrame =
+    vertices.select(col("doc_id"))
+      .unionByName(star.select(col("a").as("doc_id")))
+      .unionByName(star.select(col("b").as("doc_id")))
+      .distinct()
+      .join(star.select(col("a").as("doc_id"), col("b").as("lab")),
+        Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("lab"), col("doc_id")).as("cluster"))
+
   /** E1 — e1_dedup_clusters computed by the star alternation: the SAME
-    * cluster table (same oracle SQL), produced in O(log n) rounds — the
-    * form the cluster-resolution stage ships at 100 TB, where min-label's
-    * diameter-bound round count is the risk. */
+    * cluster table (same oracle SQL) as e1DedupClusters, computed fresh
+    * per call instead of read from the session's cluster memo. */
   def e1DedupClustersStar(s: SparkSession, d: String): DataFrame =
     connectedComponentsStar(
       documents(s, d).select(col("doc_id")), minhashPairTable(s, d))._1
@@ -1552,7 +1522,7 @@ object Dedup {
     * report: mass in large families = mirrored/template content and
     * predicts exactly how many documents keeper-selection will drop
     * (Σ (k−1)·n_k). Two tiny aggregates over the cluster labels the
-    * propagation loop already computes; nothing corpus-sized moves
+    * components pass already computes; nothing corpus-sized moves
     * beyond the e1_dedup_clusters pass it shares. */
   def e1ClusterStats(s: SparkSession, d: String): DataFrame =
     e1DedupClusters(s, d)
@@ -1574,7 +1544,7 @@ object Dedup {
     * quality policy.
     *
     * Plan at scale: quality is scan-side arithmetic (no shuffle); cluster
-    * labels come from the pair-table-sized propagation loop; then ONE
+    * labels come from the pair-table-sized components pass; then ONE
     * doc_id equi-join and ONE cluster-keyed aggregate whose argmax is a
     * map-side-combinable `max(struct(...))` — no window over the corpus,
     * no per-cluster sort. The score rides in integer micro-units so the
@@ -1587,8 +1557,8 @@ object Dedup {
       .select(col("doc_id"), asLong(col("nt")).as("nt"),
         asLong(round(round(TextOps.qualityScore(col("nt"), col("nsw")), 4)
           * 10000)).as("score_micro"))
-    connectedComponents(
-      documents(s, d).select(col("doc_id")), minhashPairTable(s, d))
+    connectedComponentsStar(
+      documents(s, d).select(col("doc_id")), minhashPairTable(s, d))._1
       .join(q, Seq("doc_id"))
       .groupBy("cluster")
       .agg(count(lit(1)).as("cluster_size"),

@@ -1603,97 +1603,171 @@ object Similarity {
     * diversity budget). Exactness: every cosine is the house index-order
     * double, max/min are order-independent, ties break on vec_id — both
     * engines walk the identical greedy trajectory (oracle = unrolled
-    * K-round CTE chain; the kmeans treatment). Plan at 100 TB: each
-    * round is ONE corpus scan against a BROADCAST ≤K-row selected set
-    * (per-vector max over the broadcast — vectors never shuffle; the
-    * per-vector reduction is map-side) ending in a TakeOrdered(1);
-    * the driver ships one (vec_id, sim) row per round — the
-    * kmeansTrained model-fetch discipline, K·n dot products total,
-    * LINEAR in the corpus. */
+    * K-round CTE chain; the kmeans treatment). Cost: K·n dot products,
+    * LINEAR in the corpus. A corpus that fits the driver budget
+    * (graft.ops.Loop; the fixture's 500 64-dim vectors are ~140 KB) IS
+    * collected, in one action, and the traversal runs on the driver. At
+    * 100 TB each round is ONE pass over the cached state against the
+    * broadcast last pick (vectors never shuffle) ending in a
+    * TakeOrdered(1), and the driver reads one (vec_id, ms, embedding)
+    * row per round. */
   /** The greedy farthest-point traversal shared by [[e2Kcenter]] and
-    * [[kcenterTrained]] — INCREMENTAL coverage maintenance (round 14,
-    * and what the Scaladoc's "K·n dot products total" cost model always
-    * described): the state is one (vec_id, embedding, nrm, ms) row per
-    * unselected vector where ms = max similarity to the selected set so
-    * far; each round TakeOrdered(1)s the state for the farthest point,
-    * then folds ONLY the new pick in (ms' = greatest(ms, sim-to-pick) —
-    * the max over the identical pair multiset the old rescan-everything
-    * round reduced, so the trajectory is bit-identical, ties and all),
-    * checkpointed per round like the other driver loops. The old form
-    * re-scored every candidate against ALL k−1 picks per round — n·K²/2
-    * dots; this is the documented n·K. `stop` (on the 4-dp ROUNDED ms,
-    * the RangeTau grid discipline) ends the traversal WITHOUT taking the
-    * offending pick — kcenterTrained's coverage gate; e2Kcenter passes
-    * `_ => false`. Exhaustion (fewer than maxK distinct vectors) degrades
-    * to fewer picks, as before. */
+    * [[kcenterTrained]] — INCREMENTAL coverage maintenance (round 14): the
+    * state is one row per unselected vector where ms = max similarity to
+    * the selected set so far; each round takes the farthest point (ms
+    * ascending, nulls first, ties by vec_id), then folds ONLY the new pick
+    * in (ms' = greatest(ms, sim-to-pick) — the max over the identical
+    * pair multiset a rescan-everything round reduces, so the trajectory is
+    * bit-identical, ties and all). n·K dot products in all. `stop` (on the
+    * 4-dp ROUNDED ms, the RangeTau grid discipline) ends the traversal
+    * WITHOUT taking the offending pick — kcenterTrained's coverage gate;
+    * e2Kcenter passes `_ => false`. Exhaustion (fewer than maxK distinct
+    * vectors) degrades to fewer picks.
+    *
+    * Where it runs (graft.ops.Loop): a one-row probe reads the vector
+    * length, which sets the width of a state row (4·dim + 24 B); when the
+    * corpus fits the driver budget it is collected in ONE action with the
+    * seed key alongside, and the traversal runs on the driver
+    * (kcenterDriver). Otherwise every round is one corpus-sized pass over
+    * the cached state (kcenterDistributed). The state only shrinks by one
+    * row a round, so a corpus over the budget stays distributed. */
   private def kcenterPicks(s: SparkSession, d: String, maxK: Int,
-      stop: Double => Boolean): Vector[(Long, Long, Option[Double])] = {
-    import s.implicits._
-    val e = withNorm(embeddings(s, d))
-      .select(col("vec_id"), col("embedding"), col("nrm"))
-    // Seed fetch carries the embedding+norm in the SAME TakeOrdered(1)
-    // row (round 15): the old two-step (fetch id, then re-scan the corpus
-    // for its vector) paid a second full scan before the loop even began.
-    val seedRow = e.withColumn("m",
-        org.apache.spark.sql.graftext.minhashExpression
-          .mix64(col("vec_id").bitwiseXOR(lit(KcenterSalt))))
-      .orderBy("m", "vec_id").limit(1)
-      .select("vec_id", "embedding", "nrm").head()
-    val seedId = seedRow.getLong(0)
-    // The pick's embedding comes off the TakeOrdered row as a broadcast
-    // 1-row LOCAL relation (round 15, r14-verdict task 1): the old
-    // pickVec re-SCANNED the corpus to fetch one vector — K extra corpus
-    // passes at 100 TB. Doubles round-trip the driver exactly (no text
-    // conversion), so the dot/norm arithmetic is bit-identical.
-    def pickVec(emb: Seq[Float], nrm: Double) = broadcast(
-      Seq((emb, nrm)).toDF("semb", "snrm")
-        .select(col("semb").cast("array<float>").as("semb"), col("snrm")))
-    var picks = Vector[(Long, Long, Option[Double])]((1L, seedId, None))
-    // persist (lazy cache), not an eager checkpoint: each round's ONE
-    // action — the TakeOrdered(1) below — materializes the state as a
-    // side effect, so a round costs one job; the lineage stays linear
-    // (one parent reference per round), never the 3^rounds tower the
-    // walk/peel loops checkpoint against.
-    var st = e.filter(col("vec_id") =!= seedId)
-      .crossJoin(pickVec(seedRow.getSeq[Float](1), seedRow.getDouble(2)))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        (graft.functions.Vectors.dot(col("embedding"), col("semb")) /
-          (col("nrm") * col("snrm"))).as("ms"))
-      .persist()
-    var prev: DataFrame = null
+      stop: Double => Boolean): Vector[(Long, Long, Option[Double])] =
+    kcenterPicks(embeddings(s, d), maxK, stop, distributed = false)
+
+  private[graft] def kcenterPicks(emb: DataFrame, maxK: Int,
+      stop: Double => Boolean, distributed: Boolean): Vector[(Long, Long, Option[Double])] = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    val e = emb.select(col("vec_id"), col("embedding"),
+      org.apache.spark.sql.graftext.minhashExpression
+        .mix64(col("vec_id").bitwiseXOR(lit(KcenterSalt))).as("m"))
+    val cap = if (distributed) -1L else {
+      val dim = e.select(size(col("embedding"))).limit(1).collect()
+        .collectFirst { case r if !r.isNullAt(0) => math.max(r.getInt(0), 0) }
+        .getOrElse(0)
+      Loop.rowCap(4L * dim + 24, distributed = false)
+    }
+    Loop.collectUnder(e.as[(Long, Array[Float], Long)], cap)
+      .fold(kcenterDistributed(withNorm(e), maxK, stop))(kcenterDriver(_, maxK, stop))
+  }
+
+  /** Spark's round(x, 4) on the driver (BigDecimal half-up; NaN and the
+    * infinities pass through). */
+  private def round4(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** The state's pick order under Spark's rules: ms ascending with nulls
+    * first and doubles compared by SQLOrderingUtil.compareDoubles (NaN
+    * largest, -0.0 = 0.0), then vec_id. */
+  private[ops] val kcenterOrder: Ordering[(Option[Double], Long)] = (x, y) => {
+    val c = (x._1, y._1) match {
+      case (Some(a), Some(b)) =>
+        org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(a, b)
+      case (a, b) => java.lang.Boolean.compare(a.isDefined, b.isDefined)
+    }
+    if (c != 0) c else java.lang.Long.compare(x._2, y._2)
+  }
+
+  /** Spark's greatest(ms, sim): nulls skipped, and of two equal values
+    * (compareDoubles) the first is kept. */
+  private[ops] def kcenterFold(ms: Option[Double], sim: Option[Double]): Option[Double] =
+    (ms, sim) match {
+      case (Some(a), Some(b)) =>
+        if (org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(b, a) > 0) sim
+        else ms
+      case _ => ms.orElse(sim)
+    }
+
+  /** The greedy walk both paths share: `next()` folds the last pick into
+    * the state and returns the next pick's (vec_id, ms), None once the
+    * state is empty. A pick whose 4-dp rounded ms meets `stop` ends the
+    * walk untaken. */
+  private def kcenterWalk(seed: Long, maxK: Int, stop: Double => Boolean)(
+      next: () => Option[(Long, Option[Double])]): Vector[(Long, Long, Option[Double])] = {
+    var picks = Vector[(Long, Long, Option[Double])]((1L, seed, None))
     var done = false
-    for (k <- 2 to maxK if !done) {
-      val rows = st.orderBy(col("ms"), col("vec_id"))
-        .limit(1).select("vec_id", "ms", "embedding", "nrm").collect()
-      // the new state is materialized now, so the superseded generation's
-      // cached blocks can go (r14 advice: without this, up to maxK
-      // corpus-sized embedding frames stack up in storage memory)
-      if (prev != null) { prev.unpersist(false); prev = null }
-      if (rows.isEmpty) done = true
+    for (k <- 2 to maxK if !done) next() match {
+      case Some((id, ms)) if !ms.exists(v => stop(round4(v))) => picks :+= ((k.toLong, id, ms))
+      case _ => done = true
+    }
+    picks
+  }
+
+  /** The driver finish of kcenterPicks over (vec_id, embedding, seed key)
+    * rows: the distributed rounds' arithmetic through the same native
+    * folds (vectorExpressions.dotImpl/normImpl over UnsafeArrayData) and
+    * the same null, NaN and division-by-zero behavior as Spark's
+    * dot / (nrm · snrm). */
+  private def kcenterDriver(rows: Array[(Long, Array[Float], Long)], maxK: Int,
+      stop: Double => Boolean): Vector[(Long, Long, Option[Double])] = {
+    import org.apache.spark.sql.graftext.vectorExpressions.{dotImpl, normImpl}
+    val ansi = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled
+    val id = rows.map(_._1)
+    val vec = rows.map(r => if (r._2 == null) null
+      else org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(r._2))
+    val nrm = vec.map(v => if (v == null) 0.0 else normImpl(v))
+    def sim(i: Int, p: Int): Option[Double] =
+      if (vec(i) == null || vec(p) == null) None
       else {
-        val pid = rows.head.getLong(0)
-        val pms = rows.head.getDouble(1)
-        val rounded = BigDecimal(pms)
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-        if (stop(rounded)) done = true
-        else {
-          picks :+= ((k.toLong, pid, Some(pms)))
-          if (k < maxK) {
-            prev = st
-            st = st.filter(col("vec_id") =!= pid)
-              .crossJoin(pickVec(rows.head.getSeq[Float](2),
-                rows.head.getDouble(3)))
-              .select(col("vec_id"), col("embedding"), col("nrm"),
-                greatest(col("ms"),
-                  graft.functions.Vectors.dot(col("embedding"), col("semb")) /
-                    (col("nrm") * col("snrm"))).as("ms"))
-              .persist()
-          }
-        }
+        val den = nrm(i) * nrm(p)
+        if (den != 0.0) Some(dotImpl(vec(i), vec(p)) / den)
+        else if (ansi) throw new ArithmeticException("[DIVIDE_BY_ZERO] Division by zero.")
+        else None
+      }
+    var last = rows.indices.minBy(i => (rows(i)._3, id(i)))
+    val ms = new Array[Option[Double]](rows.length)
+    var alive = rows.indices.toArray
+    var first = true
+    kcenterWalk(id(last), maxK, stop) { () =>
+      alive = alive.filter(i => id(i) != id(last))
+      alive.foreach(i => ms(i) = if (first) sim(i, last) else kcenterFold(ms(i), sim(i, last)))
+      first = false
+      alive.minByOption(i => (ms(i), id(i)))(kcenterOrder).map { p =>
+        last = p
+        (id(p), ms(p))
       }
     }
-    st.unpersist(false)
-    if (prev != null) prev.unpersist(false)
+  }
+
+  /** The distributed rounds of kcenterPicks over (vec_id, embedding, m,
+    * nrm): a seed TakeOrdered(1), then one graft.ops.Loop round per pick —
+    * fold the last pick into the state (its embedding rides the
+    * TakeOrdered row as a broadcast 1-row local relation, so the corpus
+    * is never rescanned for it; doubles round-trip the driver exactly),
+    * lazily checkpoint it, and take the next pick with ONE TakeOrdered(1)
+    * that also materializes the checkpoint; the replaced state is
+    * released. */
+  private def kcenterDistributed(e: DataFrame, maxK: Int,
+      stop: Double => Boolean): Vector[(Long, Long, Option[Double])] = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    var last = e.orderBy("m", "vec_id").limit(1)
+      .select("vec_id", "embedding", "nrm").head()
+    var at = 1 // position of the pick's embedding and norm in `last`
+    var st = e
+    val loop = new Loop[Option[org.apache.spark.sql.Row]]
+    val picks = kcenterWalk(last.getLong(0), maxK, stop) { () =>
+      val pick = broadcast(Seq((Option(last.getSeq[Float](at)),
+          if (last.isNullAt(at + 1)) None else Some(last.getDouble(at + 1))))
+        .toDF("semb", "snrm")
+        .select(col("semb").cast("array<float>").as("semb"), col("snrm")))
+      val sim = graft.functions.Vectors.dot(col("embedding"), col("semb")) /
+        (col("nrm") * col("snrm"))
+      val next = st.filter(col("vec_id") =!= last.getLong(0)).crossJoin(pick)
+        .select(col("vec_id"), col("embedding"), col("nrm"),
+          (if (at == 1) sim else greatest(col("ms"), sim)).as("ms"))
+      val (gen, row) = loop.round(next)(_.orderBy(col("ms"), col("vec_id")).limit(1)
+        .select("vec_id", "ms", "embedding", "nrm").collect().headOption)
+      st = gen
+      row.map { p =>
+        last = p
+        at = 2
+        (p.getLong(0), if (p.isNullAt(1)) None else Some(p.getDouble(1)))
+      }
+    }
+    loop.close()
     picks
   }
 
@@ -1711,9 +1785,10 @@ object Similarity {
     * similarity radius) or `maxK` picks, whichever first. The declared
     * fixed-K query documents the trajectory; this is the loop a coreset
     * builder actually runs — K is an OUTPUT (the corpus's intrinsic
-    * diversity at radius τ), not an input. Each round is the same ONE
-    * broadcast corpus scan; the driver reads one (vec_id, sim) row per
-    * round. Returns (picks DataFrame like e2_kcenter, rounds run). */
+    * diversity at radius τ), not an input. Same traversal as
+    * e2_kcenter (kcenterPicks: the driver finish for a corpus under the
+    * budget, else one pass over the cached state per round). Returns
+    * (picks DataFrame like e2_kcenter, rounds run). */
   def kcenterTrained(s: SparkSession, d: String, tauSim: Double,
       maxK: Int = 64): (DataFrame, Int) = {
     // Stop on the 4-dp ROUNDED similarity (BigDecimal half-up — same

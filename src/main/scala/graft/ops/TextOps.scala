@@ -918,7 +918,7 @@ object TextOps {
 
   /** Learned merge table + final per-word symbol table, memoized per
     * (session, corpus): the driver loop reads ONE tiny argmax row per
-    * round (the connectedComponents discipline) while the symbol state
+    * round (the loop-kernel discipline, graft.ops.Loop) while the symbol state
     * lives in the vocabulary-sized word table — the corpus itself is
     * scanned exactly once (inside the memoized wordFreq). */
   private val bpeCache = new java.util.concurrent.ConcurrentHashMap[

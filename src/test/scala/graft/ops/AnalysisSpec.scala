@@ -91,41 +91,56 @@ class AnalysisSpec extends AnyFunSuite {
 
   /** Pure-Scala replica of the damping iteration with the same stopping
     * rule as pageRankConverged — ground truth for both the round count
-    * and the converged ranks. */
-  private def prReplica(pairs: Seq[(Long, Long)], tol: Double,
-      maxIters: Int): (Map[Long, Double], Int) = {
+    * and the converged ranks. Spark's semantics for odd input: both
+    * directions of every pair are edges (duplicates and self-loops
+    * included), a null endpoint is one more vertex that no edge reaches,
+    * and max |Δ| over no vertex is 0. */
+  private def prReplica(pairs: Seq[(Option[Long], Option[Long])], tol: Double,
+      maxIters: Int): (Map[Option[Long], Double], Int) = {
     val edges = pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }
     val deg = edges.groupBy(_._1).view.mapValues(_.length.toDouble).toMap
-    val verts = edges.map(_._1).distinct.sorted
+    val verts = edges.map(_._1).distinct
     val n = verts.length.toDouble
     var r = verts.map(v => v -> 1.0 / n).toMap
     var k = 0
     var delta = Double.MaxValue
     while (delta >= tol && k < maxIters) {
-      val contrib = edges.groupBy(_._2).view
+      val contrib = edges.filter { case (src, dst) => src.isDefined && dst.isDefined }
+        .groupBy(_._2).view
         .mapValues(_.map { case (src, _) => r(src) / deg(src) }.sum).toMap
       val next = verts.map(v => v ->
         (Analysis.PrBase / n + Analysis.PrDamping * contrib.getOrElse(v, 0.0)))
         .toMap
-      delta = verts.map(v => math.abs(next(v) - r(v))).max
+      delta = verts.filter(_.isDefined).map(v => math.abs(next(v) - r(v)))
+        .maxOption.getOrElse(0.0)
       r = next; k += 1
     }
     (r, k)
   }
 
+  private def ranksOf(df: DataFrame): Map[Option[Long], Double] =
+    df.collect().map(r => Option(r.getAs[java.lang.Long]("doc_id")).map(_.longValue) ->
+      r.getAs[Double]("rank")).toMap
+
+  /** Both paths of pageRankConverged against the replica: the same round
+    * count exactly, and the same ranks up to the 6-dp rounding. */
   private def assertConvergedMatches(pairsDf: DataFrame,
-      pairs: Seq[(Long, Long)], tol: Double): Int = {
-    val (df, iters) = Analysis.pageRankConverged(pairsDf, tol, 60)
-    val got = df.collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("rank")).toMap
+      pairs: Seq[(Option[Long], Option[Long])], tol: Double): Int = {
     val (truth, k) = prReplica(pairs, tol, 60)
     assert(k < 60, "graph must converge before the cap")
-    assert(iters == k, s"distributed loop stopped at $iters, truth is $k")
-    assert(got.keySet == truth.keySet)
-    truth.foreach { case (v, t) =>
-      assert(math.abs(got(v) - t) < 1e-5, s"rank of $v: ${got(v)} vs $t") }
+    for (distributed <- Seq(false, true)) withClue(s"distributed=$distributed: ") {
+      val (df, iters) = Analysis.pageRankConverged(pairsDf, tol, 60, distributed)
+      assert(iters == k, s"loop stopped at $iters, truth is $k")
+      val got = ranksOf(df)
+      assert(got.keySet == truth.keySet)
+      truth.foreach { case (v, t) =>
+        assert(math.abs(got(v) - t) < 1e-5, s"rank of $v: ${got(v)} vs $t") }
+    }
     k
   }
+
+  private def some(pairs: Seq[(Long, Long)]): Seq[(Option[Long], Option[Long])] =
+    pairs.map { case (a, b) => (Some(a), Some(b)) }
 
   test("e9_label_prop: communities stay inside components and refine them") {
     val lp = Analysis.e9LabelProp(spark, TestSpark.sf001).collect()
@@ -155,7 +170,7 @@ class AnalysisSpec extends AnyFunSuite {
     val fixture = Dedup.minhashPairTable(spark, TestSpark.sf001).collect()
       .map(r => (r.getAs[Long]("da"), r.getAs[Long]("db")))
     assertConvergedMatches(
-      Dedup.minhashPairTable(spark, TestSpark.sf001), fixture.toSeq, tol)
+      Dedup.minhashPairTable(spark, TestSpark.sf001), some(fixture.toSeq), tol)
     // 2) an IRREGULAR graph (path + star) where rank genuinely moves for
     //    many rounds: convergence must land beyond the declared query's
     //    fixed 3 iterations, proving the loop is a real refinement and
@@ -163,9 +178,45 @@ class AnalysisSpec extends AnyFunSuite {
     val chain = (1L to 9L).map(i => (i, i + 1)) ++
       (11L to 15L).map(i => (10L, i))
     val kChain = assertConvergedMatches(
-      chain.toDF("da", "db"), chain, tol)
+      chain.toDF("da", "db"), some(chain), tol)
     assert(kChain > Analysis.PrIters,
       s"irregular graph must need more than ${Analysis.PrIters} rounds, took $kChain")
+  }
+
+  test("e9_pagerank: the driver finish equals the distributed plan and the replica") {
+    import spark.implicits._
+    val pairs = Dedup.minhashPairTable(spark, TestSpark.sf001)
+    val drv = ranksOf(Analysis.e9Pagerank(spark, TestSpark.sf001))
+    val dist = ranksOf(Analysis.pageRankFixed(pairs, distributed = true))
+    val (truth, k) = prReplica(some(pairs.as[(Long, Long)].collect().toSeq),
+      Double.NegativeInfinity, Analysis.PrIters)
+    assert(k == Analysis.PrIters)
+    assert(drv.keySet == truth.keySet && dist.keySet == truth.keySet)
+    truth.foreach { case (v, t) =>
+      // 6-dp rounding of sums taken in different orders: one step at most
+      assert(math.abs(drv(v) - t) < 1.5e-6 && math.abs(dist(v) - drv(v)) < 1.5e-6,
+        s"rank of $v: driver ${drv(v)}, distributed ${dist(v)}, replica $t")
+    }
+  }
+
+  test("pageRankConverged on both paths: empty, random, self-loops, null endpoints, duplicates") {
+    import spark.implicits._
+    val tol = 1e-4
+    val empty = Seq.empty[(Option[Long], Option[Long])]
+    assert(assertConvergedMatches(empty.toDF("da", "db"), empty, tol) == 1,
+      "an empty graph stops after one round (max |Δ| over no vertex is 0)")
+    val rnd = new scala.util.Random(0x9a6e)
+    for (_ <- 1 to 2) {
+      val edges = some(Seq.fill(25)((rnd.nextInt(20).toLong, rnd.nextInt(20).toLong)))
+      withClue(s"edges: $edges") {
+        assertConvergedMatches(edges.toDF("da", "db"), edges, tol)
+      }
+    }
+    val odd = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(1L), Some(2L)), (Some(2L), Some(1L)), // duplicates
+      (Some(2L), Some(2L)), (Some(3L), Some(3L)), // self-loops
+      (Some(2L), Some(4L)), (None, Some(4L)), (Some(5L), None), (None, None))
+    assertConvergedMatches(odd.toDF("da", "db"), odd, tol)
   }
 
   test("e8_transitions: probabilities row-normalize to 1 per from_type") {

@@ -1054,9 +1054,9 @@ class OpsSpec extends AnyFunSuite {
     assert(leaked > 0, "fixture should show cross-split near-dup pairs")
     // cluster-keyed assignment (e6_cluster_split's rule: split by the
     // connected-component label) leaks ZERO by construction
-    val comp = Dedup.connectedComponents(
+    val comp = Dedup.connectedComponentsStar(
         graft.Tables.documents(spark, TestSpark.sf001).select(col("doc_id")),
-        Dedup.minhashPairTable(spark, TestSpark.sf001))
+        Dedup.minhashPairTable(spark, TestSpark.sf001))._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val clusterLeaks = pairs.count { case (a, b) =>
       split(comp(a)) != split(comp(b))
@@ -1135,7 +1135,7 @@ class OpsSpec extends AnyFunSuite {
     // to cluster 1 (a partial vertex list must not stall propagation)
     val vertices = Seq(3L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("da", "db")
-    val labels = Dedup.connectedComponents(vertices, pairs)
+    val labels = Dedup.connectedComponentsStar(vertices, pairs)._1
       .as[(Long, Long)].collect().toMap
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }

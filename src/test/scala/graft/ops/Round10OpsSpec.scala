@@ -172,6 +172,67 @@ class Round10OpsSpec extends AnyFunSuite {
     assert(sims.forall(_ < 0.0))
   }
 
+  /** kcenterPicks on both paths, with doubles compared by bits (NaN
+    * equal to NaN, -0.0 distinct from 0.0). */
+  private def bothKcenterPaths(emb: org.apache.spark.sql.DataFrame, maxK: Int,
+      stop: Double => Boolean): Vector[(Long, Long, Option[Double])] = {
+    def bits(p: Vector[(Long, Long, Option[Double])]) =
+      p.map { case (k, id, ms) => (k, id, ms.map(java.lang.Double.doubleToLongBits)) }
+    val drv = Similarity.kcenterPicks(emb, maxK, stop, distributed = false)
+    val dist = Similarity.kcenterPicks(emb, maxK, stop, distributed = true)
+    assert(bits(drv) == bits(dist), s"driver $drv vs distributed $dist")
+    drv
+  }
+
+  test("k-center: the driver finish walks the distributed trajectory on the fixture") {
+    val emb = graft.Tables.embeddings(spark, TestSpark.sf0001)
+    val fixed = bothKcenterPaths(emb, Similarity.KcenterK, _ => false)
+    assert(fixed.length == Similarity.KcenterK)
+    val covered = bothKcenterPaths(emb, 64, _ >= 0.0)
+    assert(covered.length < 64 && covered.flatMap(_._3).forall(v =>
+      BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP) < 0))
+  }
+
+  test("k-center on both paths: ties on ms, NaN and null similarities") {
+    import spark.implicits._
+    // 10/11 and 20/21 are identical vectors, so their ms tie every round
+    // (and 10, 11, 20, 21, 50 all sit at similarity 0 from 30); 40 carries
+    // a NaN component, so its similarities are NaN (the largest double);
+    // 60 has no embedding, so its ms is null (first in the pick order)
+    val emb = Seq[(Long, Array[Float])](
+      (10L, Array(1f, 0f, 0f)), (11L, Array(1f, 0f, 0f)),
+      (20L, Array(0f, 1f, 0f)), (21L, Array(0f, 1f, 0f)),
+      (30L, Array(0f, 0f, 1f)), (40L, Array(Float.NaN, 1f, 0f)),
+      (50L, Array(1f, 1f, 0f)), (60L, null)).toDF("vec_id", "embedding")
+    val picks = bothKcenterPaths(emb, 8, _ => false)
+    // seed 50 (smallest mix64 key); 60's null ms goes first; 30 is at 0;
+    // 10/20 then 11/21 tie at 1/√2 and at 1.0 and break on vec_id; NaN last
+    assert(picks.map(_._2) == Seq(50L, 60L, 30L, 10L, 20L, 11L, 21L, 40L))
+    assert(picks(1)._3.isEmpty && picks(2)._3.contains(0.0))
+    assert(picks(3)._3 == picks(4)._3 && picks(5)._3.contains(1.0) &&
+      picks(6)._3.contains(1.0), s"ties: $picks")
+    assert(picks.last._3.exists(_.isNaN))
+  }
+
+  test("k-center driver order and fold follow Spark on nulls, NaN and -0.0") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, greatest}
+    val vals = Seq(None, Some(-0.0), Some(0.0), Some(Double.NaN), Some(1.0), Some(-1.0))
+    val pairs = for (a <- vals; b <- vals) yield (a, b)
+    val sparkMax = pairs.toDF("a", "b").select(greatest(col("a"), col("b")))
+      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+    def bits(o: Option[Double]) = o.map(java.lang.Double.doubleToLongBits)
+    pairs.zip(sparkMax).foreach { case ((a, b), m) =>
+      assert(bits(Similarity.kcenterFold(a, b)) == bits(m), s"greatest($a, $b)")
+    }
+    // ids run against the value order, so a tie is visible as id order
+    val rows = vals.zipWithIndex.map { case (v, i) => (v, (10 - i).toLong) } ++
+      Seq((Some(0.0), 1L), (Some(-0.0), 0L), (Some(Double.NaN), 2L))
+    val sparkOrder = rows.toDF("ms", "vec_id").orderBy("ms", "vec_id")
+      .collect().map(_.getLong(1)).toSeq
+    assert(rows.sorted(Similarity.kcenterOrder).map(_._2) == sparkOrder)
+  }
+
   test("e2_triplet_mining: leg labels, margin arithmetic, and anchor uniqueness") {
     val labels = graft.Tables.embeddings(spark, TestSpark.sf0001)
       .select("vec_id", "label").collect()
