@@ -384,16 +384,15 @@ object ScaleProbe {
       val verts = pairs.select(col("da").as("doc_id"))
         .unionByName(pairs.select(col("db").as("doc_id"))).distinct()
         .localCheckpoint(true)
-      def run(distributed: Boolean): (DataFrame, Int, Long, Double) = {
+      def run(budget: Long): (DataFrame, Int, Long, Double) = {
         val t0 = System.nanoTime()
-        val (lab, rounds) = ops.Dedup.connectedComponentsStar(verts, pairs,
-          ops.Loop.rowCap(ops.Loop.EdgeBytes, distributed))
+        val (lab, rounds) = ops.Dedup.connectedComponentsStar(verts, pairs, budget)
         val df = lab.localCheckpoint(true)
         val clusters = df.select("cluster").distinct().count()
         (df, rounds, clusters, (System.nanoTime() - t0) / 1e9)
       }
-      val (dfA, roundsA, clustersA, secA) = run(distributed = false)
-      val (dfD, roundsD, clustersD, secD) = run(distributed = true)
+      val (dfA, roundsA, clustersA, secA) = run(ops.Loop.DriverBytes)
+      val (dfD, roundsD, clustersD, secD) = run(ops.Loop.ForceDistributed)
       val mismatches = dfA.join(dfD.withColumnRenamed("cluster", "c2"),
         "doc_id").filter(col("cluster") =!= col("c2")).count()
       require(mismatches == 0L, s"label tables diverge: $mismatches")

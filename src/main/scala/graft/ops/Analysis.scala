@@ -908,18 +908,17 @@ object Analysis {
     * order. Rounds stop after `maxIters` or, after computing round k, when
     * max |r_k − r_{k−1}| over the non-null vertices is below `tol` (0
     * when there is none). Returns the (id, r) rows and the rounds run. */
-  private def prDriver(s: SparkSession, pairs: Array[org.apache.spark.sql.Row],
+  private def prDriver(s: SparkSession, pairs: Array[(java.lang.Long, java.lang.Long)],
       tol: Double, maxIters: Int): (DataFrame, Int) = {
-    val fwd = pairs.map(p =>
-      (p.get(0).asInstanceOf[java.lang.Long], p.get(1).asInstanceOf[java.lang.Long]))
-    val ends = fwd ++ fwd.map(_.swap)
-    val ids = ends.collect { case (a, _) if a != null => a.longValue }.sorted.distinct
-    val hasNull = ends.exists(_._1 == null)
+    val ids = pairs.iterator.flatMap(p => Iterator(p._1, p._2)).filter(_ != null)
+      .map(_.longValue).toArray.sorted.distinct
+    val hasNull = pairs.exists(p => p._1 == null || p._2 == null)
     val n = (ids.length + (if (hasNull) 1 else 0)).toDouble
     def ix(v: java.lang.Long): Int =
       if (v == null) -1 else java.util.Arrays.binarySearch(ids, v.longValue)
-    val src = ends.map(e => ix(e._1))
-    val dst = ends.map(e => ix(e._2))
+    val (a, b) = (pairs.map(p => ix(p._1)), pairs.map(p => ix(p._2)))
+    // every pair in both directions, forward pairs first
+    val (src, dst) = (a ++ b, b ++ a)
     val deg = new Array[Double](ids.length)
     src.foreach(i => if (i >= 0) deg(i) += 1.0)
     var r = Array.fill(ids.length)(1.0 / n)
@@ -941,13 +940,20 @@ object Analysis {
     (rows.toDF("id", "r"), it)
   }
 
-  /** The driver finish when the pair rows fit the driver budget (one
-    * action: the size check and the fetch), else None. */
-  private def prOnDriver(pairs: DataFrame, distributed: Boolean, tol: Double,
-      maxIters: Int): Option[(DataFrame, Int)] =
-    Loop.collectUnder(pairs.select(col("da"), col("db")),
-      Loop.rowCap(Loop.EdgeBytes, distributed))
-      .map(rows => prDriver(pairs.sparkSession, rows, tol, maxIters))
+  /** The pair table's endpoints as bigint: the id type of both paths,
+    * whatever integer type the edge list has. */
+  private def prPairs(pairs: DataFrame): DataFrame =
+    pairs.select(col("da").cast("long").as("da"), col("db").cast("long").as("db"))
+
+  /** The driver finish when the pair rows fit `budget` (one Spark job:
+    * the size check and the fetch), else None. */
+  private def prOnDriver(pairs: DataFrame, budget: Long, tol: Double,
+      maxIters: Int): Option[(DataFrame, Int)] = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    Loop.collectUnder(pairs.as[(java.lang.Long, java.lang.Long)], budget)
+      .map(rows => prDriver(spark, rows, tol, maxIters))
+  }
 
   /** E9 — PageRank over the near-duplicate graph (the LSH-verified
     * MinHash pair table, undirected): rank ≈ how central a document is in
@@ -968,10 +974,13 @@ object Analysis {
     * identical double arithmetic (base/n + d·Σ r/deg), so ranks
     * hash-match at 6 decimals. */
   def e9Pagerank(s: SparkSession, d: String): DataFrame =
-    pageRankFixed(Dedup.minhashPairTable(s, d), distributed = false)
+    pageRankFixed(Dedup.minhashPairTable(s, d), Loop.DriverBytes)
 
-  private[graft] def pageRankFixed(pairs: DataFrame, distributed: Boolean): DataFrame =
-    prOnDriver(pairs, distributed, Double.NegativeInfinity, PrIters)
+  /** e9Pagerank's rounds over a pair table, with the driver budget given
+    * (Loop.ForceDistributed forces the distributed plan). */
+  private[graft] def pageRankFixed(pairs0: DataFrame, budget: Long): DataFrame = {
+    val pairs = prPairs(pairs0)
+    prOnDriver(pairs, budget, Double.NegativeInfinity, PrIters)
       .fold {
         val g = prGraph(pairs)
         var r = prInit(g)
@@ -979,6 +988,7 @@ object Analysis {
         r
       }(_._1)
       .transform(prOut)
+  }
 
   /** PageRank to CONVERGENCE — the deployment loop the fixed-iteration
     * declared query documents: the same damping round repeats until
@@ -1004,11 +1014,14 @@ object Analysis {
     * link, co-occurrence graphs) in a deployment. */
   def pageRankConverged(pairs: DataFrame, tol: Double,
       maxIters: Int = 50): (DataFrame, Int) =
-    pageRankConverged(pairs, tol, maxIters, distributed = false)
+    pageRankConverged(pairs, tol, maxIters, Loop.DriverBytes)
 
-  private[graft] def pageRankConverged(pairs: DataFrame, tol: Double,
-      maxIters: Int, distributed: Boolean): (DataFrame, Int) = {
-    val (r, it) = prOnDriver(pairs, distributed, tol, maxIters).getOrElse {
+  /** pageRankConverged with the driver budget given (Loop.ForceDistributed
+    * forces the distributed rounds). */
+  private[graft] def pageRankConverged(pairs0: DataFrame, tol: Double,
+      maxIters: Int, budget: Long): (DataFrame, Int) = {
+    val pairs = prPairs(pairs0)
+    val (r, it) = prOnDriver(pairs, budget, tol, maxIters).getOrElse {
       val g = prGraph(pairs)
       val loop = new Loop[Double]
       var r = loop.start(prInit(g))

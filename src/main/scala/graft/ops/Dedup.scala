@@ -677,24 +677,24 @@ object Dedup {
     * prev∖next. At the fixpoint the graph is a union of stars centered on
     * component minima (the paper's Theorem 1), so labels read directly
     * off the final edges: (u, v) with u > v means cluster(u) = v. Once
-    * |next| fits the budget, the live edges go to the driver finish. */
+    * |next| edges fit the budget, the live edges go to the driver finish. */
   def connectedComponentsStar(vertices: DataFrame, pairs: DataFrame): (DataFrame, Int) =
-    connectedComponentsStar(vertices, pairs,
-      Loop.rowCap(Loop.EdgeBytes, distributed = false))
+    connectedComponentsStar(vertices, pairs, Loop.DriverBytes)
 
   /** Round cap of the distributed star rounds (a runaway valve: the
     * 64-chain converges in at most 10). */
   val StarMaxRounds = 60
 
-  /** connectedComponentsStar with the driver finish's row cap given: -1
-    * (Loop.rowCap with `distributed`) forces the distributed rounds, and
-    * a cap below the pair count makes the rounds hand off mid-loop. */
+  /** connectedComponentsStar with the driver budget given (bytes, at
+    * Loop.EdgeBytes an edge): Loop.ForceDistributed forces the
+    * distributed rounds, and a budget below the pairs' makes the rounds
+    * hand off mid-loop. */
   private[graft] def connectedComponentsStar(vertices: DataFrame,
-      pairs: DataFrame, cap: Long): (DataFrame, Int) = {
+      pairs: DataFrame, budget: Long): (DataFrame, Int) = {
     val spark = vertices.sparkSession
     import spark.implicits._
     val live = pairs.select(col("da"), col("db")).filter(col("da") =!= col("db"))
-    Loop.collectUnder(live.as[(Long, Long)], cap) match {
+    Loop.collectUnder(live.as[(Long, Long)], budget) match {
       case Some(es) => (starLabels(vertices, starFinish(es).toSeq.toDF("a", "b")), 0)
       case None =>
         val loop = new Loop[org.apache.spark.sql.Row]
@@ -716,7 +716,8 @@ object Dedup {
           }
           edges = gen
           done = st.getLong(1) == 0L && st.getLong(2) == 0L
-          if (!done) finished = Loop.handoff(gen.as[(Long, Long)], st.getLong(0), cap)
+          if (!done) finished =
+            Loop.handoff(gen.as[(Long, Long)], st.getLong(0) * Loop.EdgeBytes, budget)
         }
         val star = finished.fold(edges) { es =>
           loop.close() // the labels no longer read the live edges

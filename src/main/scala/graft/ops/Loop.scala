@@ -1,21 +1,30 @@
 package graft.ops
 
+import java.io.{ByteArrayOutputStream, DataOutputStream}
+import java.nio.ByteBuffer
+
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution, ShuffledRowRDD, UnsafeRowSerializer}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.metric.{SQLShuffleReadMetricsReporter, SQLShuffleWriteMetricsReporter}
+import org.apache.spark.unsafe.Platform
 
 /** The loop kernel of the iterative operators: connected components
   * (Dedup.connectedComponentsStar), PageRank (Analysis.e9Pagerank,
   * Analysis.pageRankConverged) and greedy k-center
   * (Similarity.kcenterPicks). A loop finishes in one of two places.
   *
-  *  - DRIVER FINISH. A loop whose state fits in [[DriverBytes]] collects
-  *    it and finishes in plain Scala (union-find, power iteration, the
-  *    greedy traversal), with no Spark job per round. The state at the
-  *    start comes from [[collectUnder]]: ONE action that is both the size
-  *    check and the fetch (k-center first reads one vector's length, which
-  *    sets its row width).
+  *  - DRIVER FINISH. A loop whose state fits [[DriverBytes]] collects it
+  *    and finishes in plain Scala (union-find, power iteration, the greedy
+  *    traversal), with no Spark job per round. The state at the start
+  *    comes from [[collectUnder]]: ONE Spark job that is both the size
+  *    check and the fetch.
   *  - DISTRIBUTED ROUNDS. Otherwise each [[Loop.round]] takes a lazy local
   *    checkpoint of the new generation, runs ONE fused action over it for
   *    the round's stats (the action reads every partition, so it also
@@ -24,49 +33,106 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    (e9Pagerank) builds its rounds as one lazy plan and runs no
   *    per-round action at all.
   *
-  * HANDOFF RULE. The budget becomes a row cap through the width of one
-  * state row, which the caller states ([[EdgeBytes]] for an edge, 4·dim +
-  * 24 B for an embedding row): cap = DriverBytes / rowBytes. A loop whose
-  * state has at most `cap` rows at the start never runs a distributed
-  * round. During distributed rounds the live row count comes from the
-  * round's own stats action; once it is at most `cap`, [[handoff]]
-  * collects the live generation and the driver finishes. At 100 TB the
-  * state starts far above the cap, so the distributed rounds are
-  * unchanged until it is small.
+  * HANDOFF RULE. The state fits when its rows, in Spark's own row
+  * format (UnsafeRow: null bits, 8 B a fixed-width field, variable-width
+  * data after), take at most the budget. A loop whose state fits at the
+  * start never runs a distributed round. During distributed rounds the
+  * live row count comes from the round's own stats action; once rows ×
+  * [[EdgeBytes]] fits, [[handoff]] collects the live generation and the
+  * driver finishes (only connected components' state shrinks this way).
+  *
+  * Above the budget the size check costs one extra pass over the loop's
+  * input before the distributed rounds, which then compute that input
+  * again: every partition writes its rows up to the first one past the
+  * budget to a one-partition shuffle, and the single reading task stops
+  * at the first row past the budget and returns nothing. SCALE.md has
+  * the measured cost.
   *
   * The budget is a constant, not a setting: the operators' answers are
   * identical on both paths (DedupStarSpec, AnalysisSpec and
-  * Round10OpsSpec run both), so it decides cost only. The one way to force
-  * the distributed path is a package-private parameter of each operator
-  * (`distributed`, or for connected components the row cap itself), which
-  * the specs and the ScaleProbe chain use. */
+  * Round10OpsSpec run both), so it decides cost only. Each operator has a
+  * package-private overload taking the budget, used by the specs and the
+  * ScaleProbe chain; [[ForceDistributed]] there skips the size check. */
 object Loop {
-  /** Driver memory one loop's state may take for the driver finish:
-    * 2M edges, or 120k 64-dim embedding rows. */
+  /** Budget of one loop's state as Spark rows: 1.4M edges, or 110k
+    * 64-dim embedding rows (304 B each). The driver finishes hold more
+    * than that on the heap; SCALE.md has the measured multipliers. */
   val DriverBytes: Long = 32L << 20
 
-  /** Width of one edge row: two longs. */
-  val EdgeBytes: Long = 16L
+  /** Size of one edge row (two longs) as a Spark row: 8 B of null bits
+    * and 8 B a field. */
+  val EdgeBytes: Long = 24L
 
-  /** The row cap for state rows of `rowBytes` each; -1 (nothing fits,
-    * no size check runs) when `distributed` forces the distributed path. */
-  private[graft] def rowCap(rowBytes: Long, distributed: Boolean): Long =
-    if (distributed) -1L else DriverBytes / math.max(rowBytes, 1L)
+  /** A budget nothing fits, not even an empty state: the size check does
+    * not run and the loop takes the distributed rounds. */
+  private[graft] val ForceDistributed: Long = -1L
 
-  /** The rows of `ds` when it has at most `cap` of them, else None. ONE
-    * action: a single task reads at most cap + 1 rows and stops. */
-  def collectUnder[T](ds: Dataset[T], cap: Long): Option[Array[T]] =
-    if (cap < 0) None
+  /** The rows of `ds` when they take at most `budget` bytes as Spark
+    * rows, else None. ONE Spark job, the plan of CollectLimitExec with a
+    * byte limit: every partition keeps its rows up to the first one past
+    * the budget, a shuffle gathers those into one partition (skipped when
+    * there is only one), and that task keeps them up to the first past
+    * the budget again and returns them only when they fit. The stage that
+    * computes `ds` keeps its parallelism, and a state over the budget
+    * never reaches the driver. */
+  def collectUnder[T](ds: Dataset[T], budget: Long): Option[Array[T]] =
+    if (budget < 0) None
     else {
-      val rows = ds.coalesce(1).limit(math.min(cap + 1, Int.MaxValue.toLong).toInt)
-        .collect()
-      if (rows.length <= cap) Some(rows) else None
+      val qe = ds.queryExecution
+      val out = qe.executedPlan.output
+      // copies of the rows up to and including the first past the budget
+      // (a physical plan's output rows are UnsafeRows, as
+      // SparkPlan.getByteArrayRdd assumes)
+      val upTo: Iterator[InternalRow] => Iterator[UnsafeRow] = it => {
+        var used = 0L
+        it.map(_.asInstanceOf[UnsafeRow].copy())
+          .takeWhile { r => val under = used <= budget; used += r.getSizeInBytes; under }
+      }
+      val sc = ds.sparkSession.sparkContext
+      // the fitting rows as one (size, bytes)* buffer, as Dataset.collect
+      // ships them: one object per task result, not one per row
+      val got = SQLExecution.withNewExecutionId(qe, Some("collectUnder")) {
+        val parts = qe.toRdd.mapPartitions[InternalRow](upTo)
+        val one = if (parts.getNumPartitions <= 1) parts else new ShuffledRowRDD(
+          ShuffleExchangeExec.prepareShuffleDependency(parts, out, SinglePartition,
+            new UnsafeRowSerializer(out.length, null),
+            SQLShuffleWriteMetricsReporter.createShuffleWriteMetrics(sc)),
+          SQLShuffleReadMetricsReporter.createShuffleReadMetrics(sc))
+        sc.runJob(one, (it: Iterator[InternalRow]) => {
+          val buf = new ByteArrayOutputStream()
+          val data = new DataOutputStream(buf)
+          val copyBuf = new Array[Byte](4096)
+          var used = 0L
+          upTo(it).foreach { r =>
+            used += r.getSizeInBytes
+            data.writeInt(r.getSizeInBytes)
+            r.writeToStream(data, copyBuf)
+          }
+          if (used <= budget) Some(buf.toByteArray) else None
+        }).headOption.getOrElse(Some(Array.emptyByteArray))
+      }
+      val fromRow = encoderFor(ds.encoder).resolveAndBind(qe.analyzed.output)
+        .createDeserializer()
+      got.map { bytes =>
+        val sizes = ByteBuffer.wrap(bytes)
+        val row = new UnsafeRow(out.length)
+        val rows = ArrayBuffer.empty[T]
+        var at = 0
+        while (at < bytes.length) {
+          val n = sizes.getInt(at)
+          row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + at + 4, n)
+          rows += fromRow(row) // the deserializer copies out of `bytes`
+          at += 4 + n
+        }
+        rows.toArray(ds.encoder.clsTag)
+      }
     }
 
-  /** The live generation's rows when its row count, read from the round's
-    * own stats, is at most `cap`: one action over its checkpoint. */
-  def handoff[T](gen: Dataset[T], rows: Long, cap: Long): Option[Array[T]] =
-    if (rows <= cap) Some(gen.collect()) else None
+  /** The live generation's rows when `bytes` (its row count from the
+    * round's own stats, times the row size) fits `budget`: one action
+    * over its checkpoint. */
+  def handoff[T](gen: Dataset[T], bytes: Long, budget: Long): Option[Array[T]] =
+    if (bytes <= budget) Some(gen.collect()) else None
 
   /** Drop a generation's checkpoint blocks. */
   private def release(gen: DataFrame): Unit =

@@ -1605,7 +1605,7 @@ object Similarity {
     * engines walk the identical greedy trajectory (oracle = unrolled
     * K-round CTE chain; the kmeans treatment). Cost: K·n dot products,
     * LINEAR in the corpus. A corpus that fits the driver budget
-    * (graft.ops.Loop; the fixture's 500 64-dim vectors are ~140 KB) IS
+    * (graft.ops.Loop; the fixture's 500 64-dim vectors are ~150 KB) IS
     * collected, in one action, and the traversal runs on the driver. At
     * 100 TB each round is ONE pass over the cached state against the
     * broadcast last pick (vectors never shuffle) ending in a
@@ -1624,31 +1624,27 @@ object Similarity {
     * e2Kcenter passes `_ => false`. Exhaustion (fewer than maxK distinct
     * vectors) degrades to fewer picks.
     *
-    * Where it runs (graft.ops.Loop): a one-row probe reads the vector
-    * length, which sets the width of a state row (4·dim + 24 B); when the
-    * corpus fits the driver budget it is collected in ONE action with the
-    * seed key alongside, and the traversal runs on the driver
-    * (kcenterDriver). Otherwise every round is one corpus-sized pass over
-    * the cached state (kcenterDistributed). The state only shrinks by one
-    * row a round, so a corpus over the budget stays distributed. */
+    * Where it runs (graft.ops.Loop): when the corpus fits the driver
+    * budget (a 64-dim row is 304 B as a Spark row) it is collected in
+    * ONE Spark job with the seed key alongside, and the traversal runs
+    * on the driver (kcenterDriver). Otherwise every round is one
+    * corpus-sized pass over the cached state (kcenterDistributed). The
+    * state only shrinks by one row a round, so a corpus over the budget
+    * stays distributed. */
   private def kcenterPicks(s: SparkSession, d: String, maxK: Int,
       stop: Double => Boolean): Vector[(Long, Long, Option[Double])] =
-    kcenterPicks(embeddings(s, d), maxK, stop, distributed = false)
+    kcenterPicks(embeddings(s, d), maxK, stop, Loop.DriverBytes)
 
+  /** kcenterPicks with the driver budget given (Loop.ForceDistributed
+    * forces the distributed rounds). */
   private[graft] def kcenterPicks(emb: DataFrame, maxK: Int,
-      stop: Double => Boolean, distributed: Boolean): Vector[(Long, Long, Option[Double])] = {
+      stop: Double => Boolean, budget: Long): Vector[(Long, Long, Option[Double])] = {
     val spark = emb.sparkSession
     import spark.implicits._
     val e = emb.select(col("vec_id"), col("embedding"),
       org.apache.spark.sql.graftext.minhashExpression
         .mix64(col("vec_id").bitwiseXOR(lit(KcenterSalt))).as("m"))
-    val cap = if (distributed) -1L else {
-      val dim = e.select(size(col("embedding"))).limit(1).collect()
-        .collectFirst { case r if !r.isNullAt(0) => math.max(r.getInt(0), 0) }
-        .getOrElse(0)
-      Loop.rowCap(4L * dim + 24, distributed = false)
-    }
-    Loop.collectUnder(e.as[(Long, Array[Float], Long)], cap)
+    Loop.collectUnder(e.as[(Long, Array[Float], Long)], budget)
       .fold(kcenterDistributed(withNorm(e), maxK, stop))(kcenterDriver(_, maxK, stop))
   }
 

@@ -128,9 +128,11 @@ class AnalysisSpec extends AnyFunSuite {
       pairs: Seq[(Option[Long], Option[Long])], tol: Double): Int = {
     val (truth, k) = prReplica(pairs, tol, 60)
     assert(k < 60, "graph must converge before the cap")
-    for (distributed <- Seq(false, true)) withClue(s"distributed=$distributed: ") {
-      val (df, iters) = Analysis.pageRankConverged(pairsDf, tol, 60, distributed)
+    for ((path, budget) <- Seq("driver" -> Loop.DriverBytes,
+        "distributed" -> Loop.ForceDistributed)) withClue(s"$path: ") {
+      val (df, iters) = Analysis.pageRankConverged(pairsDf, tol, 60, budget)
       assert(iters == k, s"loop stopped at $iters, truth is $k")
+      assert(df.schema("doc_id").dataType == org.apache.spark.sql.types.LongType)
       val got = ranksOf(df)
       assert(got.keySet == truth.keySet)
       truth.foreach { case (v, t) =>
@@ -187,7 +189,7 @@ class AnalysisSpec extends AnyFunSuite {
     import spark.implicits._
     val pairs = Dedup.minhashPairTable(spark, TestSpark.sf001)
     val drv = ranksOf(Analysis.e9Pagerank(spark, TestSpark.sf001))
-    val dist = ranksOf(Analysis.pageRankFixed(pairs, distributed = true))
+    val dist = ranksOf(Analysis.pageRankFixed(pairs, Loop.ForceDistributed))
     val (truth, k) = prReplica(some(pairs.as[(Long, Long)].collect().toSeq),
       Double.NegativeInfinity, Analysis.PrIters)
     assert(k == Analysis.PrIters)
@@ -199,7 +201,7 @@ class AnalysisSpec extends AnyFunSuite {
     }
   }
 
-  test("pageRankConverged on both paths: empty, random, self-loops, null endpoints, duplicates") {
+  test("pageRankConverged on both paths: empty, random, int-typed, self-loops, null endpoints, duplicates") {
     import spark.implicits._
     val tol = 1e-4
     val empty = Seq.empty[(Option[Long], Option[Long])]
@@ -217,6 +219,10 @@ class AnalysisSpec extends AnyFunSuite {
       (Some(2L), Some(2L)), (Some(3L), Some(3L)), // self-loops
       (Some(2L), Some(4L)), (None, Some(4L)), (Some(5L), None), (None, None))
     assertConvergedMatches(odd.toDF("da", "db"), odd, tol)
+    // an int-typed edge list: both paths read it and return bigint ids
+    val ints = Seq((1, 2), (2, 3), (3, 1), (3, 4), (4, 5))
+    assertConvergedMatches(ints.toDF("da", "db"),
+      some(ints.map { case (a, b) => (a.toLong, b.toLong) }), tol)
   }
 
   test("e8_transitions: probabilities row-normalize to 1 per from_type") {

@@ -30,7 +30,7 @@ class DedupStarSpec extends AnyFunSuite {
   private def vertsDf(n: Long): DataFrame =
     (0L until n).toDF("doc_id")
 
-  private val distributed = Loop.rowCap(Loop.EdgeBytes, distributed = true)
+  private val distributed = Loop.ForceDistributed
 
   /** Union-find over a plain map, each root its component's minimum.
     * Pairs with a null endpoint and self-loops add nothing; the vertices
@@ -114,7 +114,7 @@ class DedupStarSpec extends AnyFunSuite {
 
   test("distributed rounds hand off to the driver finish once the edges fit") {
     // Six 8-cliques (168 edges), two pairs of them bridged: 4 components,
-    // whose stars need only 44 edges. A 60-row cap starts distributed and
+    // whose stars need only 44 edges. A 60-edge budget starts distributed and
     // hands the live edges to union-find once a round has shrunk them.
     val edges = (for (c <- 0L until 6L; i <- 0L until 8L; j <- i + 1 until 8L)
       yield (c * 100 + i, c * 100 + j)) ++ Seq((7L, 100L), (207L, 300L))
@@ -123,7 +123,7 @@ class DedupStarSpec extends AnyFunSuite {
     val (all, fullRounds) =
       Dedup.connectedComponentsStar(verts.toDF("doc_id"), pairsDf(edges), distributed)
     val (handed, rounds) =
-      Dedup.connectedComponentsStar(verts.toDF("doc_id"), pairsDf(edges), 60L)
+      Dedup.connectedComponentsStar(verts.toDF("doc_id"), pairsDf(edges), 60 * Loop.EdgeBytes)
     assert(labelsOf(all) == truth && labelsOf(handed) == truth)
     assert(rounds >= 1 && rounds < fullRounds,
       s"handoff after $rounds of $fullRounds rounds")

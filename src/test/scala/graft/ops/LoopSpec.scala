@@ -28,13 +28,38 @@ class LoopSpec extends AnyFunSuite {
     assert(!persisted().contains(rddId(g1)))
   }
 
-  test("collectUnder is the size check and the fetch; a negative cap skips it") {
+  test("collectUnder is the size check and the fetch, in Spark row bytes; a negative budget skips it") {
     import spark.implicits._
-    val ds = spark.range(10).as[Long]
-    assert(Loop.collectUnder(ds, 10).map(_.toSeq.sorted) == Some(0L until 10L))
-    assert(Loop.collectUnder(ds, 9).isEmpty)
-    assert(Loop.collectUnder(ds, Loop.rowCap(Loop.EdgeBytes, distributed = true)).isEmpty)
-    assert(Loop.rowCap(Loop.EdgeBytes, distributed = false) == Loop.DriverBytes / 16)
+    // (long, long) rows: Loop.EdgeBytes each, the size the handoff assumes
+    val ds = spark.range(0, 10, 1, 3).select(col("id"), col("id") * 2).as[(Long, Long)]
+    assert(Loop.collectUnder(ds, 10 * Loop.EdgeBytes).map(_.toSeq.sorted) ==
+      Some((0L until 10L).map(i => (i, 2 * i))))
+    assert(Loop.collectUnder(ds, 10 * Loop.EdgeBytes - 1).isEmpty)
+    // variable-width rows count their data: "" is 16 B, "abcdefgh" 24 B
+    val strs = Seq("", "abcdefgh").toDS()
+    assert(Loop.collectUnder(strs, 40).map(_.toSeq.sorted) == Some(Seq("", "abcdefgh")))
+    assert(Loop.collectUnder(strs, 39).isEmpty)
+    assert(Loop.collectUnder(spark.range(0).as[Long], 0).map(_.toSeq) == Some(Nil))
+    assert(Loop.collectUnder(spark.range(0).as[Long], Loop.ForceDistributed).isEmpty)
+  }
+
+  test("the size check is one job whose input stage keeps its partitions") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // one long column: 16 B a row
+    for (budget <- Seq(16L * 1000, 16L * 999)) {
+      val group = s"loop-check-${System.nanoTime()}"
+      sc.setJobGroup(group, "size check")
+      val got =
+        try Loop.collectUnder(spark.range(0, 1000, 1, 4).as[Long], budget)
+        finally sc.clearJobGroup()
+      assert(got.map(_.toSeq.sorted) == (if (budget == 16000L) Some(0L until 1000L) else None))
+      val jobs = sc.statusTracker.getJobIdsForGroup(group)
+      assert(jobs.length == 1, s"${jobs.length} jobs")
+      val tasks = sc.statusTracker.getJobInfo(jobs.head).get.stageIds.toSeq
+        .flatMap(sc.statusTracker.getStageInfo(_)).map(_.numTasks).sorted
+      assert(tasks == Seq(1, 4), s"stage task counts $tasks")
+    }
   }
 
   /** Spark jobs of one execution of `name`, built and written in full to
@@ -52,7 +77,7 @@ class LoopSpec extends AnyFunSuite {
   // On the fixture each query finishes on the driver, so its job count is
   // a property of the plan, not of a round count: it must repeat exactly
   // and stay well below the per-round loops' 17–33 jobs.
-  for ((name, bound) <- Seq("e1_dedup_clusters_star" -> 6, "e2_kcenter" -> 5,
+  for ((name, bound) <- Seq("e1_dedup_clusters_star" -> 6, "e2_kcenter" -> 4,
       "e9_pagerank" -> 4))
     test(s"$name runs at most $bound Spark jobs, the same count every time") {
       jobs(name) // the first execution pays the session's memo builds

@@ -178,8 +178,8 @@ class Round10OpsSpec extends AnyFunSuite {
       stop: Double => Boolean): Vector[(Long, Long, Option[Double])] = {
     def bits(p: Vector[(Long, Long, Option[Double])]) =
       p.map { case (k, id, ms) => (k, id, ms.map(java.lang.Double.doubleToLongBits)) }
-    val drv = Similarity.kcenterPicks(emb, maxK, stop, distributed = false)
-    val dist = Similarity.kcenterPicks(emb, maxK, stop, distributed = true)
+    val drv = Similarity.kcenterPicks(emb, maxK, stop, Loop.DriverBytes)
+    val dist = Similarity.kcenterPicks(emb, maxK, stop, Loop.ForceDistributed)
     assert(bits(drv) == bits(dist), s"driver $drv vs distributed $dist")
     drv
   }

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Compare two traced perfbench runs: counters first, then CPU, then wall.
 
-    python3 tools/counter_diff.py <before.txt> <after.txt> [--wall-tol 0.2] [--cpu-tol 0.2]
+    python3 tools/counter_diff.py <before.txt> <after.txt>
 
 Each input is the standard output of
 `python3 perfbench/run.py --workload <w> --seed <n> --seconds <s> --trace 1`.
@@ -9,10 +9,10 @@ Each input is the standard output of
 The per-op deterministic counters (Spark jobs, stages, tasks, output rows,
 store calls...) repeat exactly for one program on one input, so they are
 compared exactly and decide first. Task CPU time is compared next, as the
-run-level `ops.task_cpu_s` median, within `--cpu-tol`. Wall time comes
+run-level `ops.task_cpu_s` median, within CPU_TOL. Wall time comes
 last: per op, the `query_s_median_by_name` medians (query_mix), and the
 run's `trace.op_s_p50`. Every op whose wall time moved by more than
-`--wall-tol` is labelled:
+WALL_TOL is labelled:
 
   counters    its counters changed: the program did different work
   cpu         its counters held but the run's task CPU moved
@@ -26,6 +26,12 @@ import ast
 import json
 import re
 import sys
+
+
+# Relative moves beyond these count as moved: above the 10-20% a single
+# query's wall swings between two runs of one program on a shared host.
+WALL_TOL = 0.2
+CPU_TOL = 0.2
 
 
 def parse(path):
@@ -62,14 +68,12 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("before")
     ap.add_argument("after")
-    ap.add_argument("--wall-tol", type=float, default=0.2)
-    ap.add_argument("--cpu-tol", type=float, default=0.2)
     a = ap.parse_args()
 
     c0, l0, w0 = parse(a.before)
     c1, l1, w1 = parse(a.after)
     cpu0, cpu1 = l0.get("ops.task_cpu_s"), l1.get("ops.task_cpu_s")
-    cpu_moved = moved(cpu0, cpu1, a.cpu_tol)
+    cpu_moved = moved(cpu0, cpu1, CPU_TOL)
     print(f"run task CPU (ops.task_cpu_s median): {cpu0} -> {cpu1} s"
           f"{' MOVED' if cpu_moved else ''}")
     p0, p1 = l0.get("trace.op_s_p50"), l1.get("trace.op_s_p50")
@@ -84,7 +88,7 @@ def main():
                 for k in sorted(set(c0[op]) | set(c1[op]))
                 if c0[op].get(k) != c1[op].get(k)}
         t0, t1 = w0.get(op), w1.get(op)
-        wall = moved(t0, t1, a.wall_tol)
+        wall = moved(t0, t1, WALL_TOL)
         if not diff and not wall:
             unchanged.append(op)
             continue
