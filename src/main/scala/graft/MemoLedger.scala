@@ -1,21 +1,14 @@
 package graft
 
-/** Session-lifetime accounting for the per-(session, corpus) memo tables
-  * (round 15, r14-verdict task 6 + advisor note): the bench's warm-rep
-  * protocol means a shared memo's BUILD lands in no measured rep of any
-  * query — per-query medians for memo-backed queries price a checkpoint
-  * read, not the build. That is the declared deployment shape (a corpus
-  * pipeline materializes its ground-truth artifacts once), but the
-  * artifact must say so in numbers: builders wrap their computeIfAbsent
-  * bodies in [[timed]] (which also FORCES materialization, so the stamped
-  * seconds are the real build, not plan construction), accessors call
-  * [[touch]] so every memo-backed query is identifiable, and Bench stamps
-  * the ledger into its JSON as `memo_builds` (memo → seconds + the query
-  * charged) and `memo_backed` (query → memos it reads). Pure bookkeeping:
-  * no query plan changes, no timed-loop changes.
+/** Build and read accounting for the session memos ([[Memo]]). Bench runs
+  * each query warm, so a shared memo's build lands in no measured rep, and
+  * a memo-backed query's median prices a checkpoint read. The ledger
+  * says so in numbers: the seconds of each build (memo and corpus dir →
+  * seconds and the query charged) and which queries read which memo.
+  * Bench stamps them into its JSON as `memo_builds` and `memo_backed`;
+  * perfbench reports them as `memo.*`. Pure bookkeeping: no plan changes.
   *
-  * NOT cross-run state: the ledger (like every memo it describes) is
-  * JVM-local and dies with the process. */
+  * JVM-local, like the memos it describes. */
 object MemoLedger {
   final case class Build(sec: Double, chargedQuery: String)
 
@@ -32,12 +25,11 @@ object MemoLedger {
     * any driver wanting attribution) around each query; "" outside. */
   @volatile var currentQuery: String = ""
 
-  /** Times `body` (a memo build that materializes eagerly by itself, e.g.
-    * a corpus count or an eager checkpoint) and files it under
+  /** Times `body` (a build that materializes eagerly) and files it under
     * (`name`, `dir`), charged to the query active at build time.
-    * putIfAbsent so a rebuild after clearMemos keeps the FIRST (cold)
-    * cost — the number the warm-rep accounting hides. */
-  def timed[T](name: String, dir: String)(body: => T): T = {
+    * putIfAbsent, so a rebuild in a later session keeps the first (cold)
+    * cost, the number the warm-rep accounting hides. */
+  private[graft] def timed[T](name: String, dir: String)(body: => T): T = {
     val t0 = System.nanoTime()
     val r = body
     builds.putIfAbsent((name, dir),
@@ -45,26 +37,8 @@ object MemoLedger {
     r
   }
 
-  /** [[timed]] for the common lazily-checkpointed DataFrame memos. When a
-    * query is under attribution (Bench sets [[currentQuery]]), the build
-    * is FORCED with a count — the checkpoint barrier stops column
-    * pruning, so every partition's full rows land in the block store and
-    * the stamped seconds are the real build, not plan construction; the
-    * forcing happens inside the first toucher's (unmeasured) warm rep,
-    * exactly where the lazy build always landed anyway. Outside
-    * attribution (Plans dump, tests, library use) the memo stays LAZY —
-    * constructing a query to print its plan stays free of Spark jobs,
-    * the documented property of these caches — and nothing is stamped
-    * (a lazy build's body only constructs the plan; stamping it would
-    * file milliseconds as the build cost). */
-  def timedDF(name: String, dir: String)
-      (body: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    if (currentQuery.isEmpty) body
-    else timed(name, dir) { val df = body; df.count(); df }
-
   /** Records that the active query consumes memo `name`. */
-  def touch(name: String): Unit = {
+  private[graft] def touch(name: String): Unit = {
     val q = currentQuery
     if (q.nonEmpty)
       reads.computeIfAbsent(name,

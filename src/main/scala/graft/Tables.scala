@@ -18,14 +18,11 @@ object Tables {
     * every call, so an un-memoized reader makes QUERY CONSTRUCTION launch
     * Spark jobs (one per table touched) every time the query map is
     * traversed. The fixture tables are immutable inputs, so the base
-    * DataFrame (plans are immutable, reuse is free) is cached per
-    * (session, path) — construction after first touch is job-free, the
-    * same property a catalog with known schemas gives a real deployment. */
-  private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    * DataFrame is a session [[Memo]] (no ledger entry): construction after
+    * first touch is job-free, the same property a catalog with known
+    * schemas gives a real deployment. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    tableCache.computeIfAbsent((spark, s"$dir/$name.parquet"),
-      key => key._1.read.parquet(key._2))
+    Memo.get(spark, s"$name.parquet", dir)(spark.read.parquet(s"$dir/$name.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

@@ -44,29 +44,6 @@ object Dedup {
     * sf0.1), so results are unchanged; at 100 TB this bounds the join. */
   val MaxShingleDf = 256
 
-  /** (doc_id, h) shingle-hash rows with hot shingles removed, MATERIALIZED
-    * once (localCheckpoint): every consumer references this table 2-4
-    * times (self-join sides, df counts, set sizes), and without
-    * materialization each reference re-scans documents and re-shingles the
-    * corpus. Dedup pipelines at scale always persist the exploded shingle
-    * table before the pairwise stage — on a cluster this is persist(DISK)/
-    * a checkpoint; in-process it is a local checkpoint. Also truncates
-    * lineage for the cluster-propagation loop built on top. The hot list
-    * is tiny by construction → broadcast anti join, no extra shuffle of
-    * the big side beyond the df count. */
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Drops the per-(session, corpus) shingle and pair memos — see
-    * Similarity.clearMemos for the shared immutable-corpus-path
-    * assumption these caches live under (no invalidation: a corpus dir
-    * is a write-once snapshot; sweep drivers that churn paths clear
-    * between points). */
-  def clearMemos(): Unit = {
-    shingleCache.clear(); pairCache.clear(); interCache.clear()
-    srcShingleCache.clear(); clusterCache.clear()
-  }
-
   /** Per-(session, corpus) memo of the EXACT co-occurrence intersection
     * counts (da < db, i = |A∩B|, na, nb over the df-capped shingle sets) —
     * the Σdf² ground-truth pair stage that e1_ngram_jaccard,
@@ -75,15 +52,9 @@ object Dedup {
     * SAME can't-drift argument as minhashPairTable and the e2
     * exactSampleTruth memo: every audit must score against the one
     * ground truth, and a deployment materializes the verified pair
-    * table once per corpus release, then fans the audits out from it).
-    * Same IMMUTABLE-CORPUS-PATH assumption as the other memos. */
-  private val interCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private[ops] def shingleInterCounts(s: SparkSession, d: String): DataFrame = {
-    graft.MemoLedger.touch("pair_intersections")
-    interCache.computeIfAbsent((s, d), _ =>
-      graft.MemoLedger.timedDF("pair_intersections", d) {
+    * table once per corpus release, then fans the audits out from it). */
+  private[ops] def shingleInterCounts(s: SparkSession, d: String): DataFrame =
+    graft.Memo.df("pair_intersections", s, d) {
       val sh = rareShingleHashes(s, d)
       val sz = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
       sh.as("a")
@@ -94,30 +65,29 @@ object Dedup {
         .join(sz.select(col("doc_id").as("da"), col("n").as("na")), "da")
         .join(sz.select(col("doc_id").as("db"), col("n").as("nb")), "db")
         .localCheckpoint(false)
-    })
-  }
+    }
 
-  private[ops] def rareShingleHashes(s: SparkSession, d: String): DataFrame = {
-    // Memoized per (session, corpus): FIVE declared queries (jaccard,
-    // minhash, clusters, contamination, and the pipeline example) derive
-    // from this table, and without the cache each one re-shingles the
-    // corpus into its own checkpoint. A real pipeline materializes the
-    // shingle table once per corpus and fans every dedup stage out from
-    // it — this is that, in-process.
-    graft.MemoLedger.touch("shingle_table")
-    shingleCache.computeIfAbsent((s, d), _ =>
-      graft.MemoLedger.timedDF("shingle_table", d) {
+  /** (doc_id, h) shingle-hash rows with hot shingles removed, MATERIALIZED
+    * once (localCheckpoint): every consumer references this table 2-4
+    * times (self-join sides, df counts, set sizes), and without
+    * materialization each reference re-scans documents and re-shingles the
+    * corpus. Dedup pipelines at scale always persist the exploded shingle
+    * table before the pairwise stage — on a cluster this is persist(DISK)/
+    * a checkpoint; in-process it is a local checkpoint. Also truncates
+    * lineage for the cluster-propagation loop built on top. The hot list
+    * is tiny by construction → broadcast anti join, no extra shuffle of
+    * the big side beyond the df count. Memoized per (session, corpus):
+    * FIVE declared queries (jaccard, minhash, clusters, contamination, and
+    * the pipeline example) derive from this table, and a real pipeline
+    * materializes it once per corpus and fans every dedup stage out from
+    * it. */
+  private[ops] def rareShingleHashes(s: SparkSession, d: String): DataFrame =
+    graft.Memo.df("shingle_table", s, d) {
       val sh = shingleHashes(s, d)
       val hot = sh.groupBy("h").agg(count(lit(1)).as("df"))
         .filter(col("df") > MaxShingleDf).select("h")
-      // LAZY checkpoint: materializes on the first action and is reused by
-      // every later reference, but merely CONSTRUCTING the query (e.g. to
-      // print its plan) stays free of Spark jobs. (Under Bench attribution
-      // MemoLedger forces the build so its cost is stamped — see
-      // MemoLedger.timedDF.)
       sh.join(broadcast(hot), Seq("h"), "left_anti").localCheckpoint(false)
-    })
-  }
+    }
 
   /** The canonical content fingerprint: md5 of the normalized text. ONE
     * definition shared by the batch exact-dedup pass and the streaming
@@ -579,18 +549,12 @@ object Dedup {
     * such). The components pass (its size check and any per-round
     * actions) therefore runs once per session, not once per consumer
     * execution. */
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private[ops] def dedupClusterTable(s: SparkSession, d: String): DataFrame = {
-    graft.MemoLedger.touch("dedup_cluster_table")
-    clusterCache.computeIfAbsent((s, d), _ =>
-      graft.MemoLedger.timedDF("dedup_cluster_table", d) {
-        connectedComponentsStar(
-          documents(s, d).select(col("doc_id")), minhashPairTable(s, d))._1
-          .localCheckpoint(false)
-      })
-  }
+  private[ops] def dedupClusterTable(s: SparkSession, d: String): DataFrame =
+    graft.Memo.df("dedup_cluster_table", s, d) {
+      connectedComponentsStar(
+        documents(s, d).select(col("doc_id")), minhashPairTable(s, d))._1
+        .localCheckpoint(false)
+    }
 
   /** Near-dup pair table (da, db), materialized once per corpus (lazy
     * localCheckpoint) like the shingle table it derives from: the cluster
@@ -604,16 +568,10 @@ object Dedup {
     * quadratic in duplication density — it is the small-scale verifier,
     * the LSH table is what a pipeline ships at 100 TB). Oracle-exact:
     * the DuckDB side replicates signature + banding + verification. */
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private[ops] def minhashPairTable(s: SparkSession, d: String): DataFrame = {
-    graft.MemoLedger.touch("minhash_pair_table")
-    pairCache.computeIfAbsent((s, d), _ =>
-      graft.MemoLedger.timedDF("minhash_pair_table", d) {
-        e1MinhashPairs(s, d).select(col("da"), col("db"))
-          .localCheckpoint(false)
-      })
-  }
+  private[ops] def minhashPairTable(s: SparkSession, d: String): DataFrame =
+    graft.Memo.df("minhash_pair_table", s, d) {
+      e1MinhashPairs(s, d).select(col("da"), col("db")).localCheckpoint(false)
+    }
 
   /** Cluster-durable variant of the pair-table memo: write the LSH
     * near-dup pair table ONCE to `path` (skipped when the table already
@@ -624,9 +582,9 @@ object Dedup {
     * is this one: persist the pair table as a table, fan every downstream
     * stage (cluster resolution, keeper selection, curation, PageRank) out
     * from the table, and let a restarted run reuse it without re-running
-    * the pairwise stage. Write-once-if-absent mirrors the
-    * immutable-corpus-path discipline of the memos (see clearMemos); a
-    * recompute against a NEW corpus snapshot writes a new path. */
+    * the pairwise stage. Write-once-if-absent mirrors the write-once
+    * corpus dirs of the memos (graft.Memo); a recompute against a NEW
+    * corpus snapshot writes a new path. */
   def materializedPairTable(s: SparkSession, d: String, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1425,15 +1383,9 @@ object Dedup {
     * input both KMV queries sketch. Each execution referenced it 3-4
     * times lazily (sizes, the intersection self-join sides, the sketch
     * rank), re-running the join+distinct per reference; a deployment
-    * persists the per-source shingle table once next to the sketches.
-    * Same immutable-corpus-path assumption as the other memos. */
-  private val srcShingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def sourceShingleTable(s: SparkSession, d: String): DataFrame = {
-    graft.MemoLedger.touch("source_shingle_table")
-    srcShingleCache.computeIfAbsent((s, d), _ =>
-      graft.MemoLedger.timedDF("source_shingle_table", d) {
+    * persists the per-source shingle table once next to the sketches. */
+  private def sourceShingleTable(s: SparkSession, d: String): DataFrame =
+    graft.Memo.df("source_shingle_table", s, d) {
       val two64 = math.pow(2, 64)
       rareShingleHashes(s, d)
         .join(documents(s, d).select(col("doc_id"), col("source")), "doc_id")
@@ -1443,8 +1395,7 @@ object Dedup {
         .withColumn("ud", when(col("h") < 0, col("h").cast("double") + two64)
           .otherwise(col("h").cast("double")))
         .localCheckpoint(false)
-    })
-  }
+    }
 
   def e1KmvUnion(s: SparkSession, d: String): DataFrame = {
     val K = KmvK

@@ -406,11 +406,6 @@ object Multimodal {
     * profiles — rather than half the cell. */
   val NeardupSimThreshold = 0.9999
 
-  /** Corpus row count memo (IVF grid sizing), as in Similarity.countOnce:
-    * one count per (session, corpus), never re-run on query construction. */
-  private val docCount =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-
   /** E5 — near-duplicate media detection: the multimodal analogue of the
     * e1 dedup family, run over the e5 feature VECTORS through the same IVF
     * index shape as e2_ann_ivf (the blob → features → ANN bridge a real
@@ -445,12 +440,9 @@ object Multimodal {
     val v = bandVectors(s, d).toDF()
       .withColumn("nrm", graft.functions.Vectors.l2NormD(col("vec")))
       .filter(col("nrm") > 0)
-    graft.MemoLedger.touch("media_corpus_count")
+    // corpus row count (IVF grid sizing), as in Similarity.countOnce
     val nCells = Similarity.ivfCells(
-      docCount.computeIfAbsent((s, d),
-        _ => graft.MemoLedger.timed("media_corpus_count", d) {
-          java.lang.Long.valueOf(documents(s, d).count())
-        }).longValue())
+      graft.Memo.value("media_corpus_count", s, d)(documents(s, d).count()))
     val seeds = v
       .orderBy(org.apache.spark.sql.graftext.minhashExpression
         .mix64(col("doc_id")), col("doc_id"))

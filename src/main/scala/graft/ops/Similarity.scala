@@ -40,13 +40,8 @@ object Similarity {
     * table a verification run materializes. The quadratic pairwise pass
     * (the reason this family carries the ≥100× ScaleProbe exclusion)
     * runs once per session, not once per consumer execution. */
-  private val cosTopkCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def labelExactTop3(s: SparkSession, d: String): DataFrame = {
-    graft.MemoLedger.touch("label_exact_top3")
-    cosTopkCache.computeIfAbsent((s, d), _ =>
-      graft.MemoLedger.timedDF("label_exact_top3", d) {
+  private def labelExactTop3(s: SparkSession, d: String): DataFrame =
+    graft.Memo.df("label_exact_top3", s, d) {
       val e = withNorm(embeddings(s, d))
       val w = Window.partitionBy("vec_id")
         .orderBy(col("sim").desc, col("other_id"))
@@ -62,8 +57,7 @@ object Similarity {
         .select(col("vec_id"), asLong(col("rn")).as("rn"),
           col("other_id"), round(col("sim"), 4).as("sim"))
         .localCheckpoint(false)
-    })
-  }
+    }
 
   /** The 12-bit hyperplane LSH signature table (vec_id, label, embedding,
     * nrm, bucket), memoized per (session, corpus) — round 15 (r14-verdict
@@ -71,22 +65,15 @@ object Similarity {
     * re-ran the signature pass per execution — TWICE per execution, once
     * per join side — while the IVF legs of the e2_ann_pareto scoreboard
     * read the assignment memo; this is the i2-analogue for the LSH index
-    * (the signature table IS the index content a deployment persists).
-    * Same immutable-corpus-path assumption as the other memos. */
-  private val lshSigCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def lshSigTable(s: SparkSession, d: String): DataFrame = {
-    graft.MemoLedger.touch("lsh_sig_table")
-    lshSigCache.computeIfAbsent((s, d), _ =>
-      graft.MemoLedger.timedDF("lsh_sig_table", d) {
-        withNorm(embeddings(s, d))
-          .withColumn("bucket",
-            org.apache.spark.sql.graftext.hyperplaneExpression
-              .hyperplaneSig(col("embedding"), 12))
-          .localCheckpoint(false)
-      })
-  }
+    * (the signature table IS the index content a deployment persists). */
+  private def lshSigTable(s: SparkSession, d: String): DataFrame =
+    graft.Memo.df("lsh_sig_table", s, d) {
+      withNorm(embeddings(s, d))
+        .withColumn("bucket",
+          org.apache.spark.sql.graftext.hyperplaneExpression
+            .hyperplaneSig(col("embedding"), 12))
+        .localCheckpoint(false)
+    }
 
   /** E2 — ANN via random-hyperplane LSH: 12-bit signatures bucket the
     * vectors; the top-1 neighbor is searched within the bucket only. The
@@ -159,17 +146,10 @@ object Similarity {
     * needs ONE count — index-build metadata, like a real IVF train phase —
     * but query CONSTRUCTION must not re-run a Spark job every time the
     * query map is traversed (Plans dump, SparkEntry.queries iteration).
-    * The cache bounds it to once per corpus per session; everything else
+    * The memo bounds it to once per corpus per session; everything else
     * about the query stays lazy. */
-  private val corpusCount =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-  private def countOnce(s: SparkSession, d: String, df: DataFrame): Long = {
-    graft.MemoLedger.touch("corpus_count")
-    corpusCount.computeIfAbsent((s, d), _ =>
-      graft.MemoLedger.timed("corpus_count", d) {
-        java.lang.Long.valueOf(df.count())
-      }).longValue()
-  }
+  private def countOnce(s: SparkSession, d: String, df: DataFrame): Long =
+    graft.Memo.value("corpus_count", s, d)(df.count())
 
   /** E2 — ANN via IVF (inverted file index): ceil(√n) coarse cells chosen
     * as the vectors with the smallest splitmix64(vec_id) — deterministic,
@@ -399,21 +379,14 @@ object Similarity {
     * assignment window per execution. The assignment IS the index
     * content (it is exactly what the i2 standing release persists per
     * corpus); audits of a built index read the built index — the
-    * pqCodeRows precedent. Same immutable-corpus-path assumption as the
-    * other memos; release builders (standingIvfIndex / knnEdgesPlan) keep
-    * their own in-plan derivation so the released artifacts stay
-    * self-contained. */
-  private val ivfAssignCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def ivfTop1Assignment(s: SparkSession, d: String): DataFrame = {
-    graft.MemoLedger.touch("ivf_top1_assignment")
-    ivfAssignCache.computeIfAbsent((s, d), _ =>
-      graft.MemoLedger.timedDF("ivf_top1_assignment", d) {
-        val e = withNorm(embeddings(s, d))
-        ivfAssigned(e, ivfSeeds(s, d, e), 1).localCheckpoint(false)
-      })
-  }
+    * pqCodeRows precedent. Release builders (standingIvfIndex /
+    * knnEdgesPlan) keep their own in-plan derivation so the released
+    * artifacts stay self-contained. */
+  private def ivfTop1Assignment(s: SparkSession, d: String): DataFrame =
+    graft.Memo.df("ivf_top1_assignment", s, d) {
+      val e = withNorm(embeddings(s, d))
+      ivfAssigned(e, ivfSeeds(s, d, e), 1).localCheckpoint(false)
+    }
 
   private def ivfSearch(s: SparkSession, d: String, nProbe: Int): DataFrame =
     ivfSearchFor(s, d, nProbe, None)
@@ -652,18 +625,11 @@ object Similarity {
     * immaterial). Plan: each scan's rank filter pushes down as a partial
     * WindowGroupLimit, so the exchanges carry per-partition top-3 rows,
     * never the 64·n candidate set; the query sample is a broadcast
-    * TakeOrdered. Same IMMUTABLE-CORPUS-PATH assumption as pqCodesCache
-    * (see that Scaladoc); [[clearMemos]] drops it. */
-  private val exactTruthCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private[ops] def exactSampleTruth(s: SparkSession, d: String): DataFrame = {
-    graft.MemoLedger.touch("exact_sample_truth")
-    exactTruthCache.computeIfAbsent((s, d),
-      _ => graft.MemoLedger.timedDF("exact_sample_truth", d) {
-        exactSampleTruthPlan(s, d).localCheckpoint(false)
-      })
-  }
+    * TakeOrdered. */
+  private[ops] def exactSampleTruth(s: SparkSession, d: String): DataFrame =
+    graft.Memo.df("exact_sample_truth", s, d) {
+      exactSampleTruthPlan(s, d).localCheckpoint(false)
+    }
 
   /** The un-memoized builder behind [[exactSampleTruth]] — separate so the
     * plan specs can assert the PRODUCING stage's shape (broadcast sample,
@@ -1291,11 +1257,9 @@ object Similarity {
   /** Release root for the STANDING kNN edge graph of a corpus dir. `g1`
     * names the build recipe (the i-recipe IVF assignment + in-cell
     * cosine top-[[KnnGraphK]], ties to the lower neighbor id) — bump on
-    * recipe change, like the IVF index's i-tag. Same [[corpusStamp]] +
-    * per-user-root staleness discipline. */
+    * recipe change, like the IVF index's i-tag. */
   private[graft] def knnGraphRoot(d: String): String =
-    s"/tmp/graft_knn_graph_${sys.props.getOrElse("user.name", "u")}/g1_" +
-      corpusStamp(d) + "_" + d.replaceAll("[^A-Za-z0-9._-]", "_")
+    standingRoot("knn_graph", "g1", d)
 
   /** The standing directed kNN edge table (vec_id, other_id): built once
     * and RELEASED via the Versioned atomic pointer (the i2 standing-index
@@ -1309,15 +1273,11 @@ object Similarity {
     * by vec_id so the per-round candidate fetch of a serving walk is an
     * id-pushdown range read, not a full scan. */
   private[graft] def standingKnnGraph(s: SparkSession, d: String): DataFrame = {
-    val root = knnGraphRoot(d)
-    if (Versioned.current(s, root).isEmpty)
-      graft.MemoLedger.timed("standing_knn_graph_build", d) {
-        Versioned.publishOnce(s, root) { dir =>
-          knnEdgesPlan(s, d).sortWithinPartitions("vec_id")
-            .write.parquet(dir + "/edges")
-        }
-      }
-    s.read.parquet(Versioned.currentPath(s, root) + "/edges")
+    val cur = publishStanding(s, knnGraphRoot(d), "standing_knn_graph_build", d) {
+      dir => knnEdgesPlan(s, d).sortWithinPartitions("vec_id")
+        .write.parquet(dir + "/edges")
+    }
+    s.read.parquet(cur + "/edges")
   }
 
   /** Directed KnnGraphK-NN edges (vec_id, other_id) and their MUTUAL
@@ -1334,19 +1294,14 @@ object Similarity {
     * same semi-join, and two of them eagerly checkpointed it per
     * EXECUTION; like the release it derives from, it is a build-once
     * artifact (≤ n·K 16-byte rows). */
-  private val mutKnnCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private[ops] def knnEdges(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    graft.MemoLedger.touch("mutual_knn_edges")
     val knn = standingKnnGraph(s, d)
-    val mut = mutKnnCache.computeIfAbsent((s, d), _ =>
-      graft.MemoLedger.timedDF("mutual_knn_edges", d) {
-        knn.join(
-          knn.select(col("other_id").as("vec_id"), col("vec_id").as("other_id")),
-          Seq("vec_id", "other_id"), "left_semi")
-          .localCheckpoint(false)
-      })
+    val mut = graft.Memo.df("mutual_knn_edges", s, d) {
+      knn.join(
+        knn.select(col("other_id").as("vec_id"), col("vec_id").as("other_id")),
+        Seq("vec_id", "other_id"), "left_semi")
+        .localCheckpoint(false)
+    }
     (knn, mut)
   }
 
@@ -1694,8 +1649,9 @@ object Similarity {
   /** The driver finish of kcenterPicks over (vec_id, embedding, seed key)
     * rows: the distributed rounds' arithmetic through the same native
     * folds (vectorExpressions.dotImpl/normImpl over UnsafeArrayData) and
-    * the same null, NaN and division-by-zero behavior as Spark's
-    * dot / (nrm · snrm). */
+    * the same null, NaN, ragged-length and division-by-zero behavior as
+    * Spark's dot / (nrm · snrm): vectors of different lengths have a null
+    * dot, so a null similarity, before the division is looked at. */
   private def kcenterDriver(rows: Array[(Long, Array[Float], Long)], maxK: Int,
       stop: Double => Boolean): Vector[(Long, Long, Option[Double])] = {
     import org.apache.spark.sql.graftext.vectorExpressions.{dotImpl, normImpl}
@@ -1705,7 +1661,8 @@ object Similarity {
       else org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(r._2))
     val nrm = vec.map(v => if (v == null) 0.0 else normImpl(v))
     def sim(i: Int, p: Int): Option[Double] =
-      if (vec(i) == null || vec(p) == null) None
+      if (vec(i) == null || vec(p) == null ||
+          vec(i).numElements() != vec(p).numElements()) None
       else {
         val den = nrm(i) * nrm(p)
         if (den != 0.0) Some(dotImpl(vec(i), vec(p)) / den)
@@ -2020,34 +1977,6 @@ object Similarity {
   // slice(b), (x, y) -> (x-y)*(x-y)), 0.0D, +))` HOF, without
   // materializing 2·PqM slice arrays per pair).
 
-  /** (vec_id, sub, code): each vector's nearest codeword per subspace
-    * (ties → lower codeword index). Candidates are scan-side rows against
-    * the broadcast codebook; the (vec_id, sub) argmin partial-combines
-    * map-side (the e2_vq_assign aggregate-argmin pattern), so the one
-    * exchange carries PqM compact rows per vector. */
-  /** IMMUTABLE-CORPUS-PATH ASSUMPTION (shared with Dedup's shingle/pair
-    * memos and corpusCount): keys are (session, corpus path) with no
-    * snapshot component, so a fixture directory rewritten in-place within
-    * a session would be served stale codes, and a long multi-corpus sweep
-    * retains every corpus's checkpoint blocks for the session lifetime.
-    * Both are deliberate — corpora here are write-once fixture dirs, as a
-    * production index build's input snapshot is — and sweep drivers that
-    * do churn paths (ScaleProbe between scale points) call
-    * [[clearMemos]] to drop the cached plans and their checkpoint
-    * blocks. */
-  private val pqCodesCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Drops this object's per-(session, corpus) memos (PQ codes table,
-    * corpus counts). The next query rebuilds them; existing DataFrames
-    * already handed out stay valid (checkpoint blocks are released by the
-    * session's ContextCleaner once unreferenced). */
-  def clearMemos(): Unit = {
-    pqCodesCache.clear(); corpusCount.clear(); exactTruthCache.clear()
-    abttResidualCache.clear(); ivfAssignCache.clear(); cosTopkCache.clear()
-    mutKnnCache.clear(); lshSigCache.clear()
-  }
-
   /** Per-(session, corpus) memo of e2_abtt's residual table
     * (vec_id, rd, rn): the top-PC direction (3 power scans) and the
     * scan-side residual projection run ONCE and checkpoint at corpus
@@ -2055,15 +1984,9 @@ object Similarity {
     * of every execution re-ran the power scans + residual compute —
     * 79 s PER EXECUTION at 1000× (5M vectors) in the r13 probe; with the
     * memo the build is a 95 s once-per-session term and every execution
-    * after reads it in 0.60 s. Same IMMUTABLE-CORPUS-PATH assumption as
-    * exactSampleTruth. */
-  private val abttResidualCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private[ops] def abttResiduals(s: SparkSession, d: String): DataFrame = {
-    graft.MemoLedger.touch("abtt_residuals")
-    abttResidualCache.computeIfAbsent((s, d), _ =>
-      graft.MemoLedger.timedDF("abtt_residuals", d) {
+    * after reads it in 0.60 s. */
+  private[ops] def abttResiduals(s: SparkSession, d: String): DataFrame =
+    graft.Memo.df("abtt_residuals", s, d) {
       val dir = topPcDirection(s, d) // 1-row (varr, lam)
       embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("ed"))
@@ -2079,18 +2002,19 @@ object Similarity {
         .select(col("vec_id"), col("rd"),
           graft.functions.Vectors.l2NormD(col("rd")).as("rn"))
         .localCheckpoint(false)
-    })
-  }
+    }
 
-  private def pqCodeRows(s: SparkSession, d: String): DataFrame = {
-    // Memoized per (session, corpus) with a LAZY checkpoint, like the dedup
-    // shingle table: codes, ADC search, and re-rank all consume this — and
-    // in a deployment the codes table is written ONCE as the index payload
-    // and scanned by every search after; recomputing the encode per query
-    // was 3× the encode cost across the PQ family in the bench.
-    graft.MemoLedger.touch("pq_codes")
-    pqCodesCache.computeIfAbsent((s, d), _ =>
-      graft.MemoLedger.timedDF("pq_codes", d) {
+  /** (vec_id, sub, code): each vector's nearest codeword per subspace
+    * (ties → lower codeword index). Candidates are scan-side rows against
+    * the broadcast codebook; the (vec_id, sub) argmin partial-combines
+    * map-side (the e2_vq_assign aggregate-argmin pattern), so the one
+    * exchange carries PqM compact rows per vector. Memoized per (session,
+    * corpus): codes, ADC search, and re-rank all consume this — and in a
+    * deployment the codes table is written ONCE as the index payload and
+    * scanned by every search after; recomputing the encode per query was
+    * 3× the encode cost across the PQ family in the bench. */
+  private def pqCodeRows(s: SparkSession, d: String): DataFrame =
+    graft.Memo.df("pq_codes", s, d) {
       embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("ed"))
         .join(broadcast(pqSeeds(s, d)))
@@ -2102,8 +2026,7 @@ object Similarity {
         .select(col("vec_id"), asLong(col("sub")).as("sub"),
           asLong(col("m.seed_idx")).as("code"))
         .localCheckpoint(false)
-    })
-  }
+    }
 
   /** E2 — PQ DISTORTION audit: per subspace, the mean squared
     * quantization error (each vector's distance to its NEAREST codeword
@@ -2229,11 +2152,9 @@ object Similarity {
 
   /** Release root for the STANDING PQ index (codes + codebook). `p1`
     * names the build recipe (splitmix codebook sample, per-subspace
-    * argmin codes, ties to the lower codeword); same [[corpusStamp]] +
-    * per-user-root staleness discipline as the i2/g1 releases. */
+    * argmin codes, ties to the lower codeword). */
   private[graft] def pqIndexRoot(d: String): String =
-    s"/tmp/graft_pq_index_${sys.props.getOrElse("user.name", "u")}/p1_" +
-      corpusStamp(d) + "_" + d.replaceAll("[^A-Za-z0-9._-]", "_")
+    standingRoot("pq_index", "p1", d)
 
   /** The standing PQ index — (codes, codebook): the codes table IS the
     * index payload (PqM one-byte codewords per vector, 32× smaller than
@@ -2243,15 +2164,11 @@ object Similarity {
     * identical ADC distances the build-per-job scan computes. */
   private[graft] def standingPqIndex(
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val root = pqIndexRoot(d)
-    if (Versioned.current(s, root).isEmpty)
-      graft.MemoLedger.timed("standing_pq_index_build", d) {
-        Versioned.publishOnce(s, root) { dir =>
-          pqSeeds(s, d).write.parquet(dir + "/codebook")
-          codesArr(s, d).write.parquet(dir + "/codes")
-        }
-      }
-    val cur = Versioned.currentPath(s, root)
+    val cur = publishStanding(s, pqIndexRoot(d), "standing_pq_index_build", d) {
+      dir =>
+        pqSeeds(s, d).write.parquet(dir + "/codebook")
+        codesArr(s, d).write.parquet(dir + "/codes")
+    }
     (s.read.parquet(cur + "/codes"), s.read.parquet(cur + "/codebook"))
   }
 
@@ -2339,8 +2256,7 @@ object Similarity {
     * root family from the serving index (i2), whose recipe covers the
     * full corpus. */
   private[graft] def ivfMaintRoot(d: String): String =
-    s"/tmp/graft_ivf_maint_${sys.props.getOrElse("user.name", "u")}/m1_" +
-      corpusStamp(d) + "_" + d.replaceAll("[^A-Za-z0-9._-]", "_")
+    standingRoot("ivf_maint", "m1", d)
 
   /** E2 — PUBLISH the maintained index as v+1: the step the round-13
     * maintenance family audited but never performed. e2_ivf_ingest
@@ -2363,31 +2279,25 @@ object Similarity {
   def e2IvfPublish(s: SparkSession, d: String): DataFrame = {
     val root = ivfMaintRoot(d)
     val (corpus, batch, _) = ivfIngestSplit(s, d)
-    if (Versioned.current(s, root).isEmpty)
-      graft.MemoLedger.timed("ivf_maint_v1_build", d) {
-        Versioned.publishOnce(s, root) { dir =>
-          val seeds = ivfIngestSplit(s, d)._3
-          seeds.write.parquet(dir + "/seeds")
-          ivfAssignedFold(corpus, seeds).select(col("vec_id"), col("cell"))
-            .write.parquet(dir + "/assign")
-        }
-      }
-    if (Versioned.current(s, root).contains(1))
-      graft.MemoLedger.timed("ivf_maint_v2_publish", d) {
-        Versioned.publishAfter(s, root, 1) { dir =>
-          // the frozen quantizer travels WITH the release: the batch is
-          // assigned against v1's persisted seeds (bit-identical to the
-          // build's — parquet round-trips exactly), and v2 carries them
-          // forward for the next delta
-          val seedsV1 = s.read.parquet(Versioned.path(root, 1) + "/seeds")
-          seedsV1.write.parquet(dir + "/seeds")
-          s.read.parquet(Versioned.path(root, 1) + "/assign")
-            .unionByName(ivfAssignedFold(batch, seedsV1)
-              .select(col("vec_id"), col("cell")))
-            .write.parquet(dir + "/assign")
-        }
-      }
-    val cur = Versioned.currentPath(s, root)
+    publishStanding(s, root, "ivf_maint_v1_build", d) { dir =>
+      val seeds = ivfIngestSplit(s, d)._3
+      seeds.write.parquet(dir + "/seeds")
+      ivfAssignedFold(corpus, seeds).select(col("vec_id"), col("cell"))
+        .write.parquet(dir + "/assign")
+    }
+    val cur = publishStanding(s, root, "ivf_maint_v2_publish", d, after = 1) {
+      dir =>
+        // the frozen quantizer travels WITH the release: the batch is
+        // assigned against v1's persisted seeds (bit-identical to the
+        // build's — parquet round-trips exactly), and v2 carries them
+        // forward for the next delta
+        val seedsV1 = s.read.parquet(Versioned.path(root, 1) + "/seeds")
+        seedsV1.write.parquet(dir + "/seeds")
+        s.read.parquet(Versioned.path(root, 1) + "/assign")
+          .unionByName(ivfAssignedFold(batch, seedsV1)
+            .select(col("vec_id"), col("cell")))
+          .write.parquet(dir + "/assign")
+    }
     val v1 = s.read.parquet(Versioned.path(root, 1) + "/assign")
       .groupBy("cell").agg(count(lit(1)).as("pop_v1"))
     val v2 = s.read.parquet(cur + "/assign")
@@ -2431,6 +2341,25 @@ object Similarity {
     java.lang.Long.toHexString(h)
   }
 
+  /** The root of a standing release: a per-user family dir (a fixed
+    * world-writable path is pre-plantable by another local user), then the
+    * recipe `tag`, the [[corpusStamp]] and the mangled corpus dir. The tag
+    * names the build recipe and layout; bump it when either changes. */
+  private def standingRoot(family: String, tag: String, d: String): String =
+    s"/tmp/graft_${family}_${sys.props.getOrElse("user.name", "u")}/${tag}_" +
+      corpusStamp(d) + "_" + d.replaceAll("[^A-Za-z0-9._-]", "_")
+
+  /** Publishes the next version of `root` through `write` when its pointer
+    * reads `after` (0: nothing released yet), once across threads and
+    * processes (Versioned.publishAfter), filing the build in the ledger as
+    * `build`. Returns the live version's directory. */
+  private def publishStanding(s: SparkSession, root: String, build: String,
+      d: String, after: Int = 0)(write: String => Unit): String = {
+    if (Versioned.current(s, root).getOrElse(0) == after)
+      graft.MemoLedger.timed(build, d)(Versioned.publishAfter(s, root, after)(write))
+    Versioned.currentPath(s, root)
+  }
+
   /** Release root for the STANDING IVF index of a corpus dir (the
     * Versioned layout — immutable vNNNNN snapshots + an atomic _CURRENT
     * pointer). `i2` is the index FORMAT tag: it names the exact build
@@ -2439,13 +2368,10 @@ object Similarity {
     * pmod(cell, [[IvfIndexBuckets]]) with the seed table persisted
     * alongside — the round-14 layout change that bumped i1 → i2) so a
     * future recipe change bumps the tag instead of silently serving a
-    * stale-format index. The root carries the [[corpusStamp]] and a
-    * per-user segment (a fixed world-writable path is pre-plantable by
-    * another local user). Test-visible (private[graft]) so specs pin
+    * stale-format index. Test-visible (private[graft]) so specs pin
     * the production path instead of duplicating the mangling. */
   private[graft] def ivfIndexRoot(d: String): String =
-    s"/tmp/graft_ivf_index_${sys.props.getOrElse("user.name", "u")}/i2_" +
-      corpusStamp(d) + "_" + d.replaceAll("[^A-Za-z0-9._-]", "_")
+    standingRoot("ivf_index", "i2", d)
 
   /** The standing IVF index for a corpus dir — (assignment, seeds):
     * build-and-RELEASE once under the [[Versioned.publishOnce]] lock
@@ -2466,21 +2392,17 @@ object Similarity {
     * the identical values the build computed. */
   private[graft] def standingIvfIndex(
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val root = ivfIndexRoot(d)
-    if (Versioned.current(s, root).isEmpty)
-      graft.MemoLedger.timed("standing_ivf_index_build", d) {
-        Versioned.publishOnce(s, root) { dir =>
-          val e = withNorm(embeddings(s, d))
-          val seeds = ivfSeeds(s, d, e)
-          seeds.write.parquet(dir + "/seeds")
-          ivfAssigned(e, seeds, 1)
-            .select(col("vec_id"), col("cell"), col("embedding"), col("nrm"),
-              pmod(col("cell"), lit(IvfIndexBuckets.toLong)).cast("int")
-                .as("pcell"))
-            .write.partitionBy("pcell").parquet(dir + "/assign")
-        }
-      }
-    val cur = Versioned.currentPath(s, root)
+    val cur = publishStanding(s, ivfIndexRoot(d), "standing_ivf_index_build", d) {
+      dir =>
+        val e = withNorm(embeddings(s, d))
+        val seeds = ivfSeeds(s, d, e)
+        seeds.write.parquet(dir + "/seeds")
+        ivfAssigned(e, seeds, 1)
+          .select(col("vec_id"), col("cell"), col("embedding"), col("nrm"),
+            pmod(col("cell"), lit(IvfIndexBuckets.toLong)).cast("int")
+              .as("pcell"))
+          .write.partitionBy("pcell").parquet(dir + "/assign")
+    }
     (s.read.parquet(cur + "/assign"), s.read.parquet(cur + "/seeds"))
   }
 

@@ -254,12 +254,8 @@ object TextOps {
     * real pipeline trains it once and serves every classification (and
     * the confusion-matrix evaluation) from it, not re-aggregating the
     * corpus per query. Tiny by construction (100 × |langs| rows). */
-  private val profileCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def langProfile(s: SparkSession, d: String): DataFrame = {
-    graft.MemoLedger.touch("langid_profile")
-    profileCache.computeIfAbsent((s, d), _ =>
-      graft.MemoLedger.timedDF("langid_profile", d) {
+  private def langProfile(s: SparkSession, d: String): DataFrame =
+    graft.Memo.df("langid_profile", s, d) {
       val tri = documents(s, d)
         .select(col("doc_id"), col("lang"), lower(col("text")).as("t"))
         .select(col("doc_id"), col("lang"),
@@ -275,8 +271,7 @@ object TextOps {
         .filter(col("rk") <= 100)
         .select(col("lang").as("cand_lang"), col("g"))
         .localCheckpoint(false)
-    })
-  }
+    }
 
   /** The per-document langid PREDICTIONS, memoized per (session, corpus)
     * like the profile they come from (round 14): three declared queries
@@ -284,12 +279,8 @@ object TextOps {
     * pass, and a production pipeline scores the corpus once and stores
     * (doc, pred) next to the model — the evaluations read the stored
     * predictions, they never re-classify per report. */
-  private val langPredCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def langIdPredictions(s: SparkSession, d: String): DataFrame = {
-    graft.MemoLedger.touch("langid_predictions")
-    langPredCache.computeIfAbsent((s, d), _ =>
-      graft.MemoLedger.timedDF("langid_predictions", d) {
+  private def langIdPredictions(s: SparkSession, d: String): DataFrame =
+    graft.Memo.df("langid_predictions", s, d) {
       val top = langProfile(s, d)
       // doc-side distinct trigrams are deduped PER ROW (array_distinct on
       // the ngram array) before the explode — a free row-local operation
@@ -308,8 +299,7 @@ object TextOps {
         .select(col("doc_id"), col("cand_lang").as("pred_lang"),
           col("s").as("score"))
         .localCheckpoint(false)
-    })
-  }
+    }
 
   def e3LangId(s: SparkSession, d: String): DataFrame =
     langIdPredictions(s, d).orderBy("doc_id")
@@ -795,27 +785,15 @@ object TextOps {
     * grows ~Heaps-law sublinearly; see e3_vocab_growth). Memoized per
     * (session, corpus path) with a localCheckpoint — e3_bpe_merge has two
     * consumers (the argmax pick and the fold), and without the
-    * materialization each consumer re-planned the corpus scan; same
-    * immutable-corpus-path contract as Dedup's shingle/pair memos
-    * (Dedup.clearMemos is the sweep-driver hook). */
-  private val wordFreqCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Drop the memoized word-frequency tables (the Dedup/Similarity
-    * clearMemos contract for sweep drivers that churn corpus paths). */
-  def clearMemos(): Unit = { wordFreqCache.clear(); langPredCache.clear() }
-
-  private def wordFreq(s: SparkSession, d: String): DataFrame = {
-    graft.MemoLedger.touch("word_freq")
-    wordFreqCache.computeIfAbsent((s, d), _ =>
-      graft.MemoLedger.timedDF("word_freq", d) {
-        documents(s, d)
-          .select(explode(split(col("text"), " ")).as("w"))
-          .filter(length(col("w")) >= 2)
-          .groupBy("w").agg(count(lit(1)).as("wn"))
-          .localCheckpoint(false)
-      })
-  }
+    * materialization each consumer re-planned the corpus scan. */
+  private def wordFreq(s: SparkSession, d: String): DataFrame =
+    graft.Memo.df("word_freq", s, d) {
+      documents(s, d)
+        .select(explode(split(col("text"), " ")).as("w"))
+        .filter(length(col("w")) >= 2)
+        .groupBy("w").agg(count(lit(1)).as("wn"))
+        .localCheckpoint(false)
+    }
 
   /** E3 — BPE tokenizer training, the counting step: corpus-wide adjacent
     * character-pair frequencies (occurrence-weighted, exactly what a
@@ -921,14 +899,9 @@ object TextOps {
     * round (the loop-kernel discipline, graft.ops.Loop) while the symbol state
     * lives in the vocabulary-sized word table — the corpus itself is
     * scanned exactly once (inside the memoized wordFreq). */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[(String, String, Long)], DataFrame)]()
-
   private def bpeTrained(s: SparkSession, d: String)
-      : (Seq[(String, String, Long)], DataFrame) = {
-    graft.MemoLedger.touch("bpe_trained")
-    bpeCache.computeIfAbsent((s, d), _ =>
-      graft.MemoLedger.timed("bpe_trained", d) {
+      : (Seq[(String, String, Long)], DataFrame) =
+    graft.Memo.value("bpe_trained", s, d) {
       var cur = wordFreq(s, d).select(col("w"), col("wn"), expr(
         "concat_ws(',', transform(sequence(1, length(w)), i -> substring(w, i, 1)))")
         .as("syms"))
@@ -951,12 +924,7 @@ object TextOps {
         (a, b, n)
       }
       (merges, cur)
-    })
-  }
-
-  /** Clears the BPE memo together with the word-frequency one (the
-    * shared sweep-driver contract). */
-  def clearBpeMemos(): Unit = bpeCache.clear()
+    }
 
   /** E3 — the learned BPE MERGE TABLE: BpeRounds iterations of the full
     * greedy loop (count adjacent symbol pairs weighted by word frequency

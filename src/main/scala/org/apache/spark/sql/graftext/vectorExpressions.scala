@@ -15,15 +15,12 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Double
   * the math of the HOF version and of DuckDB's list_cosine_similarity over
   * DOUBLE[], so oracle results are bit-identical.
   *
-  * RAGGED-INPUT CAVEAT (documented divergence, r14 advice): the binary
-  * folds truncate to min(len(a), len(b)), whereas the HOF spellings
-  * null-pad through zip_with and return NULL on mismatched lengths. The
-  * bit-identical claim holds for EQUAL-LENGTH inputs — every call site
-  * (fixture embeddings, derived centroids/residuals, PQ codebooks) is
-  * fixed-width by construction, and the house corpora carry no ragged
-  * vectors. A caller feeding unvalidated variable-width arrays must
-  * length-check upstream: the native fold yields a plausible number where
-  * the HOF yielded NULL. */
+  * Arrays of different lengths: the two-array folds (vec_dot, vec_dot_d,
+  * vec_sqdist_d) return NULL, the HOF's answer (zip_with pads the shorter
+  * array with nulls, and the null poisons the sum). The two-array kernels
+  * that return an array (vec_subsqdists_d, vec_sub_d, vec_submul_d) throw
+  * and name both lengths. The `*Impl` folds themselves assume equal
+  * lengths. */
 object vectorExpressions {
   def dotProduct(a: Column, b: Column): Column =
     ExpressionUtils.column(DotProductExpr(
@@ -33,7 +30,7 @@ object vectorExpressions {
     ExpressionUtils.column(L2NormExpr(ExpressionUtils.expression(c)))
 
   def dotImpl(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = a.numElements()
     var acc = 0.0
     var i = 0
     while (i < n) {
@@ -83,7 +80,7 @@ object vectorExpressions {
   /** Σᵢ aᵢ·bᵢ in index order — `aggregate(zip_with(a, b, (x, y) -> x * y),
     * 0.0D, (p, q) -> p + q)` as one fused loop. */
   def dotDImpl(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = a.numElements()
     var acc = 0.0
     var i = 0
     while (i < n) {
@@ -111,7 +108,7 @@ object vectorExpressions {
     * `aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), 0.0D, +)`
     * as one fused loop. */
   def sqDistDImpl(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = a.numElements()
     var acc = 0.0
     var i = 0
     while (i < n) {
@@ -128,7 +125,7 @@ object vectorExpressions {
     * without materializing 2·m slice arrays per pair. */
   def subSqDistsDImpl(a: ArrayData, b: ArrayData, m: Int,
       dsub: Int): ArrayData = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = sameLength("vec_subsqdists_d", a, b)
     val out = new Array[Double](m)
     var j = 0
     while (j < m) {
@@ -161,11 +158,9 @@ object vectorExpressions {
       ExpressionUtils.expression(s)))
 
   /** Elementwise aᵢ − bᵢ — `zip_with(a, b, (x, y) -> x - y)` as one fused
-    * loop (round-15: the RVQ residual projection). Same ragged-input
-    * caveat as the folds above: truncates to min length where zip_with
-    * null-pads. */
+    * loop (round-15: the RVQ residual projection). */
   def subDImpl(a: ArrayData, b: ArrayData): ArrayData = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = sameLength("vec_sub_d", a, b)
     val out = new Array[Double](n)
     var i = 0
     while (i < n) {
@@ -183,9 +178,9 @@ object vectorExpressions {
     * inside a lambda body (the CollapseProject-inlining trap documented
     * at Dedup's CDC site — measured there as O(elements × alias-cost);
     * here it had NOT bitten at sf0.1, so local numbers are flat and the
-    * claim is shape, not seconds). Same ragged-input caveat as above. */
+    * claim is shape, not seconds). */
   def subMulDImpl(a: ArrayData, b: ArrayData, s: Double): ArrayData = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = sameLength("vec_submul_d", a, b)
     val out = new Array[Double](n)
     var i = 0
     while (i < n) {
@@ -193,6 +188,15 @@ object vectorExpressions {
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+
+  /** The common length of `a` and `b`; throws naming both when they differ. */
+  private def sameLength(fn: String, a: ArrayData, b: ArrayData): Int = {
+    val n = a.numElements()
+    if (b.numElements() != n)
+      throw new IllegalArgumentException(
+        s"$fn: array lengths differ ($n and ${b.numElements()})")
+    n
   }
 
   def signBits(c: Column): Column =
@@ -231,16 +235,31 @@ object vectorExpressions {
   }
 }
 
-case class DotProductExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
+/** A fold over two arrays that is NULL when their lengths differ, as the
+  * `aggregate(zip_with(...))` spelling is. `impl` names the fold in
+  * vectorExpressions. */
+sealed trait PairFold extends BinaryExpression with ExpectsInputTypes {
+  protected def impl: String
+  protected def fold(a: ArrayData, b: ArrayData): Double
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (x.numElements() != y.numElements()) null else fold(x, y)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""if ($a.numElements() != $b.numElements()) { ${ev.isNull} = true; }
+         |else { ${ev.value} =
+         |  org.apache.spark.sql.graftext.vectorExpressions.$impl($a, $b); }"""
+        .stripMargin)
+}
+
+case class DotProductExpr(left: Expression, right: Expression) extends PairFold {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    vectorExpressions.dotImpl(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"org.apache.spark.sql.graftext.vectorExpressions.dotImpl($a, $b)")
+  protected def impl: String = "dotImpl"
+  protected def fold(a: ArrayData, b: ArrayData): Double = vectorExpressions.dotImpl(a, b)
   override protected def withNewChildrenInternal(l: Expression,
       r: Expression): DotProductExpr = copy(left = l, right = r)
   override def prettyName: String = "vec_dot"
@@ -260,16 +279,11 @@ case class L2NormExpr(child: Expression)
   override def prettyName: String = "vec_l2norm"
 }
 
-case class DotProductDExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
+case class DotProductDExpr(left: Expression, right: Expression) extends PairFold {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    vectorExpressions.dotDImpl(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"org.apache.spark.sql.graftext.vectorExpressions.dotDImpl($a, $b)")
+  protected def impl: String = "dotDImpl"
+  protected def fold(a: ArrayData, b: ArrayData): Double = vectorExpressions.dotDImpl(a, b)
   override protected def withNewChildrenInternal(l: Expression,
       r: Expression): DotProductDExpr = copy(left = l, right = r)
   override def prettyName: String = "vec_dot_d"
@@ -289,16 +303,11 @@ case class L2NormDExpr(child: Expression)
   override def prettyName: String = "vec_l2norm_d"
 }
 
-case class SqDistDExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
+case class SqDistDExpr(left: Expression, right: Expression) extends PairFold {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    vectorExpressions.sqDistDImpl(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"org.apache.spark.sql.graftext.vectorExpressions.sqDistDImpl($a, $b)")
+  protected def impl: String = "sqDistDImpl"
+  protected def fold(a: ArrayData, b: ArrayData): Double = vectorExpressions.sqDistDImpl(a, b)
   override protected def withNewChildrenInternal(l: Expression,
       r: Expression): SqDistDExpr = copy(left = l, right = r)
   override def prettyName: String = "vec_sqdist_d"

@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * fold, only the evaluation engine changes. Checked on the real fixture
   * embeddings (cast to double, the exact shape the call sites feed) so a
   * fold-order or accumulator-width mistake cannot hide behind friendly
-  * values.
+  * values. Ragged pairs (one side a slot shorter) join the two-array
+  * folds' checks: there the HOF null-pads and returns NULL, and so must
+  * the native fold; the array kernels throw instead.
   */
 class VectorExprSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -26,13 +28,30 @@ class VectorExprSpec extends AnyFunSuite {
       .withColumnRenamed("ed", "od").as("b"), col("vec_id") < col("oid"))
   }
 
+  // the pairs plus 20 ragged ones, shortened on either side
+  private def withRagged = pairs
+    .unionByName(pairs.limit(10).withColumn("od", expr("slice(od, 1, size(od) - 1)")))
+    .unionByName(pairs.limit(10).withColumn("ed", expr("slice(ed, 2, size(ed) - 1)")))
+
+  /** Rows where native and HOF differ (null-safe), and rows where the
+    * native fold is NULL. */
+  private def diff(nat: org.apache.spark.sql.Column, hof: String): (Long, Long) = {
+    val r = withRagged.withColumn("nat", nat).withColumn("hof", expr(hof))
+    (r.filter(expr("NOT (CAST(nat AS STRING) <=> CAST(hof AS STRING))")).count(),
+      r.filter(col("nat").isNull).count())
+  }
+
+  test("vec_dot ≡ aggregate(zip_with(a, b, *), 0.0D, +) over floats bitwise") {
+    assert(diff(Vectors.dot(col("ed").cast("array<float>"), col("od").cast("array<float>")),
+      """aggregate(zip_with(CAST(ed AS ARRAY<FLOAT>), CAST(od AS ARRAY<FLOAT>),
+        |(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D,
+        |(p, q) -> p + q)""".stripMargin) == ((0L, 20L)))
+  }
+
   test("vec_dot_d ≡ aggregate(zip_with(a, b, *), 0.0D, +) bitwise") {
-    val bad = pairs
-      .withColumn("nat", Vectors.dotD(col("ed"), col("od")))
-      .withColumn("hof", expr(
-        "aggregate(zip_with(ed, od, (x, y) -> x * y), 0.0D, (p, q) -> p + q)"))
-      .filter(expr("NOT (CAST(nat AS STRING) <=> CAST(hof AS STRING))")).count()
-    assert(bad == 0L)
+    assert(diff(Vectors.dotD(col("ed"), col("od")),
+      "aggregate(zip_with(ed, od, (x, y) -> x * y), 0.0D, (p, q) -> p + q)") ==
+      ((0L, 20L)))
   }
 
   test("vec_l2norm_d ≡ sqrt(aggregate(a, 0.0D, (acc, x) -> acc + x*x)) bitwise") {
@@ -53,13 +72,24 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("vec_sqdist_d ≡ aggregate(zip_with(a, b, (x,y) -> (x-y)*(x-y)), 0.0D, +) bitwise") {
-    val bad = pairs
-      .withColumn("nat", Vectors.sqDistD(col("ed"), col("od")))
-      .withColumn("hof", expr(
-        """aggregate(zip_with(ed, od, (x, y) -> (x - y) * (x - y)),
-          |0.0D, (p, q) -> p + q)""".stripMargin))
-      .filter(expr("NOT (CAST(nat AS STRING) <=> CAST(hof AS STRING))")).count()
-    assert(bad == 0L)
+    assert(diff(Vectors.sqDistD(col("ed"), col("od")),
+      """aggregate(zip_with(ed, od, (x, y) -> (x - y) * (x - y)),
+        |0.0D, (p, q) -> p + q)""".stripMargin) == ((0L, 20L)))
+  }
+
+  test("the array kernels throw on arrays of different lengths, naming both") {
+    val r = pairs.limit(1).withColumn("od", expr("slice(od, 1, size(od) - 1)"))
+    Seq(
+      "vec_sub_d" -> Vectors.subD(col("ed"), col("od")),
+      "vec_submul_d" -> Vectors.subMulD(col("ed"), col("od"), lit(0.5)),
+      "vec_subsqdists_d" -> Vectors.subSqDistsD(col("ed"), col("od"),
+        Similarity2.PqM, Similarity2.PqDsub)
+    ).foreach { case (fn, c) =>
+      val e = intercept[Exception](r.select(c).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString("\n")
+      assert(msgs.contains(s"$fn: array lengths differ (64 and 63)"), msgs)
+    }
   }
 
   test("vec_subsqdists_d ≡ the transform/slice HOF per-subspace distances bitwise") {

@@ -214,6 +214,16 @@ class Round10OpsSpec extends AnyFunSuite {
     assert(picks.last._3.exists(_.isNaN))
   }
 
+  test("k-center on both paths: a ragged vector's similarities are null") {
+    import spark.implicits._
+    val emb = Seq[(Long, Array[Float])](
+      (1L, Array(1f, 0f, 0f)), (2L, Array(0f, 1f, 0f)), (3L, Array(1f, 0f)),
+      (4L, Array(0f, 0f, 1f))).toDF("vec_id", "embedding")
+    val picks = bothKcenterPaths(emb, 4, _ => false)
+    assert(picks.map(_._2).sorted == Seq(1L, 2L, 3L, 4L))
+    assert(picks.find(_._2 == 3L).get._3.isEmpty, s"ragged ms: $picks")
+  }
+
   test("k-center driver order and fold follow Spark on nulls, NaN and -0.0") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, greatest}
