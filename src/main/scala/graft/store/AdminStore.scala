@@ -1,17 +1,21 @@
 package graft.store
 
+import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
 import java.time.Instant
 import java.util.UUID
 
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.mapreduce.Job
+import org.apache.parquet.hadoop.{ParquetInputFormat, ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.io.{OutputFile, PositionOutputStream}
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
 
 /** Flat admin-table rows (DTO layer). Mirrors admin_orm.py:34-93: five
   * relational tables — batches, jobs, job_test_results, batch_log, job_log —
@@ -56,17 +60,26 @@ final case class LogRow(
   * The repository queries of [[AdminStoreApi]] run over these rows as
   * plain Scala; `batches`/`jobs`/... expose them as local Datasets.
   *
-  * Writes: an append writes one parquet file per call on the driver
-  * through Spark's own `ParquetFileFormat` writer (the schema, encoding,
-  * codec and footer a DataFrame write would produce; no `_SUCCESS`
-  * marker), under a hidden `_tmp.` name renamed to `part-…` once complete.
-  * Parquet has no MERGE, so upsert and retention filter the in-memory rows
-  * and rewrite the table through `swapWrite` (temp dir, old generation set
-  * aside, rename). After its own write the instance records the new stamp
-  * and rows itself, so it never reads back what it just wrote. Rows are
-  * passed once through the encoder's serializer and deserializer before
-  * they are kept, so memory holds exactly what a disk read returns (an
-  * Instant truncated to micros).
+  * Writes: a write encodes its rows into one parquet file in memory,
+  * through Spark's own `ParquetWriteSupport`, configured once per table by
+  * `ParquetFileFormat.prepareWrite` (the schema, encodings, codec and
+  * footer a DataFrame write would produce; no `_SUCCESS` marker). The
+  * bytes land under a hidden `_tmp.` name and are renamed to `part-…`:
+  * on a local root through `java.nio` (one write and an atomic move, so
+  * no Hadoop local `create`, which forks a `chmod` per file and per
+  * `.crc` sidecar), on any other filesystem through `fs.create` and
+  * `fs.rename`. New local files carry no `.crc` sidecar; their parquet
+  * page CRCs take its place, because the store's reads verify them
+  * (older files keep their `.crc`, which Hadoop still checks). Parquet
+  * has no MERGE, so upsert and retention filter the in-memory rows and
+  * rewrite the table through `swapWrite` (temp dir, old generation set
+  * aside, rename). An append that would leave more than `MaxFiles`
+  * visible files rewrites the table as one file the same way, so a
+  * table's file count stays bounded. After its own write the instance
+  * records the new stamp and rows itself, so it never reads back what it
+  * just wrote. Rows are passed once through the encoder's serializer and
+  * deserializer before they are kept, so memory holds exactly what a disk
+  * read returns (an Instant truncated to micros).
   *
   * Scale note: admin tables grow with runs × jobs, not with data volume —
   * the rewrite-based upsert is O(table) on the driver, and the table is
@@ -291,20 +304,26 @@ final class AdminStore(val spark: SparkSession, val root: String)
       if (!stamp.contains(now)) {
         cached =
           if (now.isEmpty) Vector.empty
-          else spark.read.schema(encoder.schema).parquet(dir.toString)
+          else spark.read.option(ParquetInputFormat.PAGE_VERIFY_CHECKSUM_ENABLED, "true")
+            .schema(encoder.schema).parquet(dir.toString)
             .as[T](encoder).collect().toVector
         stamp = Some(now)
       }
       cached
     }
 
+    /** Add `rows` as one new file, or rewrite the table as one file when
+      * another would take it past `MaxFiles`. */
     def append(rows: Seq[T]): Unit = {
       ensureWriterLock()
       val current = this.rows
-      debris.foreach(fs.delete(_, false))
-      val file = writeFile(dir, rows)
-      stamp = stamp.map(s => (s :+ AdminStore.entry(file)).sortBy(_._1))
-      cached = current ++ asStored(rows)
+      if (stamp.exists(_.size >= AdminStore.MaxFiles)) swapWrite(current ++ rows)
+      else {
+        debris.foreach(fs.delete(_, false))
+        val file = writeFile(dir, rows)
+        stamp = stamp.map(s => (s :+ AdminStore.entry(file)).sortBy(_._1))
+        cached = current ++ asStored(rows)
+      }
     }
 
     /** Rewrite the table as exactly `rows`: write to a temp dir, then swap
@@ -323,7 +342,7 @@ final class AdminStore(val spark: SparkSession, val root: String)
       Option(fs.globStatus(new Path(s"$dir.tmp*")))
         .getOrElse(Array.empty).foreach(st => fs.delete(st.getPath, true))
       val tmp = new Path(s"$dir.tmp${System.nanoTime()}")
-      writeFile(tmp, rows)
+      writeFile(tmp, rows) // creates tmp: through java.nio on a local root
       val old = new Path(s"$dir.old")
       fs.delete(old, true) // stale backup from a previous crash, if any
       val hadOld = fs.exists(dir) && {
@@ -350,32 +369,59 @@ final class AdminStore(val spark: SparkSession, val root: String)
 
     def deleteBefore(cutoff: Instant): Long = deleteWhere(r => ts(r).isBefore(cutoff))
 
-    /** Write `rows` as one parquet file in `into`, on the driver, through
-      * Spark's own parquet writer (schema, encoding, codec and footer
-      * metadata as a DataFrame write would produce). The file is written
-      * under a hidden name and renamed into view once complete. */
-    private def writeFile(into: Path, rows: Seq[T]): FileStatus = {
+    /** Spark's parquet write configuration for this table, prepared once:
+      * the session's SQL confs over the Hadoop conf, then what
+      * `ParquetFileFormat.prepareWrite` sets for a DataFrame write. */
+    private lazy val writeConf: Configuration = {
       val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
       spark.conf.getAll.foreach { case (k, v) => if (v != null) conf.set(k, v) }
       val job = Job.getInstance(conf)
-      val factory = new ParquetFileFormat()
-        .prepareWrite(spark, job, Map.empty, encoder.schema)
-      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
-        new TaskAttemptID(new TaskID(new JobID("graft-admin", 0), TaskType.MAP, 0), 0))
-      val file = s"part-00000-${UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
-      val tmp = new Path(into, AdminStore.TmpPrefix + file)
-      val out = factory.newInstance(tmp.toString, encoder.schema, ctx)
-      try rows.foreach(r => out.write(toRow(r)))
-      catch {
-        case e: Throwable =>
-          try out.close() catch { case _: Throwable => () }
-          fs.delete(tmp, false)
-          throw e
+      new ParquetFileFormat().prepareWrite(spark, job, Map.empty, encoder.schema)
+      job.getConfiguration
+    }
+    private lazy val codec = ParquetOutputFormat.getCompression(writeConf)
+
+    /** `rows` as the bytes of one parquet file, written as a Spark task
+      * writes one from the same conf (`ParquetOutputFormat` settings). */
+    private def encode(rows: Seq[T]): java.io.ByteArrayOutputStream = {
+      val conf = writeConf
+      val file = new AdminStore.BytesFile
+      val out = new AdminStore.RowWriter(file).withConf(conf)
+        .withCompressionCodec(codec)
+        .withRowGroupSize(ParquetOutputFormat.getLongBlockSize(conf))
+        .withPageSize(ParquetOutputFormat.getPageSize(conf))
+        .withDictionaryPageSize(ParquetOutputFormat.getDictionaryPageSize(conf))
+        .withDictionaryEncoding(ParquetOutputFormat.getEnableDictionary(conf))
+        .withWriterVersion(ParquetOutputFormat.getWriterVersion(conf))
+        .withPageWriteChecksumEnabled(ParquetOutputFormat.getPageWriteChecksumEnabled(conf))
+        .withStatisticsEnabled(ParquetOutputFormat.getStatisticsEnabled(conf))
+        .withValidation(ParquetOutputFormat.getValidation(conf))
+        .build()
+      try rows.foreach(r => out.write(toRow(r))) finally out.close()
+      file.bytes
+    }
+
+    /** Write `rows` as one parquet file in `into` (created if missing):
+      * encoded in memory, written under a hidden name, renamed into view.
+      * A `_tmp.` file a failure leaves behind is debris the next append
+      * removes (a `swapWrite` temp dir is swept whole). */
+    private def writeFile(into: Path, rows: Seq[T]): FileStatus = {
+      val bytes = encode(rows)
+      val file = s"part-00000-${UUID.randomUUID()}-c000${codec.getExtension}.parquet"
+      val (tmp, dst) = (new Path(into, AdminStore.TmpPrefix + file), new Path(into, file))
+      fs match {
+        case local: LocalFileSystem =>
+          val (t, d) = (local.pathToFile(tmp).toPath, local.pathToFile(dst).toPath)
+          Files.createDirectories(t.getParent)
+          val out = Files.newOutputStream(t, StandardOpenOption.CREATE_NEW)
+          try bytes.writeTo(out) finally out.close()
+          Files.move(t, d, StandardCopyOption.ATOMIC_MOVE)
+        case other =>
+          val out = other.create(tmp, false)
+          try bytes.writeTo(out) finally out.close()
+          if (!other.rename(tmp, dst))
+            throw new IllegalStateException(s"failed to rename $tmp -> $dst")
       }
-      out.close()
-      val dst = new Path(into, file)
-      if (!fs.rename(tmp, dst))
-        throw new IllegalStateException(s"failed to rename $tmp -> $dst")
       fs.getFileStatus(dst)
     }
   }
@@ -455,6 +501,31 @@ object AdminStore {
 
   /** Name prefix of a file still being written; hidden from every reader. */
   private val TmpPrefix = "_tmp."
+
+  /** The most visible files an append leaves in a table; the append that
+    * would add one more rewrites the table as a single file instead. */
+  private[store] val MaxFiles = 64
+
+  /** A parquet `OutputFile` that is a byte buffer. */
+  private final class BytesFile extends OutputFile {
+    val bytes = new java.io.ByteArrayOutputStream(8192)
+    def create(blockSizeHint: Long): PositionOutputStream = new PositionOutputStream {
+      def getPos: Long = bytes.size.toLong
+      def write(b: Int): Unit = bytes.write(b)
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = bytes.write(b, off, len)
+    }
+    def createOrOverwrite(blockSizeHint: Long): PositionOutputStream = create(blockSizeHint)
+    def supportsBlockSize: Boolean = false
+    def defaultBlockSize: Long = 0L
+  }
+
+  /** A parquet writer of Spark rows through Spark's own `ParquetWriteSupport`. */
+  private final class RowWriter(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriter](file) {
+    protected def self(): RowWriter = this
+    protected def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport
+  }
 
   private def entry(st: FileStatus): (String, Long, Long) =
     (st.getPath.getName, st.getLen, st.getModificationTime)

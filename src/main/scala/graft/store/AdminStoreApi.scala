@@ -195,10 +195,12 @@ object AdminStoreApi {
   private val NewestFirst: Ordering[(Instant, String)] =
     Ordering[(Instant, String)].reverse
 
-  /** Build the store a config's admin URI names — the reference's
+  /** The store a config's admin URI names — the reference's
     * create-engine-from-URI dispatch (batch_runner.py:57): a `jdbc:` URI
-    * is the RDBMS store, anything else a parquet directory root. */
+    * is the RDBMS store, anything else a parquet directory root. A root
+    * keeps one store per session (a session memo, released when the
+    * session stops), so every batch run on it finds its tables warm. */
   def forUri(spark: SparkSession, uri: String): AdminStoreApi =
     if (uri.startsWith("jdbc:")) new JdbcAdminStore(spark, uri)
-    else new AdminStore(spark, uri)
+    else graft.Memo.get(spark, "admin-store", uri)(new AdminStore(spark, uri))
 }

@@ -334,6 +334,24 @@ class RunnerSpec extends AnyFunSuite {
     assert(store.latestBatch("cfg_batch").nonEmpty)
   }
 
+  test("module-level runBatch reuses one warm store per admin root") {
+    val root = TestSpark.tmpDir("warmrun")
+    final class WarmConfig extends GraftConfig(adminRoot = root)
+    // jobs without Spark work: every Spark job of a run is the store's
+    val spec = SimpleBatchSpec[WarmConfig, Unit](
+      name = "warm_batch",
+      createUowFn = _ => (),
+      createJobsFn = _ => Seq(okJob("first"), okJob("second", deps = Seq("first"))))
+    val first = BatchRunner.runBatch(spark, spec, new WarmConfig)
+    var second: BatchStatus = null
+    val jobs = TestSpark.sparkJobsIn { second = BatchRunner.runBatch(spark, spec, new WarmConfig) }
+    assert(jobs == 0, s"the second runBatch launched $jobs store Spark job(s)")
+    assert(second.id != first.id && !second.running && second.errorMessage.isEmpty)
+    val store = new AdminStore(spark, s"$root/etl")
+    assert(store.batchDelta("warm_batch").exists(d =>
+      d.current.id == second.id && d.previous.exists(_.id == first.id)))
+  }
+
   test("config-driven runAdmin honors daysLogsToKeep from the config (cfg.py retention)") {
     val clock = new StepClock(Instant.parse("2024-06-01T12:00:00Z"))
     val root = TestSpark.tmpDir("cfgadmin")

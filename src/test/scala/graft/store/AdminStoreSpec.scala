@@ -1,12 +1,20 @@
 package graft.store
 
+import java.io.File
+import java.nio.file.Files
 import java.time.Instant
 import java.time.temporal.ChronoUnit
 
+import scala.jdk.CollectionConverters._
+
 import graft.TestSpark
 import graft.model._
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.{PageType, Util}
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Parquet-directory backend: the shared AdminStoreContract plus the
@@ -18,6 +26,14 @@ class AdminStoreSpec extends AdminStoreContract {
     new AdminStore(TestSpark.spark, TestSpark.tmpDir("admin"))
   private def newParquetStore(): AdminStore =
     new AdminStore(TestSpark.spark, TestSpark.tmpDir("admin"))
+
+  /** The parquet footer of the one data file in `dir`. */
+  private def parquetFooter(dir: String): ParquetMetadata = {
+    val file = new File(dir).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val in = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file.getPath),
+      TestSpark.spark.sparkContext.hadoopConfiguration))
+    try in.getFooter finally in.close()
+  }
 
   test("swapWrite survives a stale .old backup from a simulated crash") {
     val st = newParquetStore()
@@ -139,25 +155,6 @@ class AdminStoreSpec extends AdminStoreContract {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "_LOCK")))
   }
 
-  /** Spark jobs launched on this thread while `body` runs. A sentinel job
-    * closes the probe group: listener events arrive in order, so once the
-    * sentinel is visible every job `body` launched is too. */
-  private def sparkJobsIn(body: => Unit): Int = {
-    val sc = TestSpark.spark.sparkContext
-    val group = s"admin-store-probe-${System.nanoTime()}"
-    sc.setJobGroup(group, "the admin store must launch no Spark job")
-    try { body; sc.parallelize(Seq(1), 1).count() }
-    finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000000000L
-    var ids = sc.statusTracker.getJobIdsForGroup(group)
-    while (ids.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(20)
-      ids = sc.statusTracker.getJobIdsForGroup(group)
-    }
-    assert(ids.nonEmpty, "the sentinel job never reached the status tracker")
-    ids.length - 1
-  }
-
   test("a warm store appends, upserts, reads status and applies retention without Spark jobs") {
     val st = newParquetStore()
     val b = batchRow("b1", "nightly", t("2024-01-02T00:00:00Z"), running = true)
@@ -170,7 +167,7 @@ class AdminStoreSpec extends AdminStoreContract {
     st.appendJobTests(Nil)
     st.appendBatchLog(Seq(log("l0", t("2023-01-01T00:00:00Z"))))
     st.appendJobLog(Nil)
-    val jobs = sparkJobsIn {
+    val jobs = TestSpark.sparkJobsIn {
       st.appendJobs(Seq(job("j1", t("2024-01-02T00:00:00Z"))))
       st.upsertJobs(Seq(job("j1", t("2024-01-02T00:01:00Z"))))
       st.appendJobTests(Seq(JobTestRow("t1".padTo(32, '0'), "j1".padTo(32, '0'),
@@ -226,14 +223,8 @@ class AdminStoreSpec extends AdminStoreContract {
       batchRow("b2", "nightly", t("2024-01-02T00:00:00Z"), running = true))
     st.appendBatches(rows)
     val viaSpark = TestSpark.tmpDir("adminschema") + "/batches"
-    spark.createDataset(rows).write.parquet(viaSpark)
-    val conf = spark.sparkContext.hadoopConfiguration
-    def footer(dir: String) = {
-      val file = new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val in = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file.getPath), conf))
-      try in.getFooter.getFileMetaData finally in.close()
-    }
+    spark.createDataset(rows).coalesce(1).write.parquet(viaSpark)
+    def footer(dir: String) = parquetFooter(dir).getFileMetaData
     val (ours, theirs) = (footer(s"${st.root}/batches"), footer(viaSpark))
     assert(ours.getSchema == theirs.getSchema)
     val rowMeta = "org.apache.spark.sql.parquet.row.metadata"
@@ -242,5 +233,100 @@ class AdminStoreSpec extends AdminStoreContract {
       spark.read.parquet(viaSpark).schema)
     assert(spark.read.parquet(s"${st.root}/batches").as[BatchRow].collect().sortBy(_.id)
       .toSeq == rows)
+    val sparkVersion = "org.apache.spark.version"
+    assert(ours.getKeyValueMetaData.get(sparkVersion) != null)
+    assert(ours.getKeyValueMetaData.get(sparkVersion) ==
+      theirs.getKeyValueMetaData.get(sparkVersion))
+    // every column chunk: the same codec and the same encodings
+    def chunks(dir: String) = parquetFooter(dir).getBlocks.asScala.toSeq
+      .flatMap(_.getColumns.asScala)
+      .map(c => (c.getPath.toDotString, c.getCodec, c.getEncodings.asScala.toSet))
+    val (ourChunks, theirChunks) = (chunks(s"${st.root}/batches"), chunks(viaSpark))
+    assert(ourChunks.nonEmpty)
+    assert(ourChunks == theirChunks)
+  }
+
+  /** The command lines of the processes this thread starts while `body`
+    * runs, from a JFR recording of `jdk.ProcessStart`. */
+  private def processesStartedIn(body: => Unit): Seq[String] = {
+    val me = Thread.currentThread().getId
+    val dump = Files.createTempFile("admin-process-start", ".jfr")
+    val rec = new Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try body finally rec.stop()
+      rec.dump(dump)
+      RecordingFile.readAllEvents(dump).asScala.toSeq
+        .filter(e => Option(e.getThread).exists(_.getJavaThreadId == me))
+        .map(_.getString("command"))
+    } finally { rec.close(); Files.deleteIfExists(dump) }
+  }
+
+  test("a warm store's appends, upserts and retention start no process") {
+    val st = newParquetStore()
+    val b = batchRow("b1", "nightly", t("2024-01-02T00:00:00Z"), running = true)
+    def job(id: String) = JobRow(id.padTo(32, '0'), b.id, "etl_job",
+      Some(4L), Some(false), None, running = false, skipped = false, None,
+      t("2024-01-02T00:00:00Z"))
+    def log(id: String, ts: Instant) = LogRow(id.padTo(32, '0'), b.id, "INFO", "m", ts)
+    // warm: the _LOCK file (once per process) and every table's rows
+    st.appendBatches(Seq(b))
+    st.appendJobs(Seq(job("j0")))
+    st.appendBatchLog(Seq(log("l0", t("2023-01-01T00:00:00Z"))))
+    val started = processesStartedIn {
+      st.appendJobs(Seq(job("j1")))
+      st.appendJobTests(Seq(JobTestRow("t1".padTo(32, '0'), "j1".padTo(32, '0'),
+        "rows", test_passed = true, None, t("2024-01-02T00:01:00Z"))))
+      st.appendBatchLog(Seq(log("l1", t("2024-01-02T00:00:00Z"))))
+      st.upsertJobs(Seq(job("j1").copy(execution_millis = Some(5L))))
+      st.upsertBatches(Seq(b.copy(running = false)))
+      assert(st.deleteOlderThan(st.BATCH_LOG, t("2024-01-01T00:00:00Z")) == 1)
+    }
+    assert(started.isEmpty, s"the warm admin store started processes: $started")
+    val fresh = new AdminStore(TestSpark.spark, st.root)
+    assert(fresh.jobRows.map(_.execution_millis).sorted == Seq(Some(4L), Some(5L)))
+    assert(fresh.batchRows.map(_.running) == Seq(false))
+    assert(fresh.batchLogRows.size == 1 && fresh.testRows.size == 1)
+  }
+
+  test("a flipped byte in an admin file's data page fails the read") {
+    val st = newParquetStore()
+    val marker = "page-crc-marker-0123456789abcdef"
+    st.appendBatchLog(Seq(LogRow("l1".padTo(32, '0'), "b1".padTo(32, '0'), "INFO",
+      marker, t("2024-01-01T00:00:00Z"))))
+    val dir = s"${st.root}/batch_log"
+    val file = new File(dir).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val bytes = Files.readAllBytes(file.toPath)
+    // the message column's first page: a header, then the page body
+    val chunk = parquetFooter(dir).getBlocks.get(0).getColumns.asScala
+      .find(_.getPath.toDotString == "message").get
+    val start = chunk.getStartingPos.toInt
+    val in = new java.io.ByteArrayInputStream(bytes, start, bytes.length - start)
+    val header = Util.readPageHeader(in)
+    assert(header.getType == PageType.DATA_PAGE)
+    assert(header.isSetCrc, "the data page carries no CRC")
+    val body = bytes.length - in.available()
+    val at = bytes.indexOfSlice(marker.getBytes("UTF-8"), body)
+    assert(at >= body && at + marker.length <= body + header.getCompressed_page_size,
+      "the message is not a literal inside the data page")
+    bytes(at) = 'q'.toByte
+    Files.write(file.toPath, bytes)
+    val err = intercept[Exception](new AdminStore(TestSpark.spark, st.root).batchLogRows)
+    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("CRC checksum")), err)
+  }
+
+  test("appends past MaxFiles rewrite the table as one file") {
+    val st = newParquetStore()
+    val rows = (0 until 70).map(i =>
+      batchRow(f"b$i%02d", "nightly", t("2024-01-01T00:00:00Z").plusSeconds(i.toLong)))
+    rows.foreach(r => st.appendBatches(Seq(r)))
+    val files = new File(s"${st.root}/batches").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(files <= AdminStore.MaxFiles, s"$files files")
+    assert(files == 70 - AdminStore.MaxFiles)
+    assert(st.batchRows.sortBy(_.id) == rows)
+    assert(new AdminStore(TestSpark.spark, st.root).batchRows.sortBy(_.id) == rows)
   }
 }
