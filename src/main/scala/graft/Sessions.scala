@@ -6,7 +6,10 @@ import org.apache.spark.sql.SparkSession
   * defaults: AQE on (runtime coalescing + skew-join splitting), shuffle
   * partitions sized to the local core count (on a real cluster this would be
   * ~2-3× total cores), UTC session TZ for oracle parity, nanos-as-long so the
-  * driver fixtures' TIMESTAMP(NANOS) column is readable. */
+  * driver fixtures' TIMESTAMP(NANOS) column is readable. The optimizer runs
+  * [[OnePartition]]: a batch query whose inputs together fit under
+  * `spark.sql.autoBroadcastJoinThreshold` is planned as one partition, with
+  * no shuffle and no sort-sampling job; larger inputs plan as before. */
 object Sessions {
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
     val spark = SparkSession.builder()
@@ -35,6 +38,8 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if (!spark.experimental.extraOptimizations.contains(OnePartition))
+      spark.experimental.extraOptimizations :+= OnePartition
     functions.Registry.registerAll(spark)
     spark
   }

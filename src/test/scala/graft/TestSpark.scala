@@ -9,6 +9,15 @@ object TestSpark {
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 
+  /** Runs `f` with auto-broadcast off. Only explicit broadcast() hints then
+    * produce broadcast joins, and `OnePartition`'s gate is closed, so the
+    * plan has the exchange layout it has at scale. */
+  def withoutAutoBroadcast[A](f: => A): A = {
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try { spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1"); f }
+    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 

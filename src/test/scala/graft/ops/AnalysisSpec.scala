@@ -717,9 +717,8 @@ class AnalysisSpec extends AnyFunSuite {
   }
 
   test("e8_source_divergence: N_s/N reuse the count aggregates' exchanges — two scans, no corpus shuffle") {
-    val df = Analysis.e8SourceDivergence(spark, TestSpark.sf001)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    val plan = TestSpark.withoutAutoBroadcast(
+      finalPlan(Analysis.e8SourceDivergence(spark, TestSpark.sf001)))
     // st and ct each scan once; ns/nt must NOT re-scan (they fold the
     // aggregates' own exchanges — at 100 TB a third/fourth tokenize scan
     // doubles the dominant cost)

@@ -550,10 +550,11 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("e3_pack: one (source, shard) hash exchange serves both window and aggregate") {
-    val df = TextOps.e3Pack(spark, TestSpark.sf001)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+    val plan = TestSpark.withoutAutoBroadcast {
+      val df = TextOps.e3Pack(spark, TestSpark.sf001)
+      df.collect()
+      df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    }
     // one hash exchange (the window's shuffle on (source, shard)) serves
     // BOTH the running-sum window and the (source, shard, pack_id)
     // aggregate — the coarser partitioning co-locates every finer group,
@@ -597,10 +598,11 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("e6_quota_sample: the per-source top-K prunes before the shuffle (WindowGroupLimit)") {
-    val df = Sampling.e6QuotaSample(spark, TestSpark.sf001)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+    val plan = TestSpark.withoutAutoBroadcast {
+      val df = Sampling.e6QuotaSample(spark, TestSpark.sf001)
+      df.collect()
+      df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    }
     // the rank<=K filter must push into WindowGroupLimit nodes — the
     // Partial one runs BEFORE the exchange, so each input partition ships
     // at most K rows per source instead of the whole corpus; without it a
@@ -1188,7 +1190,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("e6_global_shuffle: a permutation into K shards with contiguous positions") {
     val df = Sampling.e6GlobalShuffle(spark, TestSpark.sf001)
-    val rows = df.collect()
+    val rows = TestSpark.withoutAutoBroadcast(df.collect())
       .map(r => (r.getAs[Long]("shard"), r.getAs[Long]("pos"), r.getAs[Long]("doc_id")))
     val nDocs = graft.Tables.documents(spark, TestSpark.sf001).count()
     // a permutation: every doc exactly once

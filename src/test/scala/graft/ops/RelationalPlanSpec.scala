@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.TestSpark
+import graft.TestSpark.withoutAutoBroadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,14 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * value-level behavior is pinned by the DuckDB oracles). */
 class RelationalPlanSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
-
-  /** Runs `f` with auto-broadcast disabled, so only explicit broadcast()
-    * hints produce BroadcastHashJoins — making hints visible in the plan. */
-  private def withoutAutoBroadcast[A](f: => A): A = {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try { spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1"); f }
-    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
 
   private def finalPlan(df: DataFrame): String = {
     df.collect() // materialize so AQE settles on the final plan
@@ -55,7 +48,7 @@ class RelationalPlanSpec extends AnyFunSuite {
   }
 
   test("q47: both SCD2 windows ride one hash exchange (lag and lead share the sort)") {
-    val plan = finalPlan(Relational.q47Scd2(spark, TestSpark.sf001))
+    val plan = withoutAutoBroadcast(finalPlan(Relational.q47Scd2(spark, TestSpark.sf001)))
     val nHash = "Exchange hashpartitioning".r.findAllIn(plan).length
     // lag runs pre-filter and lead post-filter over the SAME
     // (o_custkey)/(date, orderkey) window spec — Catalyst must reuse the
@@ -148,8 +141,8 @@ class RelationalPlanSpec extends AnyFunSuite {
   }
 
   test("e4l: the per-window rank prunes via WindowGroupLimit before the exchange") {
-    val plan = finalPlan(
-      graft.streaming.StreamOps.e4lHeavyHitters(spark, TestSpark.sf001))
+    val plan = withoutAutoBroadcast(finalPlan(
+      graft.streaming.StreamOps.e4lHeavyHitters(spark, TestSpark.sf001)))
     // partial + final group-limit: each input partition ships <= K rows
     // per window into the rank exchange
     assert("WindowGroupLimit".r.findAllIn(plan).length >= 2,
@@ -195,7 +188,7 @@ class RelationalPlanSpec extends AnyFunSuite {
   }
 
   test("q53: both windows AND the session aggregate ride ONE user_id exchange") {
-    val plan = finalPlan(Relational.q53Sessionize(spark, TestSpark.sf001))
+    val plan = withoutAutoBroadcast(finalPlan(Relational.q53Sessionize(spark, TestSpark.sf001)))
     // lag window, running-sum window, and groupBy(user_id, session_no) all
     // run inside hashpartitioning(user_id); only the display orderBy adds a
     // range exchange
@@ -213,7 +206,7 @@ class RelationalPlanSpec extends AnyFunSuite {
   }
 
   test("q54: both RANGE windows ride ONE o_custkey exchange") {
-    val plan = finalPlan(Relational.q54RangeFrame(spark, TestSpark.sf001))
+    val plan = withoutAutoBroadcast(finalPlan(Relational.q54RangeFrame(spark, TestSpark.sf001)))
     // sum and count share the same (custkey)/(day) window spec, so the
     // orders table crosses exactly one hash exchange; only the display
     // orderBy adds a range exchange
@@ -222,7 +215,7 @@ class RelationalPlanSpec extends AnyFunSuite {
   }
 
   test("q45: all three full-frame navigation functions ride ONE o_custkey exchange") {
-    val plan = finalPlan(Relational.q45FirstLast(spark, TestSpark.sf001))
+    val plan = withoutAutoBroadcast(finalPlan(Relational.q45FirstLast(spark, TestSpark.sf001)))
     val hashEx = "Exchange hashpartitioning".r.findAllIn(plan).length
     assert(hashEx == 1, s"expected 1 hash exchange (o_custkey), got $hashEx:\n$plan")
     // one Window node computes first/last/nth together — a second node
@@ -337,7 +330,7 @@ class RelationalPlanSpec extends AnyFunSuite {
   }
 
   test("e2_embed_outliers: broadcast seed assign; both cell windows share one exchange") {
-    val plan = finalPlan(Similarity.e2EmbedOutliers(spark, TestSpark.sf001))
+    val plan = withoutAutoBroadcast(finalPlan(Similarity.e2EmbedOutliers(spark, TestSpark.sf001)))
     // the seed join is the broadcast cross the IVF family uses (argmax
     // prunes it); the corpus crosses exactly two hash exchanges — vec_id
     // for the assignment argmax, cell for the rank+count windows (which

@@ -272,7 +272,7 @@ class Round9bOpsSpec extends AnyFunSuite {
   }
 
   test("e6_curriculum: tier map broadcasts; both corpus windows ride ONE (tier, shard) exchange") {
-    val plan = finalPlan(Sampling.e6Curriculum(spark, TestSpark.sf001))
+    val plan = TestSpark.withoutAutoBroadcast(finalPlan(Sampling.e6Curriculum(spark, TestSpark.sf001)))
     // exchange 1: the score histogram groupBy; exchange 2: the
     // (tier, shard) window partitioning — rank and running sum share it
     val hashEx = "Exchange hashpartitioning".r.findAllIn(plan).length

@@ -23,6 +23,10 @@ broadcast join into a shuffled one, or lost scan pushdown. Shrinkage and
 allowed queries are reported but pass (improvements are the point of most
 rounds). New/removed queries are informational (the correctness gate owns
 surface membership).
+
+It also lists the queries of the regenerated dump with an unpartitioned
+Window (no partition spec: every row of its input meets in one task at any
+scale). The list is informational and never fails the lint.
 """
 import re, sys
 from collections import Counter
@@ -44,20 +48,22 @@ GROWTH_FAILS = {"Exchange", "SortMergeJoin", "ShuffledHashJoin",
                 "CartesianProduct"}
 
 
-def parse(path):
-    """PLANS.md -> {query: Counter(fingerprint)}."""
-    plans, name, buf = {}, None, []
+def sections(path):
+    """PLANS.md -> {query: [plan lines]}."""
+    plans, name = {}, None
     for line in open(path, errors="replace"):
         m = re.match(r"^## (\S+)", line)
         if m:
-            if name is not None:
-                plans[name] = fingerprint(buf)
-            name, buf = m.group(1), []
+            name = m.group(1)
+            plans[name] = []
         elif name is not None:
-            buf.append(line)
-    if name is not None:
-        plans[name] = fingerprint(buf)
+            plans[name].append(line)
     return plans
+
+
+def parse(path):
+    """PLANS.md -> {query: Counter(fingerprint)}."""
+    return {q: fingerprint(lines) for q, lines in sections(path).items()}
 
 
 def fingerprint(lines):
@@ -75,6 +81,54 @@ def fingerprint(lines):
     return c
 
 
+def top_lists(args):
+    """'[a, f(b, c)], [d]' -> [['a', 'f(b, c)'], ['d']]: the bracketed
+    lists of a node's Arguments line, split into their top-level items."""
+    lists, item, depth = [], "", 0
+    for ch in args:
+        if ch in "[(":
+            depth += 1
+            if depth == 1:
+                lists.append([])
+                item = ""
+                continue
+        elif ch in "])":
+            depth -= 1
+            if depth == 0:
+                lists[-1].append(item.strip())
+                continue
+        elif ch == "," and depth == 1:
+            lists[-1].append(item.strip())
+            item = ""
+            continue
+        if depth >= 1:
+            item += ch
+    return lists
+
+
+SORT_ORDER_RE = re.compile(r" (ASC|DESC) NULLS (FIRST|LAST)$")
+
+
+def unpartitioned_windows(lines):
+    """Window nodes whose partition spec is empty. Formatted explain prints
+    `Arguments: [window exprs], [partition spec], [order spec]` and drops an
+    empty list, so a Window with one list, or with two whose second holds
+    sort orders, has no partition spec."""
+    n, in_window = 0, False
+    for ln in lines:
+        if re.match(r"^\(\d+\) Window$", ln.strip()):
+            in_window = True
+        elif in_window and ln.startswith("Arguments: "):
+            lists = top_lists(ln[len("Arguments: "):].strip())
+            if len(lists) == 1 or (len(lists) == 2 and all(
+                    SORT_ORDER_RE.search(x) for x in lists[1])):
+                n += 1
+            in_window = False
+        elif re.match(r"^\(\d+\) ", ln):
+            in_window = False
+    return n
+
+
 def main():
     args = [a for a in sys.argv[1:] if not a.startswith("--allow")]
     allow = set()
@@ -82,6 +136,11 @@ def main():
         if a.startswith("--allow="):
             allow = set(a.split("=", 1)[1].split(","))
     old, new = parse(args[0]), parse(args[1])
+    unpart = {q: k for q, lines in sections(args[1]).items()
+              if (k := unpartitioned_windows(lines))}
+    print(f"unpartitioned Window ({len(unpart)} queries): "
+          + ", ".join(f"{q} ({k})" if k > 1 else q
+                      for q, k in sorted(unpart.items())))
     added = sorted(set(new) - set(old))
     removed = sorted(set(old) - set(new))
     if added:
