@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LocalRelation, LogicalPlan, Project, Repartition, Sample}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, Join, LeafNode, LocalRelation, LogicalPlan, Project, Repartition, Sample, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -25,11 +27,21 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *  - the plan is not streaming and holds no nondeterministic expression
   *    and no `Sample`, whose results depend on the partitioning;
   *  - a `Range` leaf (and any other leaf) closes the gate: its partition
-  *    count is the caller's choice.
+  *    count is the caller's choice;
+  *  - the plan computes no aggregate, join or window twice, and joins no
+  *    explode with itself. An exchange plan computes such work once and
+  *    reads it again through `ReusedExchange` (both sides of a self-join
+  *    shuffle alike); one partition has no exchange to reuse, so it would
+  *    pay that work twice in one task. Such plans were the gate's worst
+  *    measured losses: e8_collocations 1.7× slower at sf0.1, e1_winnowing
+  *    2.1× and e1_minhash_pairs 1.8× at 10× (SCALE.md).
   *
   * What the gate does not bound: it measures the inputs, not the rows the
   * plan makes from them. A row-multiplying explode or join over small
-  * inputs runs in the one task too.
+  * inputs runs in the one task too. Nor does it follow a checkpoint: one
+  * built by a one-partition plan keeps one partition, so the work above it
+  * runs in one task even in a plan the gate leaves alone. SCALE.md has the
+  * timings on both sides of the gate at sf0.1 and 10×.
   */
 object OnePartition extends Rule[LogicalPlan] {
 
@@ -42,7 +54,27 @@ object OnePartition extends Rule[LogicalPlan] {
       !plan.exists(p => p.isInstanceOf[Sample] || p.expressions.exists(!_.deterministic)) && {
         val sizes = plan.collectLeaves().map(leafSize)
         sizes.forall(_.isDefined) && sizes.flatten.sum <= threshold
-      }
+      } && !repeatsWork(plan)
+  }
+
+  /** True when an aggregate, join or window occurs twice, or a join has the
+    * same explode on both sides. An aggregate is keyed as its partial
+    * aggregate and exchange are: by its grouping, its aggregate functions
+    * and its child, so two copies that column pruning left with different
+    * outputs still match. A self-join of a scan alone is not repeated work:
+    * one partition only scans twice. */
+  private def repeatsWork(plan: LogicalPlan): Boolean = {
+    val work = plan.collect {
+      case a: Aggregate =>
+        val fns = a.aggregateExpressions.flatMap(_.collect { case f: AggregateExpression => f })
+        a.copy(aggregateExpressions = fns.map(Alias(_, "f")())).canonicalized
+      case j: Join => j.canonicalized
+      case w: Window => w.canonicalized
+    }
+    work.distinct.size < work.size || plan.exists {
+      case j: Join => j.left.exists(_.isInstanceOf[Generate]) && j.left.canonicalized == j.right.canonicalized
+      case _ => false
+    }
   }
 
   /** The leaf's size in bytes, when it is a kind of leaf the gate admits

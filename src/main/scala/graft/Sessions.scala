@@ -8,8 +8,9 @@ import org.apache.spark.sql.SparkSession
   * ~2-3× total cores), UTC session TZ for oracle parity, nanos-as-long so the
   * driver fixtures' TIMESTAMP(NANOS) column is readable. The optimizer runs
   * [[OnePartition]]: a batch query whose inputs together fit under
-  * `spark.sql.autoBroadcastJoinThreshold` is planned as one partition, with
-  * no shuffle and no sort-sampling job; larger inputs plan as before. */
+  * `spark.sql.autoBroadcastJoinThreshold`, and that repeats no aggregate,
+  * join, window or self-joined explode, is planned as one partition, with
+  * no shuffle and no sort-sampling job; other plans are left as they were. */
 object Sessions {
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
     val spark = SparkSession.builder()

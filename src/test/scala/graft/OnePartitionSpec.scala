@@ -16,12 +16,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class OnePartitionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private val spark = TestSpark.spark
 
-  private def withConf[A](key: String, value: String)(f: => A): A = {
-    val prev = spark.conf.get(key)
-    try { spark.conf.set(key, value); f }
-    finally spark.conf.set(key, prev)
-  }
-
   private def wrapped(p: LogicalPlan): Boolean =
     p.exists { case Repartition(1, false, _) => true; case _ => false }
 
@@ -53,12 +47,36 @@ class OnePartitionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("the queries whose at-scale exchanges the plan-shape specs pin run unshuffled at sf0.01") {
     for (name <- Seq("q45_first_last", "q47_scd2", "q53_sessionize", "q54_range_frame",
         "e2_embed_outliers", "e3_pack", "e4l_heavy_hitters", "e6_curriculum",
-        "e6_global_shuffle", "e6_quota_sample", "e8_source_divergence")) {
+        "e6_global_shuffle", "e6_quota_sample")) {
       val df = SparkEntry.queries(name)(spark, TestSpark.sf001)
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
       assert("(?<!Broadcast)Exchange".r.findFirstIn(plan).isEmpty, s"$name:\n$plan")
     }
+  }
+
+  test("an aggregate computed twice keeps the exchange plan, which computes it once") {
+    val byStatus = orders.groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
+    // the second copy outputs only n after column pruning, yet repeats the
+    // same grouping over the same scan
+    val df = byStatus.crossJoin(byStatus.agg(sum("n").as("total"))).orderBy("o_orderstatus")
+    assert(!onePartition(df), df.queryExecution.optimizedPlan.treeString)
+    df.collect()
+    assert(df.queryExecution.executedPlan.toString.contains("ReusedExchange"),
+      df.queryExecution.executedPlan.toString)
+    // two different aggregates of the same scan are not repeated work
+    val byPriority = orders.groupBy("o_orderpriority").agg(count(lit(1)).as("m"))
+    assert(onePartition(byStatus.crossJoin(byPriority)))
+  }
+
+  test("a self-join of an explode keeps the exchange plan; a self-join of a scan does not") {
+    val exploded = orders.select(col("o_orderstatus"),
+      explode(array(col("o_orderkey") % 7, col("o_custkey") % 7)).as("k"))
+    val df = exploded.as("a").join(exploded.as("b"), col("a.k") === col("b.k"))
+      .select(col("a.o_orderstatus"), col("b.o_orderstatus"))
+    assert(!onePartition(df), df.queryExecution.optimizedPlan.treeString)
+    val scans = orders.select(col("o_custkey"), col("o_orderstatus"))
+    assert(onePartition(scans.as("a").join(scans.as("b"), col("a.o_custkey") === col("b.o_custkey"))))
   }
 
   test("a checkpoint whose size Spark knows qualifies; an RDD of unknown size does not") {
@@ -68,13 +86,13 @@ class OnePartitionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(!onePartition(sortedAggregate(unknown)))
     // an RDD of unknown size reports spark.sql.defaultSizeInBytes, which is
     // not a size even when it is small
-    withConf("spark.sql.defaultSizeInBytes", "1000") {
+    TestSpark.withConf("spark.sql.defaultSizeInBytes", "1000") {
       assert(!onePartition(sortedAggregate(spark.createDataFrame(checkpointed.rdd, checkpointed.schema))))
     }
   }
 
   test("inputs over the threshold, or a threshold of -1, leave the plan as it was") {
-    for (v <- Seq("1000", "-1")) withConf("spark.sql.autoBroadcastJoinThreshold", v) {
+    for (v <- Seq("1000", "-1")) TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold", v) {
       val df = sortedAggregate(orders)
       assert(!onePartition(df), s"threshold $v")
       df.collect()

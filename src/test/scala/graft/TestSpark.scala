@@ -9,14 +9,17 @@ object TestSpark {
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 
+  /** Runs `f` with the session conf `key` set to `value`, then restores it. */
+  def withConf[A](key: String, value: String)(f: => A): A = {
+    val prev = spark.conf.get(key)
+    try { spark.conf.set(key, value); f }
+    finally spark.conf.set(key, prev)
+  }
+
   /** Runs `f` with auto-broadcast off. Only explicit broadcast() hints then
     * produce broadcast joins, and `OnePartition`'s gate is closed, so the
     * plan has the exchange layout it has at scale. */
-  def withoutAutoBroadcast[A](f: => A): A = {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try { spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1"); f }
-    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
+  def withoutAutoBroadcast[A](f: => A): A = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(f)
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

@@ -733,6 +733,16 @@ class AnalysisSpec extends AnyFunSuite {
     assert(badEx.isEmpty, s"unexpected exchange keys:\n${badEx.mkString("\n")}")
   }
 
+  test("e8_source_divergence: the default session keeps the reused count exchanges — two scans") {
+    // The corpus fits OnePartition's size gate, but ns/nt repeat st/ct's
+    // aggregates, which one partition would compute again from their own
+    // scans (four scans and tokenizations); the gate leaves this plan alone.
+    val plan = finalPlan(Analysis.e8SourceDivergence(spark, TestSpark.sf001))
+    assert(plan.linesIterator.count(_.contains("Scan parquet")) == 2,
+      s"expected exactly 2 scans on the default session:\n$plan")
+    assert(plan.contains("ReusedExchange"), plan)
+  }
+
   test("e8_gini: the corpus reduces to the bounded histogram — one scan, no corpus sort, (source, tk)-keyed exchanges only") {
     val df = Analysis.e8Gini(spark, TestSpark.sf001)
     df.collect()
