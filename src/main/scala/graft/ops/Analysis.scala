@@ -868,9 +868,7 @@ object Analysis {
       verts: DataFrame, nv: DataFrame)
 
   private def prGraph(pairs: DataFrame): PrGraph = {
-    val edges = pairs.select(col("da").as("src"), col("db").as("dst"))
-      .unionByName(pairs.select(col("db").as("src"), col("da").as("dst")))
-      .localCheckpoint(true)
+    val edges = bothWays(pairs).localCheckpoint(true)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("dg"))
     val verts = edges.select(col("src").as("id")).distinct()
     PrGraph(edges, deg, verts, verts.agg(count(lit(1)).as("n")))
@@ -880,14 +878,18 @@ object Analysis {
     g.verts.crossJoin(broadcast(g.nv))
       .select(col("id"), (lit(1.0) / col("n").cast("double")).as("r"))
 
-  /** One damping round: edge ⋈ rank ⋈ degree → contribution sum by dst —
-    * the single edge-sized shuffle each iteration costs. */
-  private def prRound(g: PrGraph, r: DataFrame): DataFrame = {
-    val contrib = g.edges
+  /** Edge ⋈ rank ⋈ degree → the contribution sum `s` by dst — the single
+    * edge-sized shuffle each damping round costs (e9Pagerank, e9Ppr). */
+  private def prContrib(g: PrGraph, r: DataFrame): DataFrame =
+    g.edges
       .join(r, g.edges("src") === r("id"))
       .join(g.deg, "src")
       .select(col("dst"), (col("r") / col("dg").cast("double")).as("c"))
       .groupBy("dst").agg(sum(col("c")).as("s"))
+
+  /** One damping round: base/n + d · the contribution sum. */
+  private def prRound(g: PrGraph, r: DataFrame): DataFrame = {
+    val contrib = prContrib(g, r)
     g.verts.crossJoin(broadcast(g.nv))
       .join(contrib, g.verts("id") === contrib("dst"), "left")
       .select(col("id"),
@@ -1024,21 +1026,19 @@ object Analysis {
     val (r, it) = prOnDriver(pairs, budget, tol, maxIters).getOrElse {
       val g = prGraph(pairs)
       val loop = new Loop[Double]
-      var r = loop.start(prInit(g))
-      var delta = Double.MaxValue
-      while (loop.rounds < maxIters && delta >= tol) {
-        val prev = r
-        val (gen, dl) = loop.round(prRound(g, prev)) { next =>
-          val st = next.join(prev.select(col("id"), col("r").as("r0")), "id")
-            .agg(max(abs(col("r") - col("r0")))).head()
-          if (st.isNullAt(0)) 0.0 else st.getDouble(0)
-        }
-        r = gen
-        delta = dl
-      }
+      val r = loop.run(prInit(g), maxIters)(_ >= tol)(prRound(g, _))(maxDelta(_, _, "r"))
       (r, loop.rounds)
     }
     (prOut(r), it)
+  }
+
+  /** max |x − x₀| of column `x` over the ids of `next` and `prev`, 0 when
+    * they share none: the stopping statistic of the converged loops, ONE
+    * action. */
+  private def maxDelta(next: DataFrame, prev: DataFrame, x: String): Double = {
+    val st = next.join(prev.select(col("id"), col(x).as("x0")), "id")
+      .agg(max(abs(col(x) - col("x0")))).head()
+    if (st.isNullAt(0)) 0.0 else st.getDouble(0)
   }
 
   /** E9 — degree distribution of the near-dup graph: how many documents
@@ -1073,13 +1073,11 @@ object Analysis {
     * one (vertex, label)-keyed aggregate plus a per-vertex top-1 window —
     * every shuffle is pair-table-sized, the corpus never moves (the
     * connectedComponents/PageRank discipline). Fixed LpIters rounds keep
-    * it oracle-able; a deployment loops rounds with the
-    * pageRankConverged one-scalar-per-round stopping rule. */
+    * it oracle-able; a deployment runs the rounds on graft.ops.Loop
+    * under pageRankConverged's max-|Δ| stopping rule. */
   def e9LabelProp(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val p = Dedup.minhashPairTable(s, d)
-    val edges = p.select(col("da").as("src"), col("db").as("dst"))
-      .unionByName(p.select(col("db").as("src"), col("da").as("dst")))
+    val edges = bothWays(Dedup.minhashPairTable(s, d))
     var labels = edges.select(col("src").as("v")).distinct()
       .withColumn("lab", col("v"))
     val w = Window.partitionBy("src").orderBy(col("c").desc, col("lab"))
@@ -1111,73 +1109,49 @@ object Analysis {
     * these links". Emits survivors with their residual degree. Each
     * round is two semi-join-shaped prunes + a degree aggregate, all
     * PAIR-TABLE-sized (the corpus never moves); fixed rounds make the
-    * DuckDB oracle an unrolled CTE chain, and the fixpoint form below
-    * shows the loop discipline. */
-  def e9Kcore(s: SparkSession, d: String): DataFrame = {
-    val p = Dedup.minhashPairTable(s, d)
-    // Per-round eager localCheckpoint (the kcoreConverged loop's own
-    // discipline, applied to the declared fixed-round form): each round
-    // references `edges` three times (two degree legs + the prune input),
-    // so left lazy the unrolled plan re-evaluates the previous round's
-    // subtree per reference — ~3^KcorePeels duplicated prune chains (the
-    // plan dump was 424 KB and the query read 1.5 s; checkpointed, each
-    // round's prune runs once over the pair-table-sized frame).
-    var edges = p.select(col("da"), col("db")).localCheckpoint(true)
-    for (_ <- 1 to KcorePeels) {
-      val deg = edges.select(col("da").as("v"))
-        .unionByName(edges.select(col("db").as("v")))
-        .groupBy("v").agg(count(lit(1)).as("dg"))
-      val keep = deg.filter(col("dg") >= KcoreK).select("v")
-      edges = edges
-        .join(keep.select(col("v").as("da")), "da")
+    * DuckDB oracle an unrolled CTE chain. The rounds are kcorePeeled's,
+    * shared with the fixpoint form below, so a round that removes
+    * nothing ends the peel early with the same survivors. */
+  def e9Kcore(s: SparkSession, d: String): DataFrame =
+    kcorePeeled(Dedup.minhashPairTable(s, d), KcoreK, KcorePeels)._1.orderBy("doc_id")
+
+  /** K-core to FIXPOINT — the deployment form: peel until a round removes
+    * no edge, or `maxIters` rounds removed some. Returns (survivor doc_ids
+    * with final degree, rounds that removed an edge), so `rounds` reads as
+    * peels applied, as KcorePeels counts them. At the fixpoint every
+    * survivor has degree ≥ k — the true k-core, which fixed-round peeling
+    * only approximates from above. */
+  def kcoreConverged(s: SparkSession, d: String, k: Long = KcoreK,
+      maxIters: Int = 50): (DataFrame, Int) =
+    kcorePeeled(Dedup.minhashPairTable(s, d), k, maxIters)
+
+  /** The peel rounds of e9Kcore and kcoreConverged, one graft.ops.Loop
+    * round each: drop every edge of the (da, db) pairs with an endpoint of
+    * degree < k, until a round removes nothing or `maxPeels` rounds ran.
+    * A round reads its edges three times (two degree legs and the prune
+    * input), so each takes a kernel round even at a fixed count. Its ONE
+    * action counts the new and the replaced edges together; peeling only
+    * removes rows, so equal counts are equal sets. Returns the survivors'
+    * (doc_id, degree) and the rounds that removed an edge. */
+  private def kcorePeeled(pairs: DataFrame, k: Long, maxPeels: Int): (DataFrame, Int) = {
+    val loop = new Loop[Long] // edges the round removed
+    val edges = loop.run(pairs.select(col("da"), col("db")), maxPeels)(_ > 0) { prev =>
+      val keep = endpointDegrees(prev).filter(col("dg") >= k).select("v")
+      prev.join(keep.select(col("v").as("da")), "da")
         .join(keep.select(col("v").as("db")), "db")
         .select("da", "db")
-        .localCheckpoint(true)
+    } { (next, prev) =>
+      prev.select(lit(1L).as("n")).unionByName(next.select(lit(-1L).as("n")))
+        .agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
     }
-    edges.select(col("da").as("doc_id"))
-      .unionByName(edges.select(col("db").as("doc_id")))
-      .groupBy("doc_id").agg(count(lit(1)).as("degree"))
-      .orderBy("doc_id")
+    (endpointDegrees(edges).select(col("v").as("doc_id"), col("dg").as("degree")),
+      loop.stats.count(_ > 0))
   }
 
-  /** K-core to FIXPOINT — the deployment form (pageRankConverged /
-    * kmeansTrained discipline): peel until a round removes no node; the
-    * driver reads ONE edge-count scalar per round (localCheckpoint
-    * truncates the per-round lineage). Returns (survivor doc_ids with
-    * final degree, rounds run). At the fixpoint every survivor has
-    * degree ≥ k — the true k-core, which fixed-round peeling only
-    * approximates from above. */
-  def kcoreConverged(s: SparkSession, d: String, k: Long = KcoreK,
-      maxIters: Int = 50): (DataFrame, Int) = {
-    val p = Dedup.minhashPairTable(s, d)
-    var edges = p.select(col("da"), col("db")).localCheckpoint()
-    var n = edges.count()
-    var it = 0
-    var done = false
-    while (it < maxIters && !done) {
-      val deg = edges.select(col("da").as("v"))
-        .unionByName(edges.select(col("db").as("v")))
-        .groupBy("v").agg(count(lit(1)).as("dg"))
-      val keep = deg.filter(col("dg") >= k).select("v")
-      val next = edges
-        .join(keep.select(col("v").as("da")), "da")
-        .join(keep.select(col("v").as("db")), "db")
-        .select("da", "db").localCheckpoint()
-      val m = next.count()
-      // Count equality IS set equality here: peeling is monotone (every
-      // round's survivor set is a subset of the previous round's edges,
-      // since rows are only ever filtered out), so next ⊆ edges and
-      // |next| == |edges| ⟹ next == edges. `it` counts only rounds that
-      // REMOVED something — the final fixpoint-detection round is
-      // deliberately not counted, so `rounds` reads as "peels applied",
-      // matching how KcorePeels parameterizes the fixed-round variant.
-      if (m == n) done = true else { edges = next; n = m; it += 1 }
-    }
-    val core = edges.select(col("da").as("doc_id"))
-      .unionByName(edges.select(col("db").as("doc_id")))
-      .groupBy("doc_id").agg(count(lit(1)).as("degree"))
-    (core, it)
-  }
+  /** Each endpoint's degree `dg` in a (da, db) edge list. */
+  private def endpointDegrees(edges: DataFrame): DataFrame =
+    edges.select(col("da").as("v")).unionByName(edges.select(col("db").as("v")))
+      .groupBy("v").agg(count(lit(1)).as("dg"))
 
   /** E9 — global triangle count of the near-dup graph plus the number of
     * connected vertex pairs ("wedges" through the canonical ordering),
@@ -1320,8 +1294,7 @@ object Analysis {
     * TakeOrderedAndProject (per-partition heaps), never a global sort. */
   def e9LinkPred(s: SparkSession, d: String): DataFrame = {
     val p = Dedup.minhashPairTable(s, d)
-    val e = p.select(col("da").as("src"), col("db").as("dst"))
-      .unionByName(p.select(col("db").as("src"), col("da").as("dst")))
+    val e = bothWays(p)
     val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     val cand = e.as("e1")
       .join(e.as("e2"),
@@ -1376,63 +1349,57 @@ object Analysis {
     * document stitched from many earlier ones (aggregator/mirror pages —
     * prime drop candidates). Fixed HitsIters mutual-reinforcement rounds
     * (a ← Σ h over in-edges, h ← Σ a over out-edges, each L∞-normalized);
-    * a deployment loops rounds under the pageRankConverged
-    * one-scalar-per-round stopping rule. Plan: vertices are edge
+    * hitsConverged runs the same rounds to convergence. Plan: vertices are edge
     * endpoints only, every join/aggregate is PAIR-TABLE-sized, the 1-row
     * max rides a broadcast — the corpus never moves (the e9 family
     * discipline). */
   def e9Hits(s: SparkSession, d: String): DataFrame = {
-    val p = Dedup.minhashPairTable(s, d)
-    val ed = p.select(col("da").as("src"), col("db").as("dst"))
-      .localCheckpoint(true)
-    val v = ed.select(col("src").as("id"))
-      .unionByName(ed.select(col("dst").as("id"))).distinct()
+    val (ed, v) = hitsGraph(Dedup.minhashPairTable(s, d))
     var hub = v.select(col("id"), lit(1.0).as("x"))
     var auth = v.select(col("id"), lit(1.0).as("x"))
     for (_ <- 1 to HitsIters) {
       auth = hitsHalf(ed, v, hub, "src", "dst")
       hub = hitsHalf(ed, v, auth, "dst", "src")
     }
+    hitsOut(hub, auth)
+  }
+
+  /** The directed (src, dst) edges of a (da, db) pair table and their
+    * endpoints (id). */
+  private def hitsGraph(pairs: DataFrame): (DataFrame, DataFrame) = {
+    val ed = pairs.select(col("da").as("src"), col("db").as("dst"))
+    (ed, ed.select(col("src").as("id")).unionByName(ed.select(col("dst").as("id"))).distinct())
+  }
+
+  /** The (doc_id, hub, authority) rows of e9_hits and hitsConverged. */
+  private def hitsOut(hub: DataFrame, auth: DataFrame): DataFrame =
     hub.select(col("id"), col("x").as("hx"))
       .join(auth.select(col("id"), col("x").as("ax")), "id")
       .select(col("id").as("doc_id"), round(col("hx"), 6).as("hub"),
         round(col("ax"), 6).as("authority"))
       .orderBy("doc_id")
-  }
 
   /** HITS to CONVERGENCE — the deployment loop the fixed-iteration
-    * declared query documents (pageRankConverged discipline): the same
-    * hitsHalf plan repeats until max |Δhub| < tol, the driver reads ONE
-    * scalar per round, and a localCheckpoint truncates the per-round
-    * lineage. Returns (scores rounded like the declared query, rounds
-    * run). Hub delta is the convergence witness: the authority update is
-    * a pure function of the hub table, so a converged hub implies a
-    * converged authority one half-step later. */
+    * declared query documents: graft.ops.Loop rounds of both hitsHalf
+    * steps until max |Δhub| < tol, each round ONE action, the max |Δhub|
+    * join against the replaced hub table. An empty pair table stops after
+    * one round (max |Δ| over no vertex is 0). The pair table is read
+    * every round, so pass a materialized one (as the declared queries'
+    * pair memo is). Returns (scores rounded like the declared query,
+    * rounds run). Hub delta is the convergence witness: the authority
+    * update is a pure function of the hub table, so a converged hub
+    * implies a converged authority one half-step later. */
   def hitsConverged(pairs: DataFrame, tol: Double,
       maxIters: Int = 50): (DataFrame, Int) = {
-    val ed = pairs.select(col("da").as("src"), col("db").as("dst"))
-      .localCheckpoint(true)
-    val v = ed.select(col("src").as("id"))
-      .unionByName(ed.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(true)
-    var hub = v.select(col("id"), lit(1.0).as("x")).localCheckpoint(true)
-    var it = 0
-    var delta = Double.MaxValue
-    while (it < maxIters && delta >= tol) {
-      val auth = hitsHalf(ed, v, hub, "src", "dst").localCheckpoint(true)
-      val next = hitsHalf(ed, v, auth, "dst", "src").localCheckpoint(true)
-      delta = next
-        .join(hub.select(col("id"), col("x").as("x0")), "id")
-        .agg(max(abs(col("x") - col("x0")))).head().getDouble(0)
-      hub = next
-      it += 1
-    }
-    val auth = hitsHalf(ed, v, hub, "src", "dst")
-    (hub.select(col("id"), col("x").as("hx"))
-      .join(auth.select(col("id"), col("x").as("ax")), "id")
-      .select(col("id").as("doc_id"), round(col("hx"), 6).as("hub"),
-        round(col("ax"), 6).as("authority"))
-      .orderBy("doc_id"), it)
+    val (ed, v) = hitsGraph(pairs)
+    val loop = new Loop[Double]
+    // a hub table holds every vertex, so a round reads the vertex set
+    // from the live generation instead of aggregating the edges again
+    val hub = loop.run(v.select(col("id"), lit(1.0).as("x")), maxIters)(_ >= tol) { prev =>
+      val pv = prev.select("id")
+      hitsHalf(ed, pv, hitsHalf(ed, pv, prev, "src", "dst"), "dst", "src")
+    }(maxDelta(_, _, "x"))
+    (hitsOut(hub, hitsHalf(ed, hub.select("id"), hub, "src", "dst")), loop.rounds)
   }
 
   /** E9 — degree ASSORTATIVITY of the near-dup graph (Newman 2002):
@@ -1455,9 +1422,7 @@ object Analysis {
     * edges + a 1-row moment fold — everything pair-table-sized (the
     * e9 family discipline). */
   def e9Assortativity(s: SparkSession, d: String): DataFrame = {
-    val p = Dedup.minhashPairTable(s, d)
-    val e = p.select(col("da").as("src"), col("db").as("dst"))
-      .unionByName(p.select(col("db").as("src"), col("da").as("dst")))
+    val e = bothWays(Dedup.minhashPairTable(s, d))
     val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("dg"))
     e.join(broadcast(deg.select(col("id").as("src"), col("dg").as("dx"))),
         "src")
@@ -1488,35 +1453,54 @@ object Analysis {
     * reached). This is the "blast radius" audit behind keeper selection:
     * a corpus whose mass sits ≤ 2 hops from its top hubs is a few mirror
     * families (dedup will collapse it dramatically); mass at −1 means
-    * duplication is scattered in many small independent clusters. Each
-    * round is one frontier ⋈ edges expansion, a DISTINCT, and a LEFT ANTI
-    * against the visited set — ALL pair-table-sized (the corpus never
-    * moves), and the visited set grows by union without re-shuffling
-    * prior rounds. A deployment loops rounds with the kcoreConverged
-    * one-scalar-per-round stopping rule (stop when the frontier empties). */
+    * duplication is scattered in many small independent clusters. The
+    * rounds are bfs's, shared with bfsConverged: ALL pair-table-sized
+    * (the corpus never moves). */
   def e9Bfs(s: SparkSession, d: String): DataFrame = {
-    val p = Dedup.minhashPairTable(s, d)
-    val e = p.select(col("da").as("src"), col("db").as("dst"))
-      .unionByName(p.select(col("db").as("src"), col("da").as("dst")))
-      .localCheckpoint(true)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("dg"))
-    val seeds = deg.orderBy(col("dg").desc, col("src")).limit(BfsSeeds)
-      .select(col("src").as("v"))
-    var dist = seeds.withColumn("dist", lit(0))
-    for (k <- 1 to BfsRounds) {
-      val frontier = dist.filter(col("dist") === (k - 1))
-        .select(col("v").as("fv"))
-      val next = e.join(frontier, col("src") === col("fv"))
-        .select(col("dst").as("v")).distinct()
-        .join(dist.select("v"), Seq("v"), "left_anti")
-        .withColumn("dist", lit(k))
-      dist = dist.unionByName(next)
-    }
+    val e = bothWays(Dedup.minhashPairTable(s, d))
     e.select(col("src").as("v")).distinct()
-      .join(dist, Seq("v"), "left")
+      .join(bfs(e, bfsSeeds(e, BfsSeeds), Nil, BfsRounds)._1, Seq("v"), "left")
       .select(coalesce(col("dist"), lit(-1)).as("dist"))
       .groupBy("dist").agg(count(lit(1)).as("n_docs"))
       .orderBy("dist")
+  }
+
+  /** Both directions of every (da, db) pair as (src, dst) edges. */
+  private def bothWays(pairs: DataFrame): DataFrame =
+    pairs.select(col("da").as("src"), col("db").as("dst"))
+      .unionByName(pairs.select(col("db").as("src"), col("da").as("dst")))
+
+  /** The `k` highest-degree vertices `v` of (src, dst) edges, ties broken
+    * by id so both engines pick the same seeds. */
+  private def bfsSeeds(e: DataFrame, k: Int): DataFrame =
+    e.groupBy("src").agg(count(lit(1)).as("dg"))
+      .orderBy(col("dg").desc, col("src")).limit(k).select(col("src").as("v"))
+
+  /** Synchronous BFS from `seeds` (keys…, v) over the (src, dst) edges
+    * `e`, the rounds of e9Bfs, perSeedBfsDist and bfsConverged: one
+    * graft.ops.Loop round per hop k adds the unvisited neighbors of layer
+    * k − 1 at distance k — one frontier ⋈ edges expansion, a DISTINCT and
+    * a LEFT ANTI against the visited set, which grows by union without
+    * re-shuffling earlier layers. `keys` run independent searches side by
+    * side (one per seed in perSeedBfsDist). A round reads the visited set
+    * three times, so each takes a kernel round even at a fixed count; its
+    * ONE action counts the vertices it added. Stops after a round that
+    * added none or after `maxRounds`; returns the (keys…, v, dist) table
+    * and the rounds that added a vertex. */
+  private def bfs(e: DataFrame, seeds: DataFrame, keys: Seq[String],
+      maxRounds: Int): (DataFrame, Int) = {
+    val loop = new Loop[Long] // vertices the round added
+    val kv = keys :+ "v"
+    // loop.rounds is the previous round's number while a round runs
+    val dist = loop.run(seeds.withColumn("dist", lit(0)), maxRounds)(_ > 0) { prev =>
+      val frontier = prev.filter(col("dist") === loop.rounds)
+        .select(keys.map(col) :+ col("v").as("fv"): _*)
+      prev.unionByName(e.join(frontier, col("src") === col("fv"))
+        .select(keys.map(col) :+ col("dst").as("v"): _*).distinct()
+        .join(prev.select(kv.map(col): _*), kv, "left_anti")
+        .withColumn("dist", lit(loop.rounds + 1)))
+    }((next, _) => next.agg(count(when(col("dist") === loop.rounds + 1, 1))).head().getLong(0))
+    (dist, loop.stats.count(_ > 0))
   }
 
   /** E9 — EFFECTIVE DIAMETER (sampled): per-seed hop-distance
@@ -1530,32 +1514,16 @@ object Analysis {
     * typical contaminated pair. Deterministic: hop counts and the cum_bp
     * shares are integers; seeds are the (degree desc, id) top-K.
     * Plan at 100 TB: the frontier tables are (seed, vertex) pairs — at
-    * most BfsSeeds× e9_bfs's — with one edge-sized shuffle per unrolled
-    * round over the checkpointed pair graph; the distribution fold is
+    * most BfsSeeds× e9_bfs's — with one edge-sized shuffle per round
+    * over the pair memo; the distribution fold is
     * ≤ BfsRounds+1 keys and the cumulative window runs on that bounded
     * digest (allowlisted in the unpartitioned-window audit). */
   /** Per-seed BFS distance table (sd, v, dist ≤ BfsRounds) from the
     * BfsSeeds top-degree seeds — the builder e9_effective_diameter and
     * e9_closeness COMPOSE verbatim (can't-drift). */
   private def perSeedBfsDist(s: SparkSession, d: String): DataFrame = {
-    val p = Dedup.minhashPairTable(s, d)
-    val e = p.select(col("da").as("src"), col("db").as("dst"))
-      .unionByName(p.select(col("db").as("src"), col("da").as("dst")))
-      .localCheckpoint(true)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("dg"))
-    val seeds = deg.orderBy(col("dg").desc, col("src")).limit(BfsSeeds)
-      .select(col("src").as("sd"))
-    var dist = seeds.select(col("sd"), col("sd").as("v"), lit(0).as("dist"))
-    for (k <- 1 to BfsRounds) {
-      val frontier = dist.filter(col("dist") === (k - 1))
-        .select(col("sd"), col("v").as("fv"))
-      val next = e.join(frontier, col("src") === col("fv"))
-        .select(col("sd"), col("dst").as("v")).distinct()
-        .join(dist.select("sd", "v"), Seq("sd", "v"), "left_anti")
-        .withColumn("dist", lit(k))
-      dist = dist.unionByName(next).localCheckpoint(true)
-    }
-    dist
+    val e = bothWays(Dedup.minhashPairTable(s, d))
+    bfs(e, bfsSeeds(e, BfsSeeds).select(col("v").as("sd"), col("v")), Seq("sd"), BfsRounds)._1
   }
 
   def e9EffectiveDiameter(s: SparkSession, d: String): DataFrame = {
@@ -1593,40 +1561,19 @@ object Analysis {
       .orderBy("seed_doc")
 
   /** BFS to EXHAUSTION — the deployment loop the fixed-round declared
-    * query documents (kcoreConverged discipline): expand until a round's
-    * frontier is EMPTY, the driver reading one frontier-count scalar per
-    * round while localCheckpoint truncates the growing visited-set
-    * lineage. Returns (per-vertex hop distances from the top-degree
-    * seeds — the full reachability closure, no −1 layer because the
-    * loop only stops when nothing is left to reach — and rounds run).
+    * query documents: expand until a round reaches no new vertex, each
+    * round ONE action (the count of the vertices it added). The pair
+    * table is read every round, so pass a materialized one (as the
+    * declared queries' pair memo is). Returns (per-vertex hop distances
+    * from the top-degree seeds — the full reachability closure, no −1
+    * layer because the loop only stops when nothing is left to reach —
+    * and the rounds that added a vertex, as BfsRounds counts them).
     * `maxIters` is the runaway valve for a pathological diameter. */
   def bfsConverged(pairs: DataFrame, seedK: Int = BfsSeeds,
       maxIters: Int = 50): (DataFrame, Int) = {
-    val e = pairs.select(col("da").as("src"), col("db").as("dst"))
-      .unionByName(pairs.select(col("db").as("src"), col("da").as("dst")))
-      .localCheckpoint(true)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("dg"))
-    val seeds = deg.orderBy(col("dg").desc, col("src")).limit(seedK)
-      .select(col("src").as("v"))
-    var dist = seeds.withColumn("dist", lit(0)).localCheckpoint(true)
-    var it = 0
-    var frontierN = 1L
-    while (it < maxIters && frontierN > 0) {
-      val frontier = dist.filter(col("dist") === it).select(col("v").as("fv"))
-      val next = e.join(frontier, col("src") === col("fv"))
-        .select(col("dst").as("v")).distinct()
-        .join(dist.select("v"), Seq("v"), "left_anti")
-        .withColumn("dist", lit(it + 1))
-        .localCheckpoint(true)
-      frontierN = next.count()
-      if (frontierN > 0) { dist = dist.unionByName(next).localCheckpoint(true) }
-      it += 1
-    }
-    // the last loop iteration is the empty-frontier detection probe and
-    // adds no vertices — report only expansions that did, matching how
-    // BfsRounds parameterizes the fixed-round variant (the kcoreConverged
-    // rounds-that-removed-something convention)
-    (dist.orderBy("v"), it - 1)
+    val e = bothWays(pairs)
+    val (dist, rounds) = bfs(e, bfsSeeds(e, seedK), Nil, maxIters)
+    (dist.orderBy("v"), rounds)
   }
 
   /** E8 — hour-of-week seasonality profile: the 7×24 activity heatmap
@@ -2158,9 +2105,10 @@ object Analysis {
     * 6-dp rounded doubles (the e9_pagerank float contract: per-vertex
     * sums bounded by degree). Fewer than PprSeeds vertices would carry
     * reduced restart mass; the pair graph exceeds the seed count at
-    * every fixture scale. Plan at 100 TB: identical to e9_pagerank —
-    * one edge-sized shuffle per round, checkpointed edges, degrees and
-    * the seed vector broadcast. */
+    * every fixture scale. Plan at 100 TB: identical to e9_pagerank (its
+    * prContrib is the round's contribution step) — one edge-sized
+    * shuffle per round, checkpointed edges, degrees and the seed vector
+    * broadcast, all rounds one lazy plan. */
   def e9Ppr(s: SparkSession, d: String): DataFrame = {
     val g = prGraph(Dedup.minhashPairTable(s, d))
     val seeds = g.verts
@@ -2175,15 +2123,11 @@ object Analysis {
       .localCheckpoint(true)
     var r = sv.select(col("id"), col("sv").as("r"))
     for (_ <- 1 to PrIters) {
-      val contrib = g.edges
-        .join(r, g.edges("src") === r("id"))
-        .join(g.deg, "src")
-        .select(col("dst"), (col("r") / col("dg").cast("double")).as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("cs"))
+      val contrib = prContrib(g, r)
       r = sv.join(contrib, sv("id") === contrib("dst"), "left")
         .select(sv("id"),
           (lit(PrBase) * col("sv") +
-            lit(PrDamping) * coalesce(col("cs"), lit(0.0))).as("r"))
+            lit(PrDamping) * coalesce(col("s"), lit(0.0))).as("r"))
     }
     r.join(sv.select(col("id"), (col("sv") > 0.0).as("is_seed")), "id")
       .select(col("id").as("doc_id"), round(col("r"), 6).as("pprank"),

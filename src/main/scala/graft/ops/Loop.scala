@@ -17,8 +17,16 @@ import org.apache.spark.unsafe.Platform
 
 /** The loop kernel of the iterative operators: connected components
   * (Dedup.connectedComponentsStar), PageRank (Analysis.e9Pagerank,
-  * Analysis.pageRankConverged) and greedy k-center
-  * (Similarity.kcenterPicks). A loop finishes in one of two places.
+  * Analysis.pageRankConverged), HITS (Analysis.hitsConverged), k-core
+  * peeling (Analysis.e9Kcore, Analysis.kcoreConverged), BFS
+  * (Analysis.e9Bfs, Analysis.bfsConverged and the per-seed search of
+  * e9_effective_diameter and e9_closeness), greedy k-center
+  * (Similarity.kcenterPicks), the greedy graph walk
+  * (Similarity.e2GraphSearch), the top-PC power iteration
+  * (Similarity.e2TopPc, e2_abtt) and BPE training (TextOps, the e3_bpe
+  * queries). A loop finishes in one of two places;
+  * only connected components, PageRank and k-center have a driver finish,
+  * and the others always take the distributed rounds.
   *
   *  - DRIVER FINISH. A loop whose state fits [[DriverBytes]] collects it
   *    and finishes in plain Scala (union-find, power iteration, the greedy
@@ -30,8 +38,12 @@ import org.apache.spark.unsafe.Platform
   *    the round's stats (the action reads every partition, so it also
   *    materializes the checkpoint), releases the generation it replaced
   *    and records the stats. A fixed-round loop with no stopping test
-  *    (e9Pagerank) builds its rounds as one lazy plan and runs no
-  *    per-round action at all.
+  *    whose unrolled plan stays small (e9Pagerank, e9Ppr, e9LabelProp,
+  *    the two rounds of e9Hits) builds its rounds as one lazy plan and
+  *    runs no per-round action at all. One whose round reads the state
+  *    three times (k-core, BFS, the graph walk) takes kernel rounds even
+  *    at a fixed count: left lazy, its plan copies every earlier round
+  *    once per read.
   *
   * HANDOFF RULE. The state fits when its rows, in Spark's own row
   * format (UnsafeRow: null bits, 8 B a fixed-width field, variable-width
@@ -171,6 +183,21 @@ final class Loop[S] {
     live = Some(gen)
     log += st
     (gen, st)
+  }
+
+  /** Rounds from `init` (the first generation) until a round's stats fail
+    * `more` or `maxRounds` rounds ran. Each round's next generation is
+    * `step` of the live one, and `stat(next, live)` is its ONE action,
+    * reading every partition of `next` as [[round]] requires. Returns the
+    * live generation. */
+  def run(init: DataFrame, maxRounds: Int)(more: S => Boolean)(
+      step: DataFrame => DataFrame)(stat: (DataFrame, DataFrame) => S): DataFrame = {
+    var gen = start(init)
+    while (rounds < maxRounds && log.lastOption.forall(more)) {
+      val prev = gen
+      gen = round(step(prev))(stat(_, prev))._1
+    }
+    gen
   }
 
   /** Release the live generation, for a loop whose result is driver-side. */

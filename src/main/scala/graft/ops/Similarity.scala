@@ -980,9 +980,8 @@ object Similarity {
     // size-independent) but were consumed 4-5× by the unrolled greedy
     // stages below, re-reading the truth memo and re-running the corpus
     // embedding fetch + pairwise dots per reference. Round 15: eager
-    // localCheckpoint both (the per-round state discipline of the walk/
-    // peel loops) — one memo read + ONE corpus scan + one tiny pairwise
-    // stage per execution, identical rows flowing into identical
+    // localCheckpoint both — one memo read + ONE corpus scan + one tiny
+    // pairwise stage per execution, identical rows flowing into identical
     // integer-exact scoring.
     val cand = sampledExactTopK(s, d, MmrPool)
       .select(col("vec_id").as("q"), col("other_id").as("c"),
@@ -3322,7 +3321,7 @@ object Similarity {
         nrm: org.apache.spark.sql.Column) =
       graft.functions.Vectors.dot(col("qemb"), emb) / (col("qnrm") * nrm)
     val ew = Window.partitionBy("qid").orderBy("pref")
-    var st = qe
+    val st0 = qe
       .crossJoin(broadcast(cvec.filter(col("cid").isin(entryIds: _*))))
       .filter(col("cid") =!= col("qid"))
       .withColumn("pref",
@@ -3336,16 +3335,15 @@ object Similarity {
     // the unrolled plan re-evaluates the previous round's subtree per
     // reference, ~3^rounds copies of the knn-release and vector scans
     // (the measured plan dump was 741 KB of duplicated subtrees and the
-    // query read 4.1 s). The walk state is |sample| rows, so an eager
-    // localCheckpoint BETWEEN rounds (the kcoreConverged / CC-star loop
-    // discipline) makes every round's work run exactly once — except the
-    // LAST round, left lazy so the emitted serving plan still shows the
-    // walk's real leaves (the g1 release scan and the broadcast vector
-    // side — Round14OpsSpec pins `graft_knn_graph` in the executed plan);
-    // its ≤3 reference re-evaluations cost three snapshot scans, not a
-    // 3^rounds tower.
-    st = st.localCheckpoint(true)
-    for (round <- 1 to GraphSearchSteps) {
+    // query read 4.1 s). The walk state is |sample| rows, so every round
+    // but the last is a graft.ops.Loop round (its one action counts the
+    // walkers), and every round's work runs exactly once. The LAST round
+    // stays lazy so the emitted serving plan still shows the walk's real
+    // leaves (the g1 release scan and the broadcast vector side —
+    // Round14OpsSpec pins `graft_knn_graph` in the executed plan); its ≤3
+    // reference re-evaluations cost three snapshot scans, not a 3^rounds
+    // tower.
+    def step(st: DataFrame): DataFrame = {
       val cand = st
         .join(knn.select(col("vec_id").as("cur"),
           col("other_id").as("cid")), Seq("cur"))
@@ -3360,14 +3358,15 @@ object Similarity {
         .agg(min(struct((-col("csim")).as("ns"), col("cid").as("nb")))
           .as("m"))
         .select(col("qid"), col("m.nb").as("ncur"), (-col("m.ns")).as("nsim"))
-      val next = st.join(best, "qid")
+      st.join(best, "qid")
         .select(col("qid"), col("qemb"), col("qnrm"),
           col("ncur").as("ncur2"), col("nsim").as("nsim2"),
           (col("hops") +
             when(col("ncur") =!= col("cur"), 1L).otherwise(0L)).as("hops"))
         .withColumnRenamed("ncur2", "cur").withColumnRenamed("nsim2", "sim")
-      st = if (round < GraphSearchSteps) next.localCheckpoint(true) else next
     }
+    val st = step(new Loop[Long].run(st0, GraphSearchSteps - 1)(_ => true)(step)(
+      (next, _) => next.count()))
     // exact global cosine top-1 from the shared exact-truth memo (round
     // 12) — the walk's own state/edge plumbing is untouched; only the
     // baseline leg stops re-paying the sample × corpus scan
@@ -3448,7 +3447,7 @@ object Similarity {
     * directions are bit-identical UNROUNDED doubles and only the
     * output rounds (6-dp, the e9_pagerank float contract). Plan at
     * 100 TB: three narrow scans, 64 decimal keys per exchange, the
-    * direction rides as a 1-row localCheckpoint — nothing else moves. */
+    * direction rides as a 1-row loop generation — nothing else moves. */
   def e2TopPc(s: SparkSession, d: String): DataFrame = {
     topPcDirection(s, d)
       .select(posexplode(col("varr")).as(Seq("dim0", "vc")), col("lam"))
@@ -3513,15 +3512,17 @@ object Similarity {
   }
 
   /** The e2_top_pc power-iteration loop, shared so e2_abtt's direction
-    * cannot drift from the audited one; returns the 1-row (varr, lam). */
+    * cannot drift from the audited one; returns the 1-row (varr, lam).
+    * Each round is a graft.ops.Loop round whose one action (a count)
+    * materializes the new direction. */
   private def topPcDirection(s: SparkSession, d: String): DataFrame = {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val e = embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("ed"))
-    var v = s.range(1).select(
+    val v0 = s.range(1).select(
       expr("transform(sequence(1, 64), i -> 0.125D)").as("varr"),
-      lit(0.0).as("lam")).localCheckpoint(true)
-    for (_ <- 1 to TopPcIters) {
+      lit(0.0).as("lam"))
+    new Loop[Long].run(v0, TopPcIters)(_ => true) { v =>
       val sums = e.crossJoin(broadcast(v))
         .withColumn("sv",
           graft.functions.Vectors.dotD(col("ed"), col("varr")))
@@ -3535,7 +3536,7 @@ object Similarity {
       // round); both engines then round the same integer to double once.
       // Bound: Σ S² < 10³⁸ ⇒ |S_j| ≲ 1.25×10¹⁸ — holds to ~10¹¹ rows at
       // |s·x| ≤ 10; past that, quantize at 10⁴ instead (same identity).
-      v = sums
+      sums
         .groupBy()
         .agg(collect_list(struct(col("dim"), col("sd"))).as("t"),
           sum(col("sd") * col("sd")).as("ssq"))
@@ -3544,9 +3545,7 @@ object Similarity {
           sqrt(col("ssq").cast("double")).as("nrm"))
         .select(expr("transform(u, x -> x / nrm)").as("varr"),
           (col("nrm") / lit(1000000.0)).as("lam"))
-        .localCheckpoint(true)
-    }
-    v
+    }((next, _) => next.count())
   }
 
   /** Embedding-cosine floor below which a lexical near-dup pair is

@@ -895,18 +895,20 @@ object TextOps {
          |END""".stripMargin)
 
   /** Learned merge table + final per-word symbol table, memoized per
-    * (session, corpus): the driver loop reads ONE tiny argmax row per
-    * round (the loop-kernel discipline, graft.ops.Loop) while the symbol state
-    * lives in the vocabulary-sized word table — the corpus itself is
-    * scanned exactly once (inside the memoized wordFreq). */
+    * (session, corpus). The symbol state lives in the vocabulary-sized
+    * word table and the corpus itself is scanned exactly once (inside the
+    * memoized wordFreq). Every merge but the last is a graft.ops.Loop
+    * round whose ONE action, a tiny argmax, takes the next merge; the last
+    * merge is a lazy pass over the live generation. */
   private def bpeTrained(s: SparkSession, d: String)
       : (Seq[(String, String, Long)], DataFrame) =
     graft.Memo.value("bpe_trained", s, d) {
-      var cur = wordFreq(s, d).select(col("w"), col("wn"), expr(
+      val words = wordFreq(s, d).select(col("w"), col("wn"), expr(
         "concat_ws(',', transform(sequence(1, length(w)), i -> substring(w, i, 1)))")
         .as("syms"))
-      val merges = (1 to BpeRounds).map { _ =>
-        val top = cur.withColumn("sl", split(col("syms"), ","))
+      // the most frequent adjacent symbol pair (a, b, n)
+      def top(cur: DataFrame): (String, String, Long) = {
+        val r = cur.withColumn("sl", split(col("syms"), ","))
           .filter(size(col("sl")) >= 2)
           .select(col("wn"), explode(expr(
             """transform(sequence(1, size(sl) - 1), i -> named_struct(
@@ -916,14 +918,17 @@ object TextOps {
           .agg(sum(col("wn")).as("n"))
           .orderBy(col("n").desc, col("a"), col("b")).limit(1)
           .head()
-        val (a, b, n) = (top.getAs[String]("a"), top.getAs[String]("b"),
-          top.getAs[Long]("n"))
-        cur = cur.withColumn("sl", split(col("syms"), ","))
-          .withColumn("syms", bpeFoldOnce(a, b)).drop("sl")
-          .localCheckpoint(false)
-        (a, b, n)
+        (r.getAs[String]("a"), r.getAs[String]("b"), r.getAs[Long]("n"))
       }
-      (merges, cur)
+      def merge(cur: DataFrame, m: (String, String, Long)): DataFrame =
+        cur.withColumn("sl", split(col("syms"), ","))
+          .withColumn("syms", bpeFoldOnce(m._1, m._2)).drop("sl")
+      val first = top(words)
+      val loop = new Loop[(String, String, Long)]
+      val live = loop.run(words, BpeRounds - 1)(_ => true)(
+        merge(_, (first +: loop.stats).last))((next, _) => top(next))
+      val merges = first +: loop.stats
+      (merges, merge(live, merges.last))
     }
 
   /** E3 — the learned BPE MERGE TABLE: BpeRounds iterations of the full

@@ -524,6 +524,10 @@ class AnalysisSpec extends AnyFunSuite {
     // the converged vertex set is the declared query's vertex set
     val declared = Analysis.e9Hits(spark, TestSpark.sf001).collect()
     assert(rows.map(_.getLong(0)).toSet == declared.map(_.getLong(0)).toSet)
+    // an empty pair table stops after one round: max |Δhub| over no vertex is 0
+    import spark.implicits._
+    val (edf, eiters) = Analysis.hitsConverged(Seq.empty[(Long, Long)].toDF("da", "db"), 1e-6)
+    assert(eiters == 1 && edf.collect().isEmpty, s"empty pair table: $eiters rounds")
   }
 
   test("bfsConverged: reaches the seeds' full component and the fixed-round layers are its prefix") {
@@ -564,6 +568,51 @@ class AnalysisSpec extends AnyFunSuite {
       v -> Seq(math.abs(v - 1), math.abs(v - 2), math.abs(v - 3)).min.toInt)
       .toMap
     assert(cd == expect)
+    // a 6-vertex chain seeded at its vertex 1: the rounds are the
+    // expansions that added a vertex, also when maxIters stops the loop
+    val six = (0L until 5L).map(i => (i, i + 1)).toDF("da", "db")
+    for ((maxIters, want) <- Seq(1 -> 1, 2 -> 2, 50 -> 4)) {
+      val (sdf, srounds) = Analysis.bfsConverged(six, 1, maxIters)
+      val deepest = sdf.collect().map(_.getInt(1)).max
+      assert(srounds == want && deepest == want,
+        s"maxIters $maxIters: $srounds rounds, deepest layer $deepest, want $want")
+    }
+  }
+
+  /** Spark jobs of a converged loop's call plus a collect of its result,
+    * its rounds, and how many RDDs made during the call stay cached (RDD
+    * ids only grow, so the count ignores earlier RDDs the context cleaner
+    * may drop meanwhile). */
+  private def loopCost(f: => (DataFrame, Int)): (Int, Int, Int) = {
+    val sc = spark.sparkContext
+    val firstId = sc.emptyRDD[Int].id
+    var rounds = -1
+    val jobs = TestSpark.sparkJobsIn { val (df, n) = f; df.collect(); rounds = n }
+    (jobs, rounds, sc.getRDDStorageInfo.count(_.id > firstId))
+  }
+
+  test("the converged loops stay within their Spark jobs a round and leave only the live generation cached") {
+    import spark.implicits._
+    val pairs = Dedup.minhashPairTable(spark, TestSpark.sf001)
+    val chain = (0L until 5L).map(i => (i, i + 1)).toDF("da", "db")
+    // (name, loop rounds beyond the returned count, Spark jobs a round,
+    // jobs outside the rounds, the call). Measured on the fixture: k-core
+    // 14 jobs for 2 rounds (one peel and the round that found the
+    // fixpoint), HITS 299 for 15, BFS 9 for 1 and 13 for 3 on the chain;
+    // the hand-written loops these replaced ran 19, 362, 8 and 16 and left
+    // 3, 3, 2 and 6 RDDs cached.
+    val loops = Seq[(String, Int, Int, Int, () => (DataFrame, Int))](
+      ("kcoreConverged", 1, 8, 2, () => Analysis.kcoreConverged(spark, TestSpark.sf001)),
+      ("hitsConverged", 0, 20, 4, () => Analysis.hitsConverged(pairs, 1e-6)),
+      ("bfsConverged", 1, 4, 5, () => Analysis.bfsConverged(pairs)),
+      ("bfsConverged on a 5-edge chain", 1, 4, 5, () => Analysis.bfsConverged(chain)))
+    for ((name, extra, perRound, fixed, f) <- loops) withClue(s"$name: ") {
+      f()._1.collect() // the first call pays the session's memo builds
+      val (jobs, rounds, left) = loopCost(f())
+      info(s"$name: $jobs Spark jobs for ${rounds + extra} rounds, $left more cached RDDs")
+      assert(jobs <= perRound * (rounds + extra) + fixed, s"$jobs Spark jobs")
+      assert(left <= 1, s"$left more cached RDDs, the live generation is one")
+    }
   }
 
   test("e8_freshness: profile equals a driver-side age recompute") {
